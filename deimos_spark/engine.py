@@ -234,7 +234,8 @@ class Engine:
         **kw,
     ):
         """Keyed sink table for a topic. `table_format`:
-        - "parquet" (default): KeyedParquetTable — plain files + txlog.
+        - "parquet" (default): KeyedParquetTable — plain parquet files,
+          replaced by a directory swap on each merge (no log).
         - "delta": DeltaKeyedTable — real Delta layout (any engine can
           read it); kw passes through (use_dvs, enable_cdf, ...); merge
           supports txn=(app, version) for exactly-once consumers.

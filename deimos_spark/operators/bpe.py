@@ -236,7 +236,13 @@ def bpe_token_stats(
     """Per-group tokenizer stats: words, total trained-BPE pieces,
     avg pieces/word. tokenize-once-per-distinct-word + join-back over
     the (group, word) counts relation (see bpe_token_stats_from_counts
-    for the shuffle-size and exactness argument)."""
+    for the shuffle-size and exactness argument). group_col is a column
+    NAME: the join back and the final groupBy refer to it by name."""
+    if not isinstance(group_col, str):
+        raise TypeError(
+            f"group_col must be a column name (str), got "
+            f"{type(group_col).__name__}"
+        )
     return bpe_token_stats_from_counts(
         grouped_word_counts(df, text_col, group_col), merges, group_col
     )

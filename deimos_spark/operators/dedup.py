@@ -581,7 +581,7 @@ def duplicate_ngram_spans(
     text_col: str = "text",
     id_col: str = "doc_id",
     min_docs: int = 2,
-    single_pass: bool = True,
+    single_pass: bool = False,
 ) -> DataFrame:
     """Per-document verbatim-duplication signal: how many of a doc's
     distinct word n-grams also appear in ≥ min_docs-1 OTHER documents.
@@ -596,11 +596,12 @@ def duplicate_ngram_spans(
     dup_ngrams/n_ngrams ratios. Integer outputs → exact DuckDB oracle
     comparison. Both shapes below return bit-identical rows
     (oracle-checked at sf0.01 and sf0.1; identity pinned by
-    tests/test_neardup_gates.py).
+    tests/test_plan_shapes.py and, in the big regime, by
+    tests/test_full_registry_oracle.py).
 
     single_pass=True (r15; the SMALL-INPUT shape — callers gate it on
-    input bytes, see queries.q_duplicate_ngrams): ONE pass over the
-    exploded-shingle relation. Since the relation is distinct (_id,_s),
+    session.small_input, see queries.q_duplicate_ngrams): ONE pass over
+    the exploded-shingle relation. Since the relation is distinct (_id,_s),
     countDistinct(_id) per shingle IS the row count per shingle, so a
     count() window over the _s-partitioned layout (established once,
     shared by the distinct — exploded_shingles(partition_by_shingle=
@@ -613,8 +614,8 @@ def duplicate_ngram_spans(
     fraction of documents lands its entire row set in ONE task (AQE
     skew handling covers joins only, not windows).
 
-    single_pass=False (r16; the AT-SCALE shape): partial-agg document
-    frequency + a join back of the frequent-shingle set. The distinct
+    single_pass=False (r16; the AT-SCALE shape and the default):
+    partial-agg document frequency + a join back of the frequent-shingle set. The distinct
     clusters on hash(_id,_s) — well spread even for hot shingles — and
     the groupBy("_s").count() reduces map-side first, so a hot shingle
     crosses the wire as one (shingle, partial) row PER MAP PARTITION,

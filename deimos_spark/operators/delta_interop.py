@@ -2,10 +2,9 @@
 faithful writes over the PUBLIC Delta transaction-log protocol
 (delta.io PROTOCOL.md; no Delta code or jars used).
 
-Why: `TransactionLogTable` (txlog.py) is protocol-SHAPED but bespoke; a
-user migrating from the reference stack often lands data in real Delta
-tables. This adapter lets every operator in this repo read such a table
-with nothing but `spark.read.parquet` underneath:
+Why: a user migrating from the reference stack often lands data in
+real Delta tables. This adapter lets every operator in this repo read
+such a table with nothing but `spark.read.parquet` underneath:
 
 - `_delta_log/{version:020d}.json` — one JSON action per line:
   `add` (file becomes live), `remove` (file dead), `metaData` (schema =
@@ -13,7 +12,7 @@ with nothing but `spark.read.parquet` underneath:
   `commitInfo` (ignored).
 - `{version:020d}.checkpoint.parquet` + `_last_checkpoint` — the full
   action state materialized; we load it WITH Spark's parquet reader and
-  replay only later JSON commits (same O(interval) bound txlog.py uses).
+  replay only later JSON commits (an O(interval) replay bound).
   Standard multi-part checkpoints (`{v}.checkpoint.{i}.{n}.parquet`,
   `_last_checkpoint.parts`) are read too. The WRITE side emits
   single-file checkpoints every `checkpoint_interval` commits so
@@ -500,7 +499,7 @@ class DeltaTableReader:
         self.log_dir = os.path.join(path, "_delta_log")
         if not os.path.isdir(self.log_dir):
             raise FileNotFoundError(f"{path} has no _delta_log — not a Delta table")
-        # diagnostics (txlog.py pattern): JSON commits parsed by the most
+        # diagnostics: JSON commits parsed by the most
         # recent snapshot(), and whether it had to LIST the log dir (the
         # expensive primitive on object stores) vs following
         # _last_checkpoint and probing exact commit names.
@@ -1990,9 +1989,8 @@ class DeltaTableWriter:
     """Append / overwrite / MERGE a Delta table by writing protocol-
     faithful JSON commits — the write-side twin of DeltaTableReader.
 
-    Versions are claimed with the same temp-file + hard-link
-    put-if-absent txlog.py uses (maps to a conditional put on object
-    stores), so concurrent writers conflict cleanly instead of
+    Versions are claimed with a temp-file + hard-link put-if-absent
+    (maps to a conditional put on object stores), so concurrent writers conflict cleanly instead of
     clobbering; losers re-derive against the winner's snapshot and
     retry (optimistic concurrency, the Delta commit protocol's shape).
 
@@ -2272,7 +2270,7 @@ class DeltaTableWriter:
     def _maybe_checkpoint(self, version: int) -> None:
         """Every `checkpoint_interval` commits, materialize the live
         action state as `{v:020d}.checkpoint.parquet` + `_last_checkpoint`
-        (the same replay-cost bound txlog.py enforces — without this, a
+        (the reader's replay-cost bound — without this, a
         streaming sink producing 10k micro-batch commits makes every
         reader replay 10k JSON files). Best-effort: a failed checkpoint
         leaves the log correct and the next interval retries."""
@@ -3976,7 +3974,7 @@ class DeltaKeyedTable:
             ).get("delta.enableChangeDataFeed") == "true"
             pcols = list(meta.partition_columns)
 
-            # partition-pruned probe (the txlog MERGE gating, DV flavor):
+            # partition-pruned probe (key-subset-gated MERGE pruning):
             # when a partition column is part of the key, only files whose
             # partitionValues appear in the batch can hold hits. The
             # batch's distinct partition values are a bounded control read

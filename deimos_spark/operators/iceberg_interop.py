@@ -2695,7 +2695,7 @@ class IcebergTableWriter:
     `iceberg_transforms.WRITABLE_SOURCES` (refused loudly).
 
     Commit protocol: the new metadata file is claimed with the same
-    temp + hard-link put-if-absent txlog/Delta use (HadoopTables'
+    temp + hard-link put-if-absent the Delta writer uses (HadoopTables'
     filesystem-atomic rename shape); losers raise IcebergCommitConflict
     and the caller's state is re-derived on retry. Scope is honest:
     flat primitive schemas; append + overwrite here, keyed MERGE via

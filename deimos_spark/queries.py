@@ -27,10 +27,9 @@ from deimos_spark.functions.text import (
 )
 from deimos_spark.operators import asof, dedup, funnel, relational, simsearch, tpch
 from deimos_spark.session import (
-    AQE_MIN_INPUT_BYTES,
     apply_runtime_confs,
     autotune_for_dir,
-    dir_input_bytes,
+    small_input,
     sort_small,
     spread_small,
 )
@@ -63,31 +62,12 @@ def clear_plan_cache() -> None:
     _plan_cache.clear()
 
 
-# Queries whose plans keep AQE on even at tiny input scale: an EXPLODED
-# token/n-gram stream (cardinality unknowable at plan time) joined
-# against a side whose runtime size enables AQE's SMJ→broadcast
-# conversion. EMPTY since r15: every such join in the registry now
-# carries an explicit F.broadcast hint (the side is known-small by
-# construction — benchmark shingles, ≤B-row bucket models), so the plan
-# is BroadcastHashJoin with or without AQE (verified: 0 SortMergeJoin
-# across t14/t21/t23 with AQE off) and the forced stage barriers only
-# cost: measured at sf0.1, t14 1.10→0.63s, t15 1.21→0.57s,
-# t23 1.38→1.07s, t21 1.02→0.92s with AQE off. At >= 1 GiB inputs
-# autotune turns AQE on for EVERY query regardless (the 100 TB
-# posture) — this set only ever governed the tiny-input regime. The
-# mechanism stays for any future query whose join side is genuinely
-# runtime-sized (no safe hint possible).
-RUNTIME_ADAPTIVE: set[str] = set()
-
-
 def _prepared(name: str, fn: Callable[[SparkSession, str], DataFrame]):
     def build(spark: SparkSession, sf_dir: str) -> DataFrame:
         # scale-aware AQE: confs are read at execution time, so this
-        # governs cached plans too (see session.autotune_for_dir)
-        autotune_for_dir(
-            spark, sf_dir, force_adaptive=name in RUNTIME_ADAPTIVE
-        )
-        key = (name, spark.sparkContext.applicationId, sf_dir)
+        # governs cached plans too (see session.autotune_for_dir); it
+        # returns the applicationId the cache key needs
+        key = (name, autotune_for_dir(spark, sf_dir), sf_dir)
         df = _plan_cache.get(key)
         if df is None:
             df = fn(spark, sf_dir)
@@ -764,17 +744,16 @@ def q_duplicate_ngrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     the public dedup-training-data line of work, reshaped as shingle
     document-frequency: exploded shingles → DF aggregate → join back;
     hash shuffles only, never all-pairs)."""
-    # scale gate (r16, same bytes signal as spread_small/autotune): the
-    # single-pass window shape wins at tiny input but concentrates a hot
-    # shingle's entire row set in one WindowExec task; at >= 1 GiB the
-    # partial-agg + skew-join-coverable shape takes over. Rows identical
-    # either way (see dedup.duplicate_ngram_spans).
-    try:
-        small = dir_input_bytes(sf_dir) < AQE_MIN_INPUT_BYTES
-    except Exception:
-        small = False  # unknown input: take the scale-safe shape
+    # scale gate (r16): the single-pass window shape wins at tiny input
+    # but concentrates a hot shingle's entire row set in one WindowExec
+    # task; in the big regime the partial-agg + skew-join-coverable
+    # shape takes over. Rows identical either way (see
+    # dedup.duplicate_ngram_spans).
     return dedup.duplicate_ngram_spans(
-        _docs_spread(spark, sf_dir), n=5, min_docs=2, single_pass=small
+        _docs_spread(spark, sf_dir),
+        n=5,
+        min_docs=2,
+        single_pass=small_input(sf_dir),
     ).orderBy("doc_id")
 
 

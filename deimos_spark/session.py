@@ -9,6 +9,7 @@ same config block applies — only master/memory change.
 from __future__ import annotations
 
 import os
+from dataclasses import dataclass
 
 from pyspark.sql import SparkSession
 
@@ -91,7 +92,7 @@ def apply_runtime_confs(spark: SparkSession) -> SparkSession:
     return spark
 
 
-# Scale-aware adaptivity. AQE's value is runtime re-planning: partition
+# Scale regime. AQE's value is runtime re-planning: partition
 # coalescing, skew-join splitting, join-strategy switches — decisions that
 # only EXIST when shuffles carry enough data for stats to change the plan.
 # For a sub-second query over a tiny input there is nothing to re-decide,
@@ -100,15 +101,28 @@ def apply_runtime_confs(spark: SparkSession) -> SparkSession:
 # b11 275→180ms with AQE off at sf0.1). So: AQE ON (the 100 TB posture)
 # unless the input directory is provably below this threshold. The toggle
 # keys on DATA SIZE, not on "benchmark mode" — a 100 TB table always
-# re-enables it.
+# re-enables it. small_input is its only reader.
 AQE_MIN_INPUT_BYTES = int(
     os.environ.get("SPARK_GRAFT_AQE_MIN_BYTES", str(1 << 30))
 )
 
 _dir_bytes_cache: dict[str, int] = {}
-_last_autotune: dict[str, tuple] = {}
-_base_shuffle_partitions: dict[str, int] = {}
-_base_max_partition_bytes: dict[str, str] = {}
+
+
+@dataclass
+class _Tuning:
+    """autotune_for_dir's per-session record: the session's own
+    shuffle-partition and split-size confs as first seen (what the big
+    regime runs with) and the (adaptive, partitions, split) triple last
+    applied."""
+
+    base_partitions: int
+    base_split: str
+    applied: tuple | None = None
+
+
+# keyed on applicationId, like _runtime_confs_applied
+_tuning: dict[str, _Tuning] = {}
 
 
 def dir_input_bytes(sf_dir: str) -> int:
@@ -127,78 +141,77 @@ def dir_input_bytes(sf_dir: str) -> int:
     return got
 
 
-def autotune_for_dir(
-    spark: SparkSession, sf_dir: str, force_adaptive: bool = False
-) -> None:
-    """Set AQE and shuffle-partition count by input scale.
-
-    - AQE on when the input is big (>= AQE_MIN_INPUT_BYTES) OR the caller
-      declares runtime-uncertain cardinality (`force_adaptive` — plans
-      where an exploded stream joins a side whose runtime size enables
-      SMJ→broadcast conversion; see queries.RUNTIME_ADAPTIVE). Off
-      otherwise: for a sub-second query over a tiny input AQE has nothing
-      to re-decide and its stage barriers cost ~80-130ms.
-    - shuffle partitions sized like AQE's own coalescing would size them
-      (~16 MiB of input per partition, floored at 8 for parallelism,
-      capped at the session's configured base) — a static right-size for
-      the small-input regime where AQE is off; at scale the base value +
-      AQE coalescing govern, exactly as before.
-    - input-split size (maxPartitionBytes) shrunk for tiny inputs so the
-      SCAN stage still spreads across the executor threads — a 17 MB
-      table at the 128 MB default is ONE task doing all the CPU-heavy
-      per-row work (tokenize/regex/explode); at scale 128 MB already
-      yields thousands of splits and is restored untouched.
-
-    Idempotent and cheap: the decision is cached per session so repeated
-    builder calls don't pay py4j conf round-trips. INVARIANT: the cache
-    assumes these three confs are mutated only through this function —
-    code that sets them directly on a session autotune manages (tests,
-    notebooks) must either clear this session's _last_autotune entry or
-    restore the confs to the cached tuple, or later builders will skip
-    the re-apply and silently run under the leaked values."""
+def small_input(sf_dir: str) -> bool:
+    """The scale regime, decided here and nowhere else: True when the
+    input under sf_dir is provably below AQE_MIN_INPUT_BYTES. Every
+    small-input shape (autotune_for_dir's AQE-off sizing, spread_small,
+    t15's single-pass window) keys on it, so patching the threshold
+    switches them together. An unreadable input counts as big: the
+    scale-safe shapes are correct at any size."""
     try:
-        nbytes = dir_input_bytes(sf_dir)
+        return dir_input_bytes(sf_dir) < AQE_MIN_INPUT_BYTES
     except Exception:
-        nbytes = None
+        return False
+
+
+def autotune_for_dir(spark: SparkSession, sf_dir: str) -> str:
+    """Set AQE, shuffle-partition count and input-split size by regime,
+    and return the session's applicationId (so a caller that keys its
+    own cache on the session pays no second py4j read).
+
+    - Big input (see small_input): AQE on, with the session's own
+      shuffle-partition and split-size confs restored untouched.
+    - Small input: AQE off — for a sub-second query over a tiny input
+      AQE has nothing to re-decide and its stage barriers cost
+      ~80-130ms. Shuffle partitions sized like AQE's own coalescing
+      would size them (~16 MiB of input per partition, floored at 8,
+      capped at the session's base). Input splits shrunk so the SCAN
+      stage still spreads across the executor threads — a 17 MB table
+      at the 128 MB default is ONE task doing all the CPU-heavy per-row
+      work (tokenize/regex/explode).
+
+    Idempotent and cheap: the applied triple is recorded per session so
+    repeated builder calls don't pay py4j conf round-trips. INVARIANT:
+    the record assumes these three confs are mutated only through this
+    function — code that sets them directly on a session autotune
+    manages (tests, notebooks) must restore the confs together with the
+    session's _tuning entry, or later builders will skip the re-apply
+    and silently run under the leaked values."""
     key = spark.sparkContext.applicationId
-    base = _base_shuffle_partitions.get(key)
-    if base is None:
+    rec = _tuning.get(key)
+    if rec is None:
         try:
             base = int(spark.conf.get("spark.sql.shuffle.partitions"))
         except Exception:
             base = 32
-        _base_shuffle_partitions[key] = base
-    base_mpb = _base_max_partition_bytes.get(key)
-    if base_mpb is None:
         try:
             base_mpb = spark.conf.get("spark.sql.files.maxPartitionBytes")
         except Exception:
             base_mpb = "134217728b"
-        _base_max_partition_bytes[key] = base_mpb
-    if nbytes is None:
-        adaptive, sp, mpb = True, base, base_mpb  # unknown: scale posture
+        rec = _tuning[key] = _Tuning(base, base_mpb)
+    if small_input(sf_dir):
+        nbytes = dir_input_bytes(sf_dir)
+        try:
+            cores = spark.sparkContext.defaultParallelism
+        except Exception:
+            cores = 32
+        want = (
+            False,
+            max(8, min(rec.base_partitions, -(-nbytes // (16 << 20)))),
+            str(max(2 << 20, nbytes // (2 * max(cores, 1)))) + "b",
+        )
     else:
-        big = nbytes >= AQE_MIN_INPUT_BYTES
-        adaptive = big or force_adaptive
-        sp = base if big else max(8, min(base, -(-nbytes // (16 << 20))))
-        if big:
-            mpb = base_mpb
-        else:
-            try:
-                cores = spark.sparkContext.defaultParallelism
-            except Exception:
-                cores = 32
-            mpb = str(max(2 << 20, nbytes // (2 * max(cores, 1)))) + "b"
-    want = (adaptive, sp, mpb)
-    if _last_autotune.get(key) == want:
-        return
-    try:
-        spark.conf.set("spark.sql.adaptive.enabled", str(adaptive).lower())
-        spark.conf.set("spark.sql.shuffle.partitions", str(sp))
-        spark.conf.set("spark.sql.files.maxPartitionBytes", mpb)
-        _last_autotune[key] = want
-    except Exception:
-        pass
+        want = (True, rec.base_partitions, rec.base_split)
+    if rec.applied != want:
+        adaptive, sp, mpb = want
+        try:
+            spark.conf.set("spark.sql.adaptive.enabled", str(adaptive).lower())
+            spark.conf.set("spark.sql.shuffle.partitions", str(sp))
+            spark.conf.set("spark.sql.files.maxPartitionBytes", mpb)
+            rec.applied = want
+        except Exception:
+            pass
+    return key
 
 
 def spread_small(df, sf_dir: str, by: str | None = None):
@@ -209,10 +222,10 @@ def spread_small(df, sf_dir: str, by: str | None = None):
     projection chained onto it (tokenize/regex/md5/explode) serializes on
     a single core while the rest idle. At scale this problem does not
     exist: a 100 TB table has ~800k input splits and the scan stage is
-    already wide. So the fix is gated on the SAME signal autotune uses:
-    below AQE_MIN_INPUT_BYTES a repartition (shuffle bytes bounded by
-    the tiny input itself) unlocks the cores; at or above it this is
-    the identity — no shuffle is ever added to a big input.
+    already wide. So the fix is gated on small_input, like autotune: in
+    the small regime a repartition (shuffle bytes bounded by the tiny
+    input itself) unlocks the cores; in the big regime this is the
+    identity — no shuffle is ever added to a big input.
 
     `by` (r15): spread by HASH of a key column instead of round-robin.
     When the downstream aggregates group by that key (or a superset —
@@ -223,10 +236,7 @@ def spread_small(df, sf_dir: str, by: str | None = None):
     must be ≥ ~20× the thread count for an even spread (doc ids are);
     identical gating, identity at scale.
     """
-    try:
-        if dir_input_bytes(sf_dir) >= AQE_MIN_INPUT_BYTES:
-            return df
-    except Exception:
+    if not small_input(sf_dir):
         return df
     if by is not None:
         return df.repartition(by)

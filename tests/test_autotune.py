@@ -3,43 +3,19 @@ perf lever — AQE, shuffle-partition count, and input-split size keyed on
 input scale. A silent regression here re-adds ~100ms/query of stage
 barriers at small scale or (worse) turns AQE off at 100 TB."""
 
-import os
-
 import pytest
 
 from deimos_spark import session as S
 
 
 @pytest.fixture
-def fresh_state(spark):
-    """Isolate the per-session autotune cache and restore confs."""
-    key = spark.sparkContext.applicationId
-    saved_caches = (
-        dict(S._last_autotune),
-        dict(S._base_shuffle_partitions),
-        dict(S._base_max_partition_bytes),
-        dict(S._dir_bytes_cache),
-    )
-    saved_confs = {
-        k: spark.conf.get(k)
-        for k in (
-            "spark.sql.adaptive.enabled",
-            "spark.sql.shuffle.partitions",
-            "spark.sql.files.maxPartitionBytes",
-        )
-    }
-    S._last_autotune.pop(key, None)
-    S._base_shuffle_partitions.pop(key, None)
-    S._base_max_partition_bytes.pop(key, None)
-    yield key
-    (
-        S._last_autotune,
-        S._base_shuffle_partitions,
-        S._base_max_partition_bytes,
-        S._dir_bytes_cache,
-    ) = saved_caches
-    for k, v in saved_confs.items():
-        spark.conf.set(k, v)
+def fresh_state(spark, scale_regime, monkeypatch):
+    """Drop this session's autotune record, so bases are re-read from
+    the confs a test sets; restore record, confs and size cache after."""
+    monkeypatch.setattr(S, "_dir_bytes_cache", dict(S._dir_bytes_cache))
+    with scale_regime() as key:
+        S._tuning.pop(key, None)
+        yield key
 
 
 def _mkdir_with_bytes(tmp_path, name, nbytes):
@@ -53,8 +29,6 @@ def test_small_dir_turns_aqe_off_and_rightsizes(spark, tmp_path, fresh_state):
     small = _mkdir_with_bytes(tmp_path, "small", 20 << 20)  # 20 MiB
     spark.conf.set("spark.sql.shuffle.partitions", "32")
     spark.conf.set("spark.sql.files.maxPartitionBytes", "134217728b")
-    S._base_shuffle_partitions.pop(fresh_state, None)
-    S._base_max_partition_bytes.pop(fresh_state, None)
     S.autotune_for_dir(spark, small)
     assert spark.conf.get("spark.sql.adaptive.enabled") == "false"
     # ~16 MiB per shuffle partition, floored at 8
@@ -70,35 +44,12 @@ def test_big_dir_keeps_scale_posture(spark, tmp_path, fresh_state, monkeypatch):
     S._dir_bytes_cache[big] = 2 << 30
     spark.conf.set("spark.sql.shuffle.partitions", "32")
     spark.conf.set("spark.sql.files.maxPartitionBytes", "134217728b")
-    S._base_shuffle_partitions.pop(fresh_state, None)
-    S._base_max_partition_bytes.pop(fresh_state, None)
     S.autotune_for_dir(spark, big)
     assert spark.conf.get("spark.sql.adaptive.enabled") == "true"
     assert spark.conf.get("spark.sql.shuffle.partitions") == "32"
     assert spark.conf.get(
         "spark.sql.files.maxPartitionBytes"
     ) == "134217728b"
-
-
-def test_force_adaptive_overrides_small(spark, tmp_path, fresh_state):
-    small = _mkdir_with_bytes(tmp_path, "small2", 5 << 20)
-    S.autotune_for_dir(spark, small, force_adaptive=True)
-    assert spark.conf.get("spark.sql.adaptive.enabled") == "true"
-    # shuffle partitions still right-sized for the tiny input
-    assert spark.conf.get("spark.sql.shuffle.partitions") == "8"
-
-
-def test_runtime_adaptive_set_matches_explode_join_queries():
-    """The force-AQE hint is semantic (exploded stream ⋈ runtime-
-    broadcastable side); pin the membership so additions are deliberate."""
-    from deimos_spark.queries import RUNTIME_ADAPTIVE
-
-    # EMPTY since r15: every explode→join query hints its known-small
-    # side with F.broadcast, so the plan is BHJ with or without AQE and
-    # forcing AQE at tiny scale only paid stage barriers (see
-    # queries.py). Pin emptiness so additions stay deliberate — a new
-    # member must have a join side that genuinely can't be hinted.
-    assert RUNTIME_ADAPTIVE == set()
 
 
 def test_registry_builders_apply_autotune(spark, tmp_path, fresh_state):
@@ -108,10 +59,3 @@ def test_registry_builders_apply_autotune(spark, tmp_path, fresh_state):
     sf = "/root/testdata/sf0.001"
     all_queries()["b01_scan_count"].builder(spark, sf)
     assert spark.conf.get("spark.sql.adaptive.enabled") == "false"
-    # the force_adaptive mechanism still works for a future query whose
-    # join side genuinely can't be broadcast-hinted (RUNTIME_ADAPTIVE
-    # is empty since r15, so exercise the plumbing directly)
-    from deimos_spark.session import autotune_for_dir
-
-    autotune_for_dir(spark, sf, force_adaptive=True)
-    assert spark.conf.get("spark.sql.adaptive.enabled") == "true"

@@ -144,6 +144,14 @@ def test_spark_stats_match_local(spark):
     assert got == exp
 
 
+def test_stats_reject_column_group_col(spark):
+    from pyspark.sql import functions as F
+
+    df = spark.createDataFrame([("en", "low")], "lang string, text string")
+    with pytest.raises(TypeError, match="group_col must be a column name"):
+        bpe.bpe_token_stats(df, [], "text", F.col("lang"))
+
+
 def test_query_deterministic(spark):
     from deimos_spark.queries import all_queries, clear_plan_cache
 

@@ -734,8 +734,7 @@ def test_vacuum_retention_protects_young_files(spark, tmp_path):
     """Default-retention vacuum must keep young unreferenced files: a
     writer moves data/DV files into the table BEFORE committing, so
     deleting them mid-flight would let its commit land pointing at
-    missing files (the Delta retention-window rationale; mirrors
-    txlog.vacuum's grace window)."""
+    missing files (the Delta retention-window rationale)."""
     from deimos_spark.operators.delta_interop import DeltaTableWriter
 
     t = str(tmp_path / "t")

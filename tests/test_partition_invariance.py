@@ -96,70 +96,21 @@ def _registry():
     return _REGISTRY
 
 
-def _run_under(spark, fn, base_sp, mpb, aqe_min):
-    from deimos_spark.queries import clear_plan_cache
-
-    key = spark.sparkContext.applicationId
-    saved = (
-        S._base_shuffle_partitions.get(key),
-        S._base_max_partition_bytes.get(key),
-        S.AQE_MIN_INPUT_BYTES,
-        S._last_autotune.get(key),
-    )
-    # the prepared-plan cache pins a DataFrame (and its physical plan)
-    # per query: without clearing it, layouts 2..n would re-execute
-    # layout 1's plan and the sweep would compare a plan with itself
-    clear_plan_cache()
-    try:
-        S._base_shuffle_partitions[key] = base_sp
-        S._base_max_partition_bytes[key] = mpb
-        S.AQE_MIN_INPUT_BYTES = aqe_min
-        S._last_autotune.pop(key, None)
+def _run_under(scale_regime, spark, fn, base_sp, mpb, aqe_min):
+    # scale_regime empties the prepared-plan cache: without that, layouts
+    # 2..n would re-execute layout 1's plan and the sweep would compare a
+    # plan with itself
+    with scale_regime(aqe_min) as key:
+        S._tuning[key] = S._Tuning(base_sp, mpb)
         df = fn(spark, SF_DIR)
         return _norm_rows(df.columns, df.collect())
-    finally:
-        # restore-or-pop: a leaked entry would silently reconfigure
-        # every later test sharing the session-scoped fixture
-        for d, v in (
-            (S._base_shuffle_partitions, saved[0]),
-            (S._base_max_partition_bytes, saved[1]),
-        ):
-            if v is None:
-                d.pop(key, None)
-            else:
-                d[key] = v
-        S.AQE_MIN_INPUT_BYTES = saved[2]
-        # Restore the CONFS in lockstep with the cache: autotune's
-        # idempotency trusts that nothing mutates its three confs
-        # behind its back, so putting back the cached tuple while the
-        # session still carries this run's values (e.g. adaptive=true
-        # from a lowered AQE_MIN) would make every later builder SKIP
-        # the re-apply and silently run the rest of the session-scoped
-        # suite under the leaked conf. (Masked before r15 by
-        # RUNTIME_ADAPTIVE members toggling the tuple; surfaced when
-        # that set emptied.)
-        if saved[3] is None:
-            S._last_autotune.pop(key, None)
-        else:
-            S._last_autotune[key] = saved[3]
-            adaptive, sp, mpb_saved = saved[3]
-            for k, v in (
-                ("spark.sql.adaptive.enabled", str(adaptive).lower()),
-                ("spark.sql.shuffle.partitions", str(sp)),
-                ("spark.sql.files.maxPartitionBytes", mpb_saved),
-            ):
-                try:
-                    spark.conf.set(k, v)
-                except Exception:
-                    pass
-        clear_plan_cache()
 
 
 @pytest.mark.parametrize("qname", QUERIES)
-def test_layout_invariant(spark, qname):
+def test_layout_invariant(spark, scale_regime, qname):
     fn = _registry()[qname]
     results = {
-        name: _run_under(spark, fn, *knobs)
+        name: _run_under(scale_regime, spark, fn, *knobs)
         for name, knobs in LAYOUTS.items()
     }
     base = results.pop("small")

@@ -359,8 +359,8 @@ def test_t15_single_pass_no_join(spark):
     assert "Window" in plan, plan
 
 
-def test_t15_big_regime_shape_no_window_skew(spark, monkeypatch):
-    """t15's r16 scale gate: at >= AQE_MIN_INPUT_BYTES the builder must
+def test_t15_big_regime_shape_no_window_skew(spark, scale_regime):
+    """t15's r16 scale gate: in the big regime the builder must
     switch from the count()-over-Window.partitionBy(_s) single pass
     (which lands a hot shingle's ENTIRE row set in one WindowExec task —
     no partial aggregation, and AQE skew handling covers joins only) to
@@ -368,7 +368,6 @@ def test_t15_big_regime_shape_no_window_skew(spark, monkeypatch):
     shingle crosses the wire as one (shingle, partial) row per map
     partition and the join is AQE-skew-splittable. Pinned here on a
     deliberately skewed corpus: one boilerplate 5-gram in 50% of docs."""
-    import deimos_spark.queries as q
     from deimos_spark.operators.dedup import duplicate_ngram_spans
 
     # skewed corpus: half the docs share one boilerplate 5-gram
@@ -385,17 +384,14 @@ def test_t15_big_regime_shape_no_window_skew(spark, monkeypatch):
     assert "Window" not in plan, plan
     assert "partial_count" in plan, plan  # map-side reduction of the hot key
 
-    # the BUILDER gate: below the bytes threshold the declared query
-    # plans the window shape (asserted above); force the threshold to 0
-    # and it must plan the big-regime shape — with the exploded-shingle
-    # subtree materialized once, not twice (exchange reuse; kept
-    # possible by the null-safe flag join, see duplicate_ngram_spans)
-    q.clear_plan_cache()
-    monkeypatch.setattr(q, "AQE_MIN_INPUT_BYTES", 0)
-    try:
+    # the BUILDER gate: in the small regime the declared query plans
+    # the window shape (test_t15_single_pass_no_join); force the whole
+    # session into the big regime (AQE on, no spread) and it must plan
+    # the big-regime shape — with the exploded-shingle subtree
+    # materialized once, not twice (exchange reuse; kept possible by
+    # the null-safe flag join, see duplicate_ngram_spans)
+    with scale_regime(0):
         plan_big = _plan(all_queries()["t15_duplicate_ngrams"].builder(spark, SF))
-    finally:
-        q.clear_plan_cache()
     assert "Window" not in plan_big, plan_big
     assert "Join" in plan_big, plan_big
     assert (

@@ -1,7 +1,7 @@
 """session.spread_small — the scale-gated input redistribution for
-CPU-heavy work over tiny single-row-group files. The gate must be the
-SAME signal autotune uses (dir bytes vs AQE_MIN_INPUT_BYTES): identity
-at scale, round-robin repartition below it."""
+CPU-heavy work over tiny single-row-group files. The gate is
+session.small_input, the one autotune uses: identity at scale,
+round-robin repartition below it."""
 
 from deimos_spark import session as S
 

@@ -100,6 +100,7 @@ def main() -> None:
 
     from pyspark.sql import SparkSession
 
+    import deimos_spark.session as S
     from deimos_spark.queries import all_queries, clear_plan_cache
     from deimos_spark.session import (
         apply_runtime_confs,
@@ -143,13 +144,17 @@ def main() -> None:
         spark.conf.set("spark.sql.shuffle.partitions", str(shuffle_parts))
         spark.conf.set("spark.sql.files.maxPartitionBytes", max_split)
         adversarial = shuffle_parts <= 8
+        aqe_min = S.AQE_MIN_INPUT_BYTES
+        if adversarial:
+            # the whole small regime (AQE off, split sizing, spread,
+            # t15's window shape), not only AQE off
+            S.AQE_MIN_INPUT_BYTES = 1 << 60
         results: dict[str, dict] = {}
         ok_all = True
         for name in OPS:
             clear_plan_cache()
             if adversarial:
                 spark.conf.set("spark.sql.adaptive.enabled", "false")
-                os.environ["SPARK_GRAFT_AQE_MIN_BYTES"] = str(1 << 60)
             m0, d0, _ = _spill_totals(spark)
             t0 = time.perf_counter()
             try:
@@ -177,7 +182,7 @@ def main() -> None:
                 }
             print(f"  [{label}] {name}: {results[name]}", file=sys.stderr)
         if adversarial:
-            os.environ.pop("SPARK_GRAFT_AQE_MIN_BYTES", None)
+            S.AQE_MIN_INPUT_BYTES = aqe_min
             spark.conf.set("spark.sql.adaptive.enabled", "true")
         return {
             "shuffle_partitions": shuffle_parts,
