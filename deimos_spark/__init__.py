@@ -6,8 +6,9 @@ encoding + relational upsert pipelines; see SURVEY.md) as idiomatic Spark:
 - DataFrame/SQL relational surface (SURVEY §2B) — `deimos_spark.operators`
 - schema/codec layer (Avro .avsc → StructType, coercion) — `deimos_spark.schemas`,
   `deimos_spark.functions.coerce`
-- produce/consume pipelines (compaction, slicing, keyed merge) —
-  `deimos_spark.streaming`, `deimos_spark.operators.merge`
+- produce/consume pipelines (compaction, slicing, keyed merge into a
+  Delta or Iceberg table) — `deimos_spark.streaming`,
+  `deimos_spark.operators.delta_interop`
 - CDC poller + outbox relay — `deimos_spark.sources`
 - LLM-data operators (dedup, similarity search, text analysis) —
   `deimos_spark.operators.dedup`, `.simsearch`, `deimos_spark.functions.text`

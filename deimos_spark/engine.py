@@ -19,7 +19,6 @@ from typing import Any
 
 from pyspark.sql import SparkSession
 
-from deimos_spark.operators.merge import KeyedParquetTable
 from deimos_spark.schemas.avro import AvroSchema, parse_avsc
 from deimos_spark.session import apply_runtime_confs
 from deimos_spark.sources.outbox import OutboxTable
@@ -80,9 +79,8 @@ class Engine:
     def register_view(self, name: str, source: Any) -> None:
         """Expose `source` to sql() as view `name`. Accepts a DataFrame
         (fixed plan), a zero-arg callable returning one, or any object
-        with a .read() method (KeyedParquetTable, Delta/Iceberg
-        readers) — re-read at every sql() call so views track table
-        state."""
+        with a .read() method (Delta/Iceberg keyed tables and readers)
+        — re-read at every sql() call so views track table state."""
         from pyspark.sql import DataFrame as _DF
 
         if isinstance(source, _DF):
@@ -230,27 +228,22 @@ class Engine:
         path: str,
         topic: str,
         key_cols: list[str] | None = None,
-        table_format: str = "parquet",
+        table_format: str = "delta",
         **kw,
     ):
         """Keyed sink table for a topic. `table_format`:
-        - "parquet" (default): KeyedParquetTable — plain parquet files,
-          replaced by a directory swap on each merge (no log).
-        - "delta": DeltaKeyedTable — real Delta layout (any engine can
-          read it); kw passes through (use_dvs, enable_cdf, ...); merge
+        - "delta" (default): DeltaKeyedTable — real Delta layout (any
+          engine can read it); every merge is one atomic log commit; kw
+          passes through (use_dvs, enable_cdf, partition_by, ...); merge
           supports txn=(app, version) for exactly-once consumers.
         - "iceberg": IcebergKeyedTable — real Iceberg layout; kw passes
           through (delete_mode="position"|"equality"|"dv").
-        All formats register the topic name as a sql() view."""
+        Both formats register the topic name as a sql() view."""
         cfg = self.topic(topic)
         keys = key_cols or ([cfg.key_field] if cfg.key_field else None)
         if not keys:
             raise ValueError(f"topic {topic!r} has no key config; pass key_cols")
-        if table_format == "parquet":
-            tbl = KeyedParquetTable(
-                self.spark, path, keys, schema=cfg.schema.struct, **kw
-            )
-        elif table_format == "delta":
+        if table_format == "delta":
             from deimos_spark.operators.delta_interop import DeltaKeyedTable
 
             tbl = DeltaKeyedTable(
@@ -264,15 +257,14 @@ class Engine:
             tbl = IcebergKeyedTable(self.spark, path, keys, **kw)
         else:
             raise ValueError(
-                f"table_format {table_format!r}: parquet|delta|iceberg"
+                f"table_format {table_format!r}: delta|iceberg"
             )
         # topic tables are sql()-queryable by topic name; empty schema-
         # typed view until the first write so catalog queries never
-        # fail. Only not-born-yet signals map to empty — real read
-        # errors (corruption, protocol refusals) must surface.
+        # fail (DeltaKeyedTable.read already returns one). Only not-
+        # born-yet signals map to empty — real read errors (corruption,
+        # protocol refusals) must surface.
         def _view(t=tbl, s=cfg.schema.struct):
-            if hasattr(t, "exists") and not t.exists():
-                return self.spark.createDataFrame([], s)
             try:
                 return t.read()
             except FileNotFoundError:  # iceberg before first commit
@@ -287,12 +279,13 @@ class Engine:
         table_path: str,
         key_cols: list[str] | None = None,
         compacted: bool = True,
-        table_format: str = "parquet",
+        table_format: str = "delta",
         table_kw: dict | None = None,
         **consumer_kw,
     ) -> BatchConsumer:
-        """`table_format="delta"`/"iceberg" gives the consumer a real
-        lakehouse sink — combine with `attach(txn_app_id=...)` for
+        """The consumer's sink is a real lakehouse table, Delta by
+        default or `table_format="iceberg"` — combine with
+        `attach(txn_app_id=...)` or `consume_batch(txn=...)` for
         exactly-once (Delta: the protocol txn action; Iceberg: the
         snapshot-summary watermark, Flink-style). `table_kw` passes
         through to the keyed table (use_dvs, enable_cdf,

@@ -23,11 +23,14 @@ from __future__ import annotations
 
 from collections.abc import Sequence
 from dataclasses import dataclass
+from typing import TYPE_CHECKING
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from deimos_spark.operators.merge import KeyedParquetTable
+if TYPE_CHECKING:
+    from deimos_spark.operators.delta_interop import DeltaKeyedTable
+    from deimos_spark.operators.iceberg_interop import IcebergKeyedTable
 
 
 @dataclass
@@ -35,14 +38,14 @@ class ChildSpec:
     """One association: payload column holding the nested child(ren)."""
 
     column: str                 # nested column: struct (has_one) or array<struct> (has_many)
-    table: KeyedParquetTable    # child table; key_cols must include fk_cols
+    table: DeltaKeyedTable | IcebergKeyedTable  # key_cols must include fk_cols
     fk_cols: dict[str, str]     # child col -> parent col (FK backfill mapping)
     replace: bool = True        # delete stale children of updated parents
 
 
 def fan_out(
     batch: DataFrame,
-    parent: KeyedParquetTable,
+    parent: DeltaKeyedTable | IcebergKeyedTable,
     children: Sequence[ChildSpec],
 ) -> None:
     """Apply one denormalized batch: parent upserts + child upserts (+ stale

@@ -3637,11 +3637,10 @@ def convert_parquet_dir(
 
 
 class DeltaKeyedTable:
-    """MERGE semantics over a real Delta table layout — the slot-in that
-    lets `TransactionLogTable`-shaped pipelines (streaming consumer
-    sinks, outbox targets) operate on Delta-protocol tables directly:
-    upsert/delete by key as ONE atomic commit of remove+add actions,
-    optimistic retry on conflict, snapshot-isolated readers."""
+    """MERGE semantics over a real Delta table layout — the default
+    keyed sink of `Engine.table`/`Engine.consumer` (and of outbox
+    targets): upsert/delete by key as ONE atomic commit of remove+add
+    actions, optimistic retry on conflict, snapshot-isolated readers."""
 
     def __init__(
         self,
@@ -3670,6 +3669,20 @@ class DeltaKeyedTable:
         # commits still omit cdc files (the protocol lets readers derive
         # inserts from add actions).
         self.enable_cdf = enable_cdf
+        # the writer creates _delta_log eagerly, which would turn a plain
+        # parquet directory into an empty table hiding every row
+        if (
+            os.path.isdir(path)
+            and not os.path.isdir(os.path.join(path, "_delta_log"))
+            and any(
+                f.endswith(".parquet") for _, _, fs in os.walk(path) for f in fs
+            )
+        ):
+            raise DeltaProtocolError(
+                f"{path} holds parquet files but no _delta_log; convert "
+                f"it in place with convert_parquet_dir(spark, path, "
+                f"partition_by) before opening it as a Delta table"
+            )
         self.writer = DeltaTableWriter(
             spark,
             path,
@@ -3762,6 +3775,46 @@ class DeltaKeyedTable:
             acts[0] = self._cdf_protocol_action(acts[0]["protocol"])[0]
         return acts
 
+    def _key_partition_filter(
+        self, affected: DataFrame, pcols
+    ) -> dict[str, list] | None:
+        """Key-subset-gated MERGE pruning: when a partition column is
+        part of the key, only files whose partitionValues appear in the
+        batch can hold its keys. Returns the read()/snapshot()
+        `partition_filter` naming those values, or None (no pruning)
+        when no partition column is a key column or the batch spans
+        more than 1024 partitions — the distinct values are a bounded
+        control read, and a wider batch just skips pruning, never
+        wrong."""
+        prune_cols = [c for c in pcols if c in self.key_cols]
+        if not prune_cols:
+            return None
+        # cast to string SPARK-side: Spark's string cast is the same
+        # rendering it used for the hive partition dir names that became
+        # the log's partitionValues ('true' not Python's 'True' for
+        # booleans, Java float formatting) — Python str() over typed row
+        # values silently mismatches and would prune every file,
+        # skipping deletes.
+        vals = (
+            affected.select(
+                *[F.col(c).cast("string").alias(c) for c in prune_cols]
+            )
+            .distinct()
+            .limit(1025)
+            .collect()
+        )
+        if len(vals) > 1024:
+            return None
+        # per-column value sets (a superset of the exact tuple set for
+        # multi-column keys — pruning may keep a few extra files, never
+        # drop a needed one)
+        return {
+            c: sorted(
+                {r[c] for r in vals}, key=lambda v: (v is not None, v or "")
+            )
+            for c in prune_cols
+        }
+
     def merge(
         self,
         upserts: DataFrame | None = None,
@@ -3773,7 +3826,12 @@ class DeltaKeyedTable:
         (app_id, version) at or below the recorded watermark is a
         silent no-op — the exactly-once half of streaming foreachBatch
         MERGE (pass the micro-batch id as version). Works in both
-        rewrite and DV modes; the watermark survives checkpoints."""
+        rewrite and DV modes; the watermark survives checkpoints.
+
+        On a table partitioned by key columns, both modes touch only
+        the files of the partitions the batch's keys name: a batch
+        touching one day rewrites that day, and the other partitions'
+        adds stay in the log as they were."""
         affected = None
         for src in (upserts, delete_keys):
             if src is not None:
@@ -3807,10 +3865,22 @@ class DeltaKeyedTable:
                 ).get("delta.enableChangeDataFeed") == "true"
                 rt = w._rt_rewrite(snap)
                 rdr = DeltaTableReader(self.spark, self.path)
-                if not snap.files:
+                part_filter = self._key_partition_filter(
+                    affected, snap.partition_columns
+                )
+                live = (
+                    snap.files
+                    if part_filter is None
+                    else rdr.snapshot(
+                        snap.version, partition_filter=part_filter
+                    ).files
+                )
+                if not live:
                     current = current_rt = None
                 elif rt is None:
-                    current = current_rt = rdr.read()
+                    current = current_rt = rdr.read(
+                        partition_filter=part_filter
+                    )
                 else:
                     # rewrite-mode merge copies SURVIVORS unmodified:
                     # preserve their row ids + commit versions via the
@@ -3819,14 +3889,16 @@ class DeltaKeyedTable:
                     # fresh ids from the new adds' baseRowId ranges
                     mat_id, mat_cv, rt_meta = rt
                     current_rt = (
-                        rdr.read(with_row_ids=True)
+                        rdr.read(
+                            partition_filter=part_filter, with_row_ids=True
+                        )
                         .withColumnRenamed("__rt_row_id", mat_id)
                         .withColumnRenamed("__rt_rcv", mat_cv)
                     )
                     current = current_rt.drop(mat_id, mat_cv)
                 removes = [
                     {"remove": {"path": p, "dataChange": True}}
-                    for p in sorted(snap.files)
+                    for p in sorted(live)
                 ]
             else:
                 current, current_rt, removes, snap, rt = (
@@ -3974,42 +4046,10 @@ class DeltaKeyedTable:
             ).get("delta.enableChangeDataFeed") == "true"
             pcols = list(meta.partition_columns)
 
-            # partition-pruned probe (key-subset-gated MERGE pruning):
-            # when a partition column is part of the key, only files whose
-            # partitionValues appear in the batch can hold hits. The
-            # batch's distinct partition values are a bounded control read
-            # (capped — a wider batch just skips pruning, never wrong).
-            # The prune is handed to snapshot() itself, which pushes it
+            # the prune is handed to snapshot() itself, which pushes it
             # into the distributed checkpoint scan — at millions of files
-            # the driver holds only the batch's partitions' adds.
-            prune_cols = [c for c in pcols if c in self.key_cols]
-            part_filter = None
-            if prune_cols:
-                # cast to string SPARK-side: Spark's string cast is the
-                # same rendering it used for the hive partition dir names
-                # that became the log's partitionValues ('true' not
-                # Python's 'True' for booleans, Java float formatting) —
-                # Python str() over typed row values silently mismatches
-                # and would prune every file, skipping deletes.
-                vals = (
-                    affected.select(
-                        *[F.col(c).cast("string").alias(c) for c in prune_cols]
-                    )
-                    .distinct()
-                    .limit(1025)
-                    .collect()
-                )
-                if len(vals) <= 1024:
-                    # per-column value sets (a superset of the exact
-                    # tuple set for multi-column keys — pruning may keep
-                    # a few extra files, never drop a needed one)
-                    part_filter = {
-                        c: sorted(
-                            {r[c] for r in vals},
-                            key=lambda v: (v is not None, v or ""),
-                        )
-                        for c in prune_cols
-                    }
+            # the driver holds only the batch's partitions' adds
+            part_filter = self._key_partition_filter(affected, pcols)
             snap = reader.snapshot(partition_filter=part_filter)
             probe_files = dict(snap.files)
 

@@ -21,15 +21,18 @@ Works in two modes with the SAME pipeline code:
 from __future__ import annotations
 
 from dataclasses import dataclass
-from typing import Callable
+from typing import TYPE_CHECKING, Callable
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from deimos_spark.operators.compaction import compact_keep_last, slice_batch
-from deimos_spark.operators.merge import KeyedParquetTable
 from deimos_spark.schemas.avro import AvroSchema
 from deimos_spark.schemas.codecs import get_codec
+
+if TYPE_CHECKING:
+    from deimos_spark.operators.delta_interop import DeltaKeyedTable
+    from deimos_spark.operators.iceberg_interop import IcebergKeyedTable
 
 
 @dataclass
@@ -56,7 +59,11 @@ class ConsumerConfig:
 
 
 class BatchConsumer:
-    def __init__(self, config: ConsumerConfig, table: KeyedParquetTable):
+    def __init__(
+        self,
+        config: ConsumerConfig,
+        table: DeltaKeyedTable | IcebergKeyedTable,
+    ):
         self.config = config
         self.table = table
         if config.registry is not None and config.codec == "proto":
@@ -221,13 +228,7 @@ class BatchConsumer:
         deletes = df.filter(F.col("_tombstone")).select(*cfg.key_cols)
         if cfg.record_transform is not None:
             upserts = cfg.record_transform(upserts)
-        if txn is not None:
-            # sinks that speak transaction identifiers (DeltaKeyedTable)
-            # get exactly-once; anything else refuses rather than
-            # silently degrading to at-least-once
-            self.table.merge(upserts=upserts, delete_keys=deletes, txn=txn)
-        else:
-            self.table.merge(upserts=upserts, delete_keys=deletes)
+        self.table.merge(upserts=upserts, delete_keys=deletes, txn=txn)
 
     # ---------------------------------------------------------- streaming
 

@@ -10,7 +10,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from deimos_spark.operators.associations import ChildSpec, fan_out
-from deimos_spark.operators.merge import KeyedParquetTable
+from deimos_spark.operators.delta_interop import DeltaKeyedTable
 from deimos_spark.schemas.avro import parse_avsc
 from deimos_spark.schemas.codecs import get_codec
 from deimos_spark.schemas.codegen import generate_schema_class
@@ -71,8 +71,8 @@ def _payload(spark, rows):
 
 @pytest.fixture
 def tables(spark, tmp_path):
-    parent = KeyedParquetTable(spark, str(tmp_path / "widgets"), ["widget_id"], PARENT)
-    child = KeyedParquetTable(
+    parent = DeltaKeyedTable(spark, str(tmp_path / "widgets"), ["widget_id"], PARENT)
+    child = DeltaKeyedTable(
         spark, str(tmp_path / "details"), ["widget_id", "detail_id"], CHILD
     )
     return parent, child

@@ -7,7 +7,7 @@ import json
 import pytest
 from pyspark.sql import Row
 
-from deimos_spark.operators.merge import KeyedParquetTable
+from deimos_spark.operators.delta_interop import DeltaKeyedTable
 from deimos_spark.schemas.avro import parse_avsc
 from deimos_spark.sources.brokersource import FakeBrokerDataSource
 from deimos_spark.streaming.consumer import BatchConsumer, ConsumerConfig
@@ -78,7 +78,7 @@ def test_streaming_consume_merges_and_resumes(spark, broker, tmp_path):
     picks up only new records (Spark-checkpointed offset resume)."""
     _publish(spark, broker, [(f"a{i}", i) for i in range(6)])
 
-    table = KeyedParquetTable(
+    table = DeltaKeyedTable(
         spark, str(tmp_path / "tbl"), ["test_id"],
         schema="test_id string, some_int int",
     )
@@ -117,7 +117,7 @@ def test_streaming_tombstone_deletes_via_source(spark, broker, tmp_path):
                    json.dumps({"test_id": "dead", "some_int": 2}).encode())
     broker.produce(TOPIC, json.dumps({"test_id": "dead"}).encode(), None)
 
-    table = KeyedParquetTable(
+    table = DeltaKeyedTable(
         spark, str(tmp_path / "tbl"), ["test_id"],
         schema="test_id string, some_int int",
     )
@@ -431,7 +431,7 @@ def test_streaming_mirror_topic_to_topic(spark, broker, tmp_path):
     q.stop()
 
     assert sum(broker.end_offset("mirror", p) for p in range(4)) == 8
-    table = KeyedParquetTable(
+    table = DeltaKeyedTable(
         spark, str(tmp_path / "tbl"), ["test_id"],
         schema="test_id string, some_int int",
     )

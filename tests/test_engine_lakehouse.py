@@ -1,8 +1,10 @@
 """Engine glue for lakehouse-backed topic tables: table()/consumer()
-with table_format="delta"|"iceberg" — the round-9 features reachable
-from the top-level API (exactly-once Delta consumer, Iceberg DV-mode
-sink, sql() views over all three formats).
+with table_format="delta" (the default) or "iceberg" — the round-9
+features reachable from the top-level API (exactly-once Delta consumer,
+Iceberg DV-mode sink, sql() views over both formats).
 """
+
+import os
 
 import pytest
 from pyspark.sql import Row
@@ -34,11 +36,10 @@ def _batch(spark, engine, rows, start=0):
     )
 
 
-@pytest.mark.parametrize("fmt", ["parquet", "delta", "iceberg"])
+@pytest.mark.parametrize("fmt", ["default", "delta", "iceberg"])
 def test_consumer_roundtrip_all_formats(spark, tmp_path, engine, fmt):
-    c = engine.consumer(
-        "widgets", str(tmp_path / "t"), table_format=fmt
-    )
+    kw = {} if fmt == "default" else {"table_format": fmt}
+    c = engine.consumer("widgets", str(tmp_path / "t"), **kw)
     c.consume_batch(
         _batch(spark, engine, [Row(test_id="a", some_int=1),
                                Row(test_id="b", some_int=2)])
@@ -109,8 +110,27 @@ def test_iceberg_consumer_exactly_once_through_engine(
 
 
 def test_bad_format_refuses(spark, tmp_path, engine):
-    with pytest.raises(ValueError, match="table_format"):
-        engine.table(str(tmp_path / "t"), "widgets", table_format="orc")
+    # "parquet" named the deleted directory-swap table
+    for fmt in ("orc", "parquet"):
+        with pytest.raises(ValueError, match="table_format"):
+            engine.table(str(tmp_path / "t"), "widgets", table_format=fmt)
+
+
+def test_default_consumer_is_delta_with_txn_replay(spark, tmp_path, engine):
+    """A consumer built without table_format sinks into a Delta table,
+    so a replayed batch with the same txn is a no-op."""
+    path = str(tmp_path / "t")
+    c = engine.consumer("widgets", path)
+    assert os.path.isdir(os.path.join(path, "_delta_log"))
+    b0 = _batch(spark, engine, [Row(test_id="a", some_int=1)])
+    c.consume_batch(b0, txn=("app", 0))
+    b1 = _batch(spark, engine, [Row(test_id="a", some_int=2)], start=1)
+    c.consume_batch(b1, txn=("app", 1))
+    c.consume_batch(b0, txn=("app", 0))  # replay → no-op
+    assert c.table.writer._latest_version() == 1
+    assert {r.test_id: r.some_int for r in c.table.read().collect()} == {
+        "a": 2
+    }
 
 
 def test_register_view_over_lakehouse_readers(spark, tmp_path, engine):

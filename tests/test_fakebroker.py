@@ -10,7 +10,7 @@ import json
 import pytest
 from pyspark.sql import Row
 
-from deimos_spark.operators.merge import KeyedParquetTable
+from deimos_spark.operators.delta_interop import DeltaKeyedTable
 from deimos_spark.schemas.avro import parse_avsc
 from deimos_spark.streaming.consumer import BatchConsumer, ConsumerConfig
 from deimos_spark.streaming.fakebroker import FakeBroker, FakeConsumer
@@ -39,7 +39,7 @@ def broker(tmp_path):
 
 
 def _consumer(spark, tmp_path, name="tbl", compacted=True):
-    table = KeyedParquetTable(
+    table = DeltaKeyedTable(
         spark, str(tmp_path / name), ["test_id"], schema="test_id string, some_int int"
     )
     cfg = ConsumerConfig(schema=MY_SCHEMA, key_cols=["test_id"], compacted=compacted)

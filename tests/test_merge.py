@@ -1,12 +1,17 @@
-"""Keyed MERGE table: upserts, tombstone deletes, compound keys,
-idempotency — mirrors the reference's batch-consumer DB assertions.
+"""Keyed MERGE table (DeltaKeyedTable, the default consumer sink):
+upserts, tombstone deletes, compound keys, idempotency — mirrors the
+reference's batch-consumer DB assertions.
 """
 
 import pytest
 from pyspark.sql import Row
 from pyspark.sql import types as T
 
-from deimos_spark.operators.merge import KeyedParquetTable
+from deimos_spark.operators.delta_interop import (
+    DeltaKeyedTable,
+    DeltaProtocolError,
+    convert_parquet_dir,
+)
 
 SCHEMA = T.StructType(
     [
@@ -18,7 +23,7 @@ SCHEMA = T.StructType(
 
 @pytest.fixture
 def table(spark, tmp_path):
-    return KeyedParquetTable(
+    return DeltaKeyedTable(
         spark, str(tmp_path / "widgets"), ["test_id"], schema=SCHEMA
     )
 
@@ -66,7 +71,7 @@ def test_compound_keys(spark, tmp_path):
             T.StructField("v", T.LongType(), True),
         ]
     )
-    t = KeyedParquetTable(
+    t = DeltaKeyedTable(
         spark, str(tmp_path / "compound"), ["part_one", "part_two"], schema=schema
     )
     t.merge(upserts=spark.createDataFrame([("x", "1", 1), ("x", "2", 2)], schema))
@@ -88,3 +93,25 @@ def test_upsert_compacts_batch(spark, table):
     )
     got = table.read().select("test_id", "some_int").collect()
     assert len(got) == 1 and got[0]["some_int"] == 9
+
+
+def test_plain_parquet_dir_refuses_with_convert_hint(spark, tmp_path):
+    """A directory of plain parquet files (a sink written without a log)
+    is refused, not opened as an empty table that hides its rows."""
+    path = str(tmp_path / "old_sink")
+    spark.createDataFrame([("a", 1)], SCHEMA).write.parquet(path)
+    with pytest.raises(DeltaProtocolError, match="convert_parquet_dir"):
+        DeltaKeyedTable(spark, path, ["test_id"], schema=SCHEMA)
+    assert not (tmp_path / "old_sink" / "_delta_log").exists()
+
+
+def test_converted_plain_parquet_dir_merges(spark, tmp_path):
+    path = str(tmp_path / "old_sink")
+    spark.createDataFrame([("a", 1), ("b", 2)], SCHEMA).write.parquet(path)
+    assert convert_parquet_dir(spark, path) >= 1
+    t = DeltaKeyedTable(spark, path, ["test_id"], schema=SCHEMA)
+    t.merge(
+        upserts=spark.createDataFrame([("b", 20), ("c", 3)], SCHEMA),
+        delete_keys=spark.createDataFrame([Row(test_id="a")]),
+    )
+    assert _rows(t) == {"b": 20, "c": 3}

@@ -7,7 +7,7 @@ from pyspark.sql import functions as F
 
 from deimos_spark import observability as obs
 from deimos_spark.operators import multimodal as mm
-from deimos_spark.operators.merge import KeyedParquetTable
+from deimos_spark.operators.delta_interop import DeltaKeyedTable
 from deimos_spark.schemas.avro import parse_avsc
 from deimos_spark.schemas.codecs import (
     add_registry_frame,
@@ -112,7 +112,7 @@ def test_memory_sink_and_assertions(spark):
 
 
 def test_test_consume_batch_driver(spark, tmp_path):
-    table = KeyedParquetTable(
+    table = DeltaKeyedTable(
         spark, str(tmp_path / "tbl"), ["test_id"], schema=MY_SCHEMA.struct
     )
     p = Producer(TopicConfig(topic="t", schema=MY_SCHEMA, key_field="test_id"))
@@ -356,7 +356,7 @@ def test_consumer_batch_traced(spark, tmp_path):
     )
     tracer = obs.MockTracer()
     p = Producer(TopicConfig(topic="tr", schema=schema, key_field="acct_id"))
-    table = KeyedParquetTable(
+    table = DeltaKeyedTable(
         spark, str(tmp_path / "tr"), ["acct_id"], schema=schema.struct
     )
     c = BatchConsumer(

@@ -10,7 +10,7 @@ from pyspark.sql import Row
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from deimos_spark.operators.merge import KeyedParquetTable
+from deimos_spark.operators.delta_interop import DeltaKeyedTable
 from deimos_spark.schemas.avro import parse_avsc
 from deimos_spark.streaming.consumer import BatchConsumer, ConsumerConfig
 from deimos_spark.streaming.producer import Producer, TopicConfig
@@ -111,7 +111,7 @@ def _kafka_shaped(spark, producer, rows, start_offset=0):
 
 @pytest.fixture
 def consumer(spark, tmp_path):
-    table = KeyedParquetTable(
+    table = DeltaKeyedTable(
         spark,
         str(tmp_path / "sink"),
         ["test_id"],
@@ -163,7 +163,7 @@ def test_consume_tombstone_deletes(spark, producer, consumer):
 
 
 def test_consume_filter_predicate(spark, producer, tmp_path):
-    table = KeyedParquetTable(
+    table = DeltaKeyedTable(
         spark, str(tmp_path / "sink2"), ["test_id"], schema=MY_SCHEMA.struct
     )
     cfg = ConsumerConfig(
@@ -184,7 +184,7 @@ def test_consume_filter_predicate(spark, producer, tmp_path):
 def test_consume_sliced_preserves_final_state(spark, producer, tmp_path):
     """Non-compacted mode: slices applied sequentially; final state equals
     last-write-wins per key."""
-    table = KeyedParquetTable(
+    table = DeltaKeyedTable(
         spark, str(tmp_path / "sink3"), ["test_id"], schema=MY_SCHEMA.struct
     )
     cfg = ConsumerConfig(schema=MY_SCHEMA, key_cols=["test_id"], compacted=False)

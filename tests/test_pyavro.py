@@ -194,7 +194,7 @@ def test_end_to_end_binary_avro_pipeline(spark, tmp_path):
     flagship path (3.2) on its actual encoding, no spark-avro jar."""
     from pyspark.sql import types as T
 
-    from deimos_spark.operators.merge import KeyedParquetTable
+    from deimos_spark.operators.delta_interop import DeltaKeyedTable
     from deimos_spark.streaming.consumer import BatchConsumer, ConsumerConfig
     from deimos_spark.streaming.producer import Producer, TopicConfig
 
@@ -227,7 +227,7 @@ def test_end_to_end_binary_avro_pipeline(spark, tmp_path):
         F.lit(0).alias("partition"),
         F.monotonically_increasing_id().alias("offset"),
     )
-    table = KeyedParquetTable(
+    table = DeltaKeyedTable(
         spark, str(tmp_path / "tbl"), ["test_id"], schema=avsc.struct
     )
     consumer = BatchConsumer(
@@ -241,7 +241,7 @@ def test_end_to_end_binary_avro_pipeline(spark, tmp_path):
 def test_binary_avro_tombstone_deletes(spark, tmp_path):
     """Tombstone keys are binary Avro too — the consumer must decode them
     with the topic codec (not JSON) to resolve the delete target."""
-    from deimos_spark.operators.merge import KeyedParquetTable
+    from deimos_spark.operators.delta_interop import DeltaKeyedTable
     from deimos_spark.streaming.consumer import BatchConsumer, ConsumerConfig
     from deimos_spark.streaming.producer import Producer, TopicConfig
 
@@ -255,7 +255,7 @@ def test_binary_avro_tombstone_deletes(spark, tmp_path):
             ],
         }
     )
-    table = KeyedParquetTable(
+    table = DeltaKeyedTable(
         spark, str(tmp_path / "tbl"), ["test_id"], schema=avsc.struct
     )
     consumer = BatchConsumer(

@@ -13,7 +13,7 @@ from __future__ import annotations
 from pyspark.sql import Row, Window
 from pyspark.sql import functions as F
 
-from deimos_spark.operators.merge import KeyedParquetTable
+from deimos_spark.operators.delta_interop import DeltaKeyedTable
 from deimos_spark.schemas.avro import parse_avsc
 from deimos_spark.schemas.registry import InMemorySchemaRegistry
 from deimos_spark.streaming.consumer import BatchConsumer, ConsumerConfig
@@ -65,7 +65,7 @@ def test_registry_pipeline_mixed_generations(spark, tmp_path):
     assert reg.versions("accts-value") == [1, 3]
     assert reg.versions("accts-key") == [2]
 
-    table = KeyedParquetTable(
+    table = DeltaKeyedTable(
         spark, str(tmp_path / "accts"), ["acct_id"], schema=V2.struct
     )
     consumer = BatchConsumer(
@@ -173,7 +173,7 @@ def test_registry_pipeline_proto_framed(spark, tmp_path):
         assert int.from_bytes(v[1:5], "big") == sid
         assert v[5] == 0  # message-indexes [0] encodes as one 0x00 byte
 
-    table = KeyedParquetTable(
+    table = DeltaKeyedTable(
         spark, str(tmp_path / "paccts"), ["acct_id"], schema=schema.struct
     )
     consumer = BatchConsumer(
@@ -226,7 +226,7 @@ def test_registry_proto_compat_gate():
 def test_registry_tombstone_roundtrip(spark, tmp_path):
     reg = InMemorySchemaRegistry()
     p = Producer(TopicConfig(topic="tt", schema=V1, key_field="acct_id", registry=reg))
-    table = KeyedParquetTable(spark, str(tmp_path / "tt"), ["acct_id"], schema=V1.struct)
+    table = DeltaKeyedTable(spark, str(tmp_path / "tt"), ["acct_id"], schema=V1.struct)
     c = BatchConsumer(
         ConsumerConfig(
             schema=V1, key_cols=["acct_id"], registry=reg,

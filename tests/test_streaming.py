@@ -10,7 +10,7 @@ from pyspark.sql import Row
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from deimos_spark.operators.merge import KeyedParquetTable
+from deimos_spark.operators.delta_interop import DeltaKeyedTable
 from deimos_spark.schemas.avro import parse_avsc
 from deimos_spark.streaming import streams
 from deimos_spark.streaming.consumer import BatchConsumer, ConsumerConfig
@@ -51,7 +51,7 @@ def test_stream_consume_merges_batches(spark, tmp_path):
     _write_kafka_file(spark, src, [("a", 1), ("b", 2)])
     _write_kafka_file(spark, src, [("a", 10), ("c", None)], offset0=10)  # update + tombstone
 
-    table = KeyedParquetTable(
+    table = DeltaKeyedTable(
         spark, str(tmp_path / "tbl"), ["test_id"], schema=MY_SCHEMA.struct
     )
     consumer = BatchConsumer(
@@ -69,7 +69,7 @@ def test_stream_checkpoint_no_reprocess(spark, tmp_path):
     """C1: restart with the same checkpoint does not re-apply old files."""
     src = str(tmp_path / "in")
     _write_kafka_file(spark, src, [("a", 1)])
-    table = KeyedParquetTable(
+    table = DeltaKeyedTable(
         spark, str(tmp_path / "tbl"), ["test_id"], schema=MY_SCHEMA.struct
     )
     consumer = BatchConsumer(

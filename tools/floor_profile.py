@@ -28,16 +28,9 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from deimos_spark.queries import all_queries, clear_plan_cache  # noqa: E402
 from deimos_spark.session import get_spark  # noqa: E402
+from tools.head2head import _cpu_probe  # noqa: E402
 
 PROBES = ["h02_min_cost_supplier", "h08_market_share", "x06_funnel"]
-
-
-def _cpu_probe() -> float:
-    t0 = time.perf_counter()
-    acc = 0
-    for i in range(5_000_000):
-        acc += i
-    return round(time.perf_counter() - t0, 3)
 
 
 def _median_of(fn, n=9):

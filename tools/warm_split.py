@@ -21,16 +21,15 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from bench import HEADLINE  # noqa: E402
 from deimos_spark.queries import all_queries, clear_plan_cache  # noqa: E402
 from deimos_spark.session import get_spark  # noqa: E402
+from tools.head2head import _cpu_probe  # noqa: E402
 
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    out: dict = {"loadavg": [round(x, 2) for x in os.getloadavg()]}
-    t0 = time.perf_counter()
-    acc = 0
-    for i in range(5_000_000):
-        acc += i
-    out["cpu_probe_sec"] = round(time.perf_counter() - t0, 3)
+    out: dict = {
+        "loadavg": [round(x, 2) for x in os.getloadavg()],
+        "cpu_probe_sec": _cpu_probe(),
+    }
 
     spark = get_spark("warm_split")
     spark.range(1).collect()

@@ -40,6 +40,7 @@ from pyspark.sql import functions as F
 
 from deimos_spark.queries import all_queries, clear_plan_cache
 from deimos_spark.session import get_spark
+from tools.head2head import _cpu_probe
 
 SCRATCH = "/tmp/ds_weakab"
 SRC = "/root/testdata/sf0.1"
@@ -55,14 +56,6 @@ SHIFT_COLS = {
     "embeddings": ("vec_id",),
 }
 DUCK_CUTOFF = float(os.environ.get("WEAK_AB_DUCK_CUTOFF", "120"))
-
-
-def _cpu_probe() -> float:
-    t0 = time.perf_counter()
-    s = 0
-    for i in range(5_000_000):
-        s += i
-    return round(time.perf_counter() - t0, 3)
 
 
 def scale_table(spark, table: str, k: int, dst_dir: str) -> str:
