@@ -145,6 +145,9 @@ HEAVY = [
 
 
 def main() -> None:
+    # imported here: tools.head2head imports this module's query lists
+    from tools.head2head import _cpu_probe, _settle
+
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     m = re.search(r"sf([0-9.]+)", sf_dir)
     sf = float(m.group(1)) if m else -1.0
@@ -162,19 +165,12 @@ def main() -> None:
     ncpus = os.cpu_count() or 32
     load_limit = ncpus / 4
     settle_max_sec = float(os.environ.get("BENCH_SETTLE_MAX_SEC", "120"))
-    waited = 0.0
-    while os.getloadavg()[0] > load_limit and waited < settle_max_sec:
-        time.sleep(5.0)
-        waited += 5.0
+    waited = _settle(load_limit, settle_max_sec)
     load_before = os.getloadavg()
     # absolute-speed fingerprint (r13 lesson): loadavg can be idle while
     # the HOST is throttled 2-3× (VM/noisy neighbor) — this probe makes
-    # cross-round totals comparable; see tools/head2head._cpu_probe
-    t0 = time.perf_counter()
-    acc = 0
-    for i in range(5_000_000):
-        acc += i
-    cpu_probe = round(time.perf_counter() - t0, 3)
+    # cross-round totals comparable
+    cpu_probe = _cpu_probe()
     if load_before[0] > load_limit:
         print(
             f"WARNING: loadavg {load_before[0]:.2f} > {load_limit:.1f} "

@@ -1985,6 +1985,39 @@ class DeltaTableReader:
         return out.drop("__dv_file", "__dv_ri")
 
 
+def _checkpoint_add_struct():
+    """The `add` column of a checkpoint (classic file and v2 sidecar
+    alike). Nullable deletionVector: dropping it would resurrect
+    soft-deleted rows; nullable row-tracking fields: dropping them would
+    reset every row id at the next log truncation."""
+    import pyarrow as pa
+
+    return pa.struct(
+        [
+            ("path", pa.string()),
+            ("partitionValues", pa.map_(pa.string(), pa.string())),
+            ("size", pa.int64()),
+            ("modificationTime", pa.int64()),
+            ("dataChange", pa.bool_()),
+            (
+                "deletionVector",
+                pa.struct(
+                    [
+                        ("storageType", pa.string()),
+                        ("pathOrInlineDv", pa.string()),
+                        ("offset", pa.int32()),
+                        ("sizeInBytes", pa.int32()),
+                        ("cardinality", pa.int64()),
+                    ]
+                ),
+            ),
+            ("baseRowId", pa.int64()),
+            ("defaultRowCommitVersion", pa.int64()),
+            ("stats", pa.string()),
+        ]
+    )
+
+
 class DeltaTableWriter:
     """Append / overwrite / MERGE a Delta table by writing protocol-
     faithful JSON commits — the write-side twin of DeltaTableReader.
@@ -2308,67 +2341,12 @@ class DeltaTableWriter:
             return self._write_checkpoint_v2(version)
         return self._write_checkpoint_classic(version)
 
-    def _write_checkpoint_v2(self, version: int) -> None:
-        """V2 checkpoint (PROTOCOL.md "V2 Checkpoints"): the write twin
-        of _load_checkpoint_v2 — a `{v}.checkpoint.{uuid}.json` manifest
-        holding checkpointMetadata + protocol + metaData + one `sidecar`
-        action, with the add-file state in a parquet sidecar under
-        `_delta_log/_sidecars/`. Readers without the v2Checkpoint
-        feature must not read the table at all, which is why
-        checkpoint_format="v2" declares the feature in the FIRST
-        commit's protocol; attaching to a table whose protocol lacks it
-        refuses here rather than emit a checkpoint real readers would
-        mis-handle."""
-        import time as _time
-        import uuid
-
-        import pyarrow as pa
-        import pyarrow.parquet as papq
-
-        snap = DeltaTableReader(self.spark, self.path).snapshot(version)
-        if snap.meta_raw is None:
-            return
-        feats = (snap.protocol_raw or {}).get("writerFeatures") or []
-        if "v2Checkpoint" not in feats:
-            raise DeltaProtocolError(
-                "v2 checkpoint requested but the table's protocol does "
-                "not declare the v2Checkpoint feature"
-            )
-        mapss = pa.map_(pa.string(), pa.string())
-        add_schema = pa.schema(
-            [
-                (
-                    "add",
-                    pa.struct(
-                        [
-                            ("path", pa.string()),
-                            ("partitionValues", mapss),
-                            ("size", pa.int64()),
-                            ("modificationTime", pa.int64()),
-                            ("dataChange", pa.bool_()),
-                            (
-                                "deletionVector",
-                                pa.struct(
-                                    [
-                                        ("storageType", pa.string()),
-                                        ("pathOrInlineDv", pa.string()),
-                                        ("offset", pa.int32()),
-                                        ("sizeInBytes", pa.int32()),
-                                        ("cardinality", pa.int64()),
-                                    ]
-                                ),
-                            ),
-                            # row tracking (nullable): dropping these
-                            # from a checkpoint would reset every row id
-                            # on the next log truncation
-                            ("baseRowId", pa.int64()),
-                            ("defaultRowCommitVersion", pa.int64()),
-                            ("stats", pa.string()),
-                        ]
-                    ),
-                ),
-            ]
-        )
+    def _checkpoint_add_rows(self, snap: DeltaSnapshot) -> list[dict]:
+        """One checkpoint `add` row per live file, in path order. Stats
+        carry forward from the JSON commit's add, else are re-derived
+        from the parquet footer (the reader's checkpoint load drops
+        stats driver-side, so a re-checkpoint would otherwise lose
+        them)."""
         rows = []
         for p in sorted(snap.files):
             a = snap.adds_raw.get(p) or {}
@@ -2400,6 +2378,36 @@ class DeltaTableWriter:
                     }
                 }
             )
+        return rows
+
+    def _write_checkpoint_v2(self, version: int) -> None:
+        """V2 checkpoint (PROTOCOL.md "V2 Checkpoints"): the write twin
+        of _load_checkpoint_v2 — a `{v}.checkpoint.{uuid}.json` manifest
+        holding checkpointMetadata + protocol + metaData + one `sidecar`
+        action, with the add-file state in a parquet sidecar under
+        `_delta_log/_sidecars/`. Readers without the v2Checkpoint
+        feature must not read the table at all, which is why
+        checkpoint_format="v2" declares the feature in the FIRST
+        commit's protocol; attaching to a table whose protocol lacks it
+        refuses here rather than emit a checkpoint real readers would
+        mis-handle."""
+        import time as _time
+        import uuid
+
+        import pyarrow as pa
+        import pyarrow.parquet as papq
+
+        snap = DeltaTableReader(self.spark, self.path).snapshot(version)
+        if snap.meta_raw is None:
+            return
+        feats = (snap.protocol_raw or {}).get("writerFeatures") or []
+        if "v2Checkpoint" not in feats:
+            raise DeltaProtocolError(
+                "v2 checkpoint requested but the table's protocol does "
+                "not declare the v2Checkpoint feature"
+            )
+        add_schema = pa.schema([("add", _checkpoint_add_struct())])
+        rows = self._checkpoint_add_rows(snap)
         sdir = os.path.join(self.log_dir, "_sidecars")
         os.makedirs(sdir, exist_ok=True)
         sc_name = f"{uuid.uuid4()}.parquet"
@@ -2541,38 +2549,7 @@ class DeltaTableWriter:
                         ]
                     ),
                 ),
-                (
-                    "add",
-                    pa.struct(
-                        [
-                            ("path", pa.string()),
-                            ("partitionValues", mapss),
-                            ("size", pa.int64()),
-                            ("modificationTime", pa.int64()),
-                            ("dataChange", pa.bool_()),
-                            # nullable: present only on DV-carrying adds —
-                            # a checkpoint that dropped this would
-                            # resurrect soft-deleted rows
-                            (
-                                "deletionVector",
-                                pa.struct(
-                                    [
-                                        ("storageType", pa.string()),
-                                        ("pathOrInlineDv", pa.string()),
-                                        ("offset", pa.int32()),
-                                        ("sizeInBytes", pa.int32()),
-                                        ("cardinality", pa.int64()),
-                                    ]
-                                ),
-                            ),
-                            # row tracking (nullable on non-tracking
-                            # tables)
-                            ("baseRowId", pa.int64()),
-                            ("defaultRowCommitVersion", pa.int64()),
-                            ("stats", pa.string()),
-                        ]
-                    ),
-                ),
+                ("add", _checkpoint_add_struct()),
             ]
         )
         meta = snap.meta_raw
@@ -2617,40 +2594,7 @@ class DeltaTableWriter:
                     }
                 }
             )
-        for p in sorted(snap.files):
-            a = snap.adds_raw.get(p) or {}
-            full = os.path.join(self.path, p)
-            rows.append(
-                {
-                    "add": {
-                        "path": p,
-                        "partitionValues": snap.files[p],
-                        "size": a.get("size")
-                        or (
-                            os.path.getsize(full)
-                            if os.path.exists(full)
-                            else 0
-                        ),
-                        "modificationTime": a.get("modificationTime") or 0,
-                        "dataChange": bool(a.get("dataChange", True)),
-                        "deletionVector": a.get("deletionVector"),
-                        "baseRowId": a.get("baseRowId"),
-                        "defaultRowCommitVersion": a.get(
-                            "defaultRowCommitVersion"
-                        ),
-                        # carry forward from the JSON commit's add, else
-                        # re-derive from the parquet footer (the reader's
-                        # checkpoint load drops stats driver-side, so a
-                        # re-checkpoint would otherwise lose them)
-                        "stats": a.get("stats")
-                        or (
-                            self._file_stats(full)
-                            if os.path.exists(full)
-                            else None
-                        ),
-                    }
-                }
-            )
+        rows += self._checkpoint_add_rows(snap)
         for d in sorted(snap.domains):
             dm = snap.domains[d]
             rows.append(
@@ -3638,8 +3582,8 @@ def convert_parquet_dir(
 
 class DeltaKeyedTable:
     """MERGE semantics over a real Delta table layout — the default
-    keyed sink of `Engine.table`/`Engine.consumer` (and of outbox
-    targets): upsert/delete by key as ONE atomic commit of remove+add
+    keyed sink of `Engine.table`/`Engine.consumer` and the store behind
+    `OutboxTable`: upsert/delete by key as ONE atomic commit of remove+add
     actions, optimistic retry on conflict, snapshot-isolated readers."""
 
     def __init__(
@@ -3950,7 +3894,13 @@ class DeltaKeyedTable:
                 [rt[2]] if rt is not None and rt[2] is not None else []
             )
             actions = (
-                (self._meta_actions(new_state.schema) if v < 0 else [])
+                # a delete-only merge before the first commit creates
+                # nothing (new_state is None)
+                (
+                    self._meta_actions(new_state.schema)
+                    if v < 0 and new_state is not None
+                    else []
+                )
                 + rt_meta_up
                 + proto_up
                 + cdc_actions

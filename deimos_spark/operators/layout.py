@@ -302,8 +302,10 @@ def compact_files(
     curve: str = "linear",
 ) -> int:
     """Bin-pack a small-file parquet directory into ~target-sized files;
-    returns the new file count. Rewrites via a temp dir + atomic-ish swap
-    (same-volume rename) so readers never see a partial table. Re-clusters
+    returns the new file count. Rewrites into a temp dir, then swaps it in
+    with two renames: between them no directory exists at `path`, and a
+    crash there leaves the rows under `._compact_old`. For atomic
+    compaction use a Delta table and `DeltaTableWriter.optimize`. Re-clusters
     while rewriting when `cluster_cols` given — compaction is the natural
     moment to restore sort order degraded by incremental appends;
     curve="z"/"hilbert" restores INTERLEAVED clustering instead (see

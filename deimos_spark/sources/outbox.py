@@ -11,15 +11,20 @@ docs/DATABASE_BACKEND.md — behavior only):
   optionally compacts keep-last-per-key, produces synchronously, deletes
   the published rows, repeats until drained → at-least-once.
 
-Spark-first: the outbox is an append-only parquet/Delta table with a
-monotonic id; the relay is driver-orchestrated (the Spark driver IS the
-single writer, so the reference's per-topic DB lock table is unnecessary).
-Metrics hook mirrors the reference's pending-count/lag gauges.
+Spark-first: the outbox is a Delta table keyed on a monotonic `id`
+(DeltaKeyedTable): appends and deletes are each one optimistic log
+commit — deletes are MERGE commits — so a crash leaves the previous
+snapshot intact and an append racing a delete makes the delete retry
+instead of being lost. The relay is driver-orchestrated (the Spark
+driver IS the single writer, so the reference's per-topic DB lock table
+is unnecessary). Delivered rows stay on disk until
+`table.writer.vacuum()` / `cleanup_log()` reclaim them, as for any other
+Delta table. Metrics hook mirrors the reference's pending-count/lag
+gauges.
 """
 
 from __future__ import annotations
 
-import os
 import threading
 import time
 from typing import Callable
@@ -29,6 +34,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from deimos_spark.operators.compaction import compact_keep_last
+from deimos_spark.operators.delta_interop import DeltaKeyedTable
 
 OUTBOX_SCHEMA = T.StructType(
     [
@@ -43,25 +49,25 @@ OUTBOX_SCHEMA = T.StructType(
 
 
 class OutboxTable:
-    """Append-only keyed message log over parquet (reference:
-    kafka_messages table). Single-writer; ids are assigned monotonically
-    from the current max at append time."""
+    """Keyed message log (reference: kafka_messages table) in a Delta
+    table keyed on `id`. Single-writer appends; ids are assigned
+    monotonically from the current max at append time."""
 
     def __init__(self, spark: SparkSession, path: str):
         self.spark = spark
         self.path = path
+        self.table = DeltaKeyedTable(spark, path, ["id"], schema=OUTBOX_SCHEMA)
         self._lock = threading.Lock()
 
     def read(self) -> DataFrame:
-        if not os.path.exists(self.path):
-            return self.spark.createDataFrame([], OUTBOX_SCHEMA)
-        return self.spark.read.parquet(self.path)
+        return self.table.read()
 
     def append(self, messages: DataFrame) -> None:
         """messages: (key, value, topic[, partition_key]) from the produce
         pipeline → outbox rows with assigned ids."""
         with self._lock:
-            base = self.read().agg(F.coalesce(F.max("id"), F.lit(0))).head()[0]
+            current = self.read()
+            base = current.agg(F.coalesce(F.max("id"), F.lit(0))).head()[0]
             cols = messages.columns
             pk = F.col("partition_key") if "partition_key" in cols else F.col("key")
             rows = (
@@ -81,37 +87,23 @@ class OutboxTable:
                     ),
                 )
                 .withColumn("created_at", F.current_timestamp())
-                .select([f.name for f in OUTBOX_SCHEMA.fields])
+                # the table's types (OUTBOX_SCHEMA's until the first
+                # commit; a converted parquet-era outbox keeps int ids):
+                # base + row_number is int, and schema enforcement
+                # refuses a batch whose types differ from the table's
+                .select(
+                    [F.col(f.name).cast(f.dataType) for f in current.schema.fields]
+                )
             )
-            rows.write.mode("append").parquet(self.path)
+            self.table.writer.append(rows)
 
     def delete_ids(self, ids: list[int]) -> None:
-        """Remove delivered rows via rename-aside swap: write the remainder
-        to a tmp dir, move the live table aside, move tmp in, THEN delete
-        the old copy. A crash at any point leaves either the old table or
-        the new one at self.path — never a window with no table — so
-        pending messages can't be stranded (at-least-once preserved).
-
-        Small id lists delete via an InSet predicate (pushable to the
-        scan); large drains switch to a broadcast anti-join — a 100k-term
-        IN list is a 100k-node expression tree that Catalyst chokes on
-        long before the data is the problem."""
-        import shutil
-        import uuid as _uuid
-
-        if len(ids) <= 1000:
-            df = self.read().filter(~F.col("id").isin(ids))
-        else:
-            id_df = self.spark.createDataFrame(
-                [(int(i),) for i in ids], "id long"
-            )
-            df = self.read().join(F.broadcast(id_df), "id", "left_anti")
-        tmp = f"{self.path}.__tmp_{_uuid.uuid4().hex[:8]}"
-        df.write.mode("overwrite").parquet(tmp)
-        old = f"{self.path}.__old_{_uuid.uuid4().hex[:8]}"
-        os.rename(self.path, old)
-        os.rename(tmp, self.path)
-        shutil.rmtree(old)
+        """Remove delivered rows in one MERGE commit (the key set is
+        broadcast into an anti-join). A crash before the commit leaves
+        every row pending; an append that commits first makes the merge
+        retry on the new snapshot, so its rows survive (at-least-once)."""
+        keys = self.spark.createDataFrame([(int(i),) for i in ids], "id long")
+        self.table.merge(delete_keys=keys)
 
     def pending_count(self) -> int:
         return self.read().count()
@@ -186,8 +178,8 @@ class OutboxRelay:
                 return total
             drained_everything = True
             for topic in sorted(topics):
-                # fresh read each topic: delete_ids rewrites the table files,
-                # invalidating DataFrames planned over the previous listing
+                # fresh read each topic: each read pins a snapshot, so
+                # re-reading is what sees the previous topic's delete
                 batch_df = (
                     self.outbox.read()
                     .filter(F.col("topic") == topic)

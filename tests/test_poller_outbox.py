@@ -2,9 +2,13 @@
 delay window, at-least-once, compaction-on-relay.
 """
 
+import datetime
+import os
+
 import pytest
 from pyspark.sql import Row
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from deimos_spark.sources.outbox import OutboxRelay, OutboxTable
 from deimos_spark.sources.poller import PollCursor, StateBasedPoller, TimeBasedPoller
@@ -134,6 +138,7 @@ def test_outbox_append_assigns_monotonic_ids(spark, tmp_path):
     ids = [r["id"] for r in ob.read().orderBy("id").collect()]
     assert ids == [1, 2, 3]
     assert ob.pending_count() == 3
+    assert ob.read().schema["id"].dataType == T.LongType()
 
 
 def test_relay_drains_in_order_and_deletes(spark, tmp_path):
@@ -175,6 +180,90 @@ def test_relay_batch_limit_loops_until_drained(spark, tmp_path):
     )
     n = relay.run_once()
     assert n == 7 and len(produced) == 7
+    assert ob.pending_count() == 0
+
+
+def _decoded(rows):
+    return [bytes(r["message"]).decode() for r in rows]
+
+
+def test_outbox_append_during_delete_is_kept(spark, tmp_path):
+    """An append that commits while a delete is in flight makes the
+    delete's MERGE commit conflict and retry on the new snapshot: the
+    appended message stays pending and the next relay pass sends it."""
+    ob = OutboxTable(spark, str(tmp_path / "outbox"))
+    ob.append(_messages(spark, "t1", [("a", "1"), ("b", "2")]))
+    writer = ob.table.writer
+    real_commit = writer._commit
+    raced = []
+
+    def commit(version, actions, **kw):
+        if kw.get("op") == "MERGE" and not raced:
+            raced.append(version)
+            ob.append(_messages(spark, "t1", [("c", "late")]))
+        return real_commit(version, actions, **kw)
+
+    writer._commit = commit
+    produced = []
+    relay = OutboxRelay(ob, lambda topic, rows: produced.extend(_decoded(rows)))
+    assert relay.run_once() == 2
+    assert raced
+    assert _decoded(ob.read().collect()) == ["late"]
+    assert relay.run_once() == 1
+    assert produced == ["1", "2", "late"]
+    assert ob.pending_count() == 0
+
+
+def test_outbox_crash_during_delete_keeps_every_message(spark, tmp_path):
+    """A crash inside the delete's commit leaves the previous snapshot:
+    every message is still pending (a restarted handle sees them all)
+    and no side directory is left next to the table."""
+    path = str(tmp_path / "outbox")
+    ob = OutboxTable(spark, path)
+    ob.delete_ids([1])  # an outbox with no commits: nothing to delete
+    ob.append(_messages(spark, "t1", [("a", "1"), ("b", "2"), ("c", "3")]))
+    real_commit = ob.table.writer._commit
+
+    def crash(version, actions, **kw):
+        if kw.get("op") == "MERGE":
+            raise RuntimeError("crash during delete")
+        return real_commit(version, actions, **kw)
+
+    ob.table.writer._commit = crash
+    with pytest.raises(RuntimeError):
+        ob.delete_ids([1, 2])
+    restarted = OutboxTable(spark, path)
+    assert sorted(r["id"] for r in restarted.read().collect()) == [1, 2, 3]
+    assert os.listdir(tmp_path) == ["outbox"]
+
+
+def test_outbox_parquet_era_directory_converts(spark, tmp_path):
+    """A plain-parquet outbox directory (the pre-Delta layout: no
+    _delta_log, int ids) refuses loudly instead of opening as an empty
+    outbox; converted in place, it drains and keeps numbering."""
+    from deimos_spark.operators.delta_interop import (
+        DeltaProtocolError,
+        convert_parquet_dir,
+    )
+
+    path = str(tmp_path / "outbox")
+    now = datetime.datetime.now()
+    spark.createDataFrame(
+        [(i, "t1", b"k%d" % i, b"%d" % i, b"k%d" % i, now) for i in (1, 2)],
+        "id int, topic string, key binary, message binary, "
+        "partition_key binary, created_at timestamp",
+    ).write.parquet(path)
+    with pytest.raises(DeltaProtocolError, match="convert_parquet_dir"):
+        OutboxTable(spark, path)
+    convert_parquet_dir(spark, path)
+    ob = OutboxTable(spark, path)
+    ob.delete_ids([1])
+    ob.append(_messages(spark, "t1", [("c", "3")]))
+    assert sorted(r["id"] for r in ob.read().collect()) == [2, 3]
+    produced = []
+    relay = OutboxRelay(ob, lambda topic, rows: produced.extend(_decoded(rows)))
+    assert relay.run_once() == 2
+    assert produced == ["2", "3"]
     assert ob.pending_count() == 0
 
 

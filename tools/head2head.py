@@ -91,6 +91,16 @@ def _cpu_probe() -> float:
     return round(_time.perf_counter() - t0, 3)
 
 
+def _settle(limit: float, max_wait_s: float) -> float:
+    """Wait in 5 s steps while the 1-min loadavg is above `limit`, for at
+    most `max_wait_s`; returns the seconds waited."""
+    waited = 0.0
+    while os.getloadavg()[0] > limit and waited < max_wait_s:
+        time.sleep(5.0)
+        waited += 5.0
+    return waited
+
+
 def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else os.environ.get(
         "SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"
@@ -103,10 +113,7 @@ def main() -> None:
     import time as _time
 
     limit = float(os.environ.get("H2H_LOAD_LIMIT", "2.0"))
-    waited = 0.0
-    while os.getloadavg()[0] > limit and waited < 600:
-        _time.sleep(5.0)
-        waited += 5.0
+    waited = _settle(limit, 600)
     load_before = os.getloadavg()  # contention fingerprint (r6 lesson)
     cpu_probe = _cpu_probe()  # absolute-speed fingerprint (r13 lesson)
 
@@ -147,15 +154,12 @@ def main() -> None:
     attempts = 0
     while len(samples) < n_samples and attempts < max_attempts:
         attempts += 1
-        waited_s = 0.0
         # settle to the ACCEPTANCE threshold, not the coarse run limit:
         # a sample's own 32-thread tail leaves the 1-min loadavg above
         # accept_load for minutes, so settling only to `limit` (2.0) and
         # then gating at 1.5 burned attempts against the tool's own
         # residue (first r15 run: 5 of 6 attempts self-rejected)
-        while os.getloadavg()[0] > accept_load and waited_s < 420:
-            _time.sleep(5.0)
-            waited_s += 5.0
+        waited_s = _settle(accept_load, 420)
         s_load = os.getloadavg()
         s_probe = _cpu_probe()
         # final attempt with zero accepted samples: run ungated rather

@@ -40,7 +40,7 @@ from pyspark.sql import functions as F
 
 from deimos_spark.queries import all_queries, clear_plan_cache
 from deimos_spark.session import get_spark
-from tools.head2head import _cpu_probe
+from tools.head2head import _cpu_probe, _settle
 
 SCRATCH = "/tmp/ds_weakab"
 SRC = "/root/testdata/sf0.1"
@@ -133,10 +133,7 @@ def main() -> None:
         else [1, 10, 30]
     )
     ncpus = os.cpu_count() or 32
-    waited = 0.0
-    while os.getloadavg()[0] > ncpus / 4 and waited < 600:
-        time.sleep(5.0)
-        waited += 5.0
+    waited = _settle(ncpus / 4, 600)
     load0 = os.getloadavg()
     probe = _cpu_probe()
 
