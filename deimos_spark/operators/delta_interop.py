@@ -917,8 +917,13 @@ class DeltaTableReader:
         only the surviving files — the 100-TB shape, where the full add
         set (millions of files, dominated by per-file stats JSON) must
         never land on the driver. The JSON commit tail (bounded by
-        checkpoint interval) is post-filtered driver-side. Pruned
-        snapshots must not seed writes/merges.
+        checkpoint interval) is post-filtered driver-side. A pruned
+        snapshot can seed a commit only when that commit's removes stay
+        inside the pruned partitions (both MERGE modes); it still
+        carries the protocol, metaData, txn and domainMetadata state
+        (so the row-tracking watermark cannot regress), but any
+        operation that must see every live file (overwrite, optimize)
+        needs an unpruned one.
 
         `stats_filter` = {col: (lo, hi)} closed ranges (either side
         None) — FILE SKIPPING on the writer-recorded per-file stats,
@@ -1597,12 +1602,6 @@ class DeltaTableReader:
                 else f.name
             )
 
-        ptypes = {
-            f.name: f.dataType
-            for f in snap.schema.fields
-            if f.name in snap.partition_columns
-        }
-        pv_key = {f.name: _phys(f) for f in snap.schema.fields}
         data_fields = [
             f
             for f in snap.schema.fields
@@ -1634,23 +1633,14 @@ class DeltaTableReader:
             ]
             + [T.StructField("_change_type", T.StringType())]
         )
-        groups: dict[tuple, list[str]] = {}
-        for a in cdc_actions:
-            pv = dict(a.get("partitionValues") or {})
-            key = tuple(
-                (c, pv.get(pv_key[c])) for c in snap.partition_columns
-            )
-            groups.setdefault(key, []).append(
-                os.path.join(self.path, a["path"])
-            )
         parts = []
-        for key, paths in sorted(
-            groups.items(),
-            key=lambda kv: tuple(
-                (c, v is not None, v or "") for c, v in kv[0]
-            ),
+        for key, paths in self._partition_groups(
+            snap,
+            {a["path"]: a.get("partitionValues") for a in cdc_actions},
         ):
-            df = self.spark.read.schema(file_schema).parquet(*paths)
+            df = self.spark.read.schema(file_schema).parquet(
+                *[os.path.join(self.path, p) for p in paths]
+            )
             if mapped:
                 df = df.select(
                     *[
@@ -1659,15 +1649,8 @@ class DeltaTableReader:
                     ],
                     "_change_type",
                 )
-            for col, raw in key:
-                lit = (
-                    F.lit(None).cast(ptypes[col])
-                    if raw is None
-                    else F.lit(raw).cast(ptypes[col])
-                )
-                df = df.withColumn(col, lit)
             parts.append(
-                df.select(
+                self._with_partition_values(df, key, snap).select(
                     *[f.name for f in snap.schema.fields], "_change_type"
                 )
             )
@@ -1675,6 +1658,52 @@ class DeltaTableReader:
         for q in parts[1:]:
             out = out.unionByName(q)
         return out
+
+    @staticmethod
+    def _partition_groups(
+        snap: DeltaSnapshot, files: dict[str, dict | None]
+    ) -> list[tuple[tuple, list[str]]]:
+        """Group {rel path: partitionValues} by partition value tuple —
+        one scan per group, in a None-safe deterministic order (null
+        values first). Keys are ((logical column, raw value), ...);
+        mapped tables key partitionValues on PHYSICAL names (PROTOCOL.md
+        "Column Mapping"), while metaData.partitionColumns stays
+        logical."""
+        mapping = snap.column_mapping in ("name", "id")
+        pv_key = {
+            f.name: (
+                (f.metadata or {}).get(
+                    "delta.columnMapping.physicalName", f.name
+                )
+                if mapping
+                else f.name
+            )
+            for f in snap.schema.fields
+        }
+        groups: dict[tuple, list[str]] = {}
+        for path, pvals in files.items():
+            key = tuple(
+                (c, (pvals or {}).get(pv_key[c]))
+                for c in snap.partition_columns
+            )
+            groups.setdefault(key, []).append(path)
+        return sorted(
+            groups.items(),
+            key=lambda kv: tuple(
+                (c, v is not None, v or "") for c, v in kv[0]
+            ),
+        )
+
+    @staticmethod
+    def _with_partition_values(
+        df: DataFrame, key: tuple, snap: DeltaSnapshot
+    ) -> DataFrame:
+        """Re-attach one group's partition columns as typed literals —
+        Delta keeps them in the log, not the files."""
+        ptypes = {f.name: f.dataType for f in snap.schema.fields}
+        for col, raw in key:
+            df = df.withColumn(col, F.lit(raw).cast(ptypes[col]))
+        return df
 
     def _read(
         self,
@@ -1697,7 +1726,10 @@ class DeltaTableReader:
         return self._assemble(snap, with_row_ids=with_row_ids)
 
     def _assemble(
-        self, snap: DeltaSnapshot, with_row_ids: bool = False
+        self,
+        snap: DeltaSnapshot,
+        with_row_ids: bool = False,
+        with_file_pos: bool = False,
     ) -> DataFrame:
         """Materialize a snapshot's file set as one DataFrame: files
         grouped by partition values (one scan per group, partition
@@ -1710,7 +1742,11 @@ class DeltaTableReader:
         read even though it is outside the logical schema), else
         baseRowId + row index / defaultRowCommitVersion from the add
         actions — attached via ONE broadcast join on a per-file map,
-        never a per-file driver loop."""
+        never a per-file driver loop.
+
+        `with_file_pos` keeps `__rt_file` (absolute data file path) and
+        `__rt_ri` (file-local row index) on every live row — where a
+        DV-mode MERGE finds the rows its deletion vectors must drop."""
         if snap.schema is None:
             raise DeltaProtocolError(f"{self.path}: no metaData action in log")
         mat_id, mat_cv = (
@@ -1719,6 +1755,7 @@ class DeltaTableReader:
             else (None, None)
         )
         rt_extra = [c for c in (mat_id, mat_cv) if c]
+        with_pos = with_row_ids or with_file_pos
         mapping = snap.column_mapping in ("name", "id")
 
         def _phys(f: T.StructField) -> str:
@@ -1726,13 +1763,6 @@ class DeltaTableReader:
                 "delta.columnMapping.physicalName", f.name
             )
 
-        # in mapping mode, partitionValues key on PHYSICAL names while
-        # metaData.partitionColumns stays logical (PROTOCOL.md "Column
-        # Mapping") — translate lookups
-        pv_key = {
-            f.name: (_phys(f) if mapping else f.name)
-            for f in snap.schema.fields
-        }
         data_fields = [
             f for f in snap.schema.fields if f.name not in snap.partition_columns
         ]
@@ -1795,29 +1825,8 @@ class DeltaTableReader:
                 ).withColumn("__rt_rcv", F.lit(None).cast("long"))
             return out
 
-        ptypes = {
-            f.name: f.dataType
-            for f in snap.schema.fields
-            if f.name in snap.partition_columns
-        }
-
-        # group files by partition values: one scan per group, partition
-        # columns re-attached as typed literals (they are not in the files)
-        groups: dict[tuple, list[str]] = {}
-        for path, pvals in snap.files.items():
-            key = tuple(
-                (c, pvals.get(pv_key[c])) for c in snap.partition_columns
-            )
-            groups.setdefault(key, []).append(path)
-
         parts = []
-        # None-safe deterministic order (null partition values sort first)
-        for key, paths in sorted(
-            groups.items(),
-            key=lambda kv: tuple(
-                (c, v is not None, v or "") for c, v in kv[0]
-            ),
-        ):
+        for key, paths in self._partition_groups(snap, snap.files):
             clean = [
                 p
                 for p in paths
@@ -1829,7 +1838,7 @@ class DeltaTableReader:
                 df = self.spark.read.schema(data_schema).parquet(
                     *[os.path.join(self.path, p) for p in clean]
                 )
-                if with_row_ids:
+                if with_pos:
                     df = df.withColumn(
                         "__rt_file",
                         F.regexp_replace(
@@ -1840,11 +1849,11 @@ class DeltaTableReader:
             if dved:
                 scans.append(
                     self._read_with_dvs(
-                        dved, data_schema, snap, keep_meta=with_row_ids
+                        dved, data_schema, snap, keep_meta=with_pos
                     )
                 )
             extras = (
-                [*rt_extra, "__rt_file", "__rt_ri"] if with_row_ids else []
+                [*rt_extra, "__rt_file", "__rt_ri"] if with_pos else []
             )
             for df in scans:
                 if mapping:
@@ -1855,15 +1864,8 @@ class DeltaTableReader:
                         ],
                         *extras,
                     )
-                for col, raw in key:
-                    lit = (
-                        F.lit(None).cast(ptypes[col])
-                        if raw is None
-                        else F.lit(raw).cast(ptypes[col])
-                    )
-                    df = df.withColumn(col, lit)
                 parts.append(
-                    df.select(
+                    self._with_partition_values(df, key, snap).select(
                         *[f.name for f in snap.schema.fields], *extras
                     )
                 )
@@ -1872,6 +1874,7 @@ class DeltaTableReader:
             out = out.unionByName(p)
         if not with_row_ids:
             return out
+        pos = [] if with_file_pos else ["__rt_file", "__rt_ri"]
         # one broadcast map (abs file path -> add's row-tracking
         # fields); rows whose file never carried baseRowId surface null
         base_rows = [
@@ -1895,7 +1898,7 @@ class DeltaTableReader:
         return (
             out.withColumn("__rt_row_id", rid.cast("long"))
             .withColumn("__rt_rcv", rcv.cast("long"))
-            .drop("__rt_file", "__rt_ri", "__rt_base", "__rt_dcv", *rt_extra)
+            .drop(*pos, "__rt_base", "__rt_dcv", *rt_extra)
         )
 
     def _read_with_dvs(
@@ -2771,25 +2774,87 @@ class DeltaTableWriter:
         )
         return df.select(*cols)
 
+    def _stage_files(
+        self, df: DataFrame, cmap: dict | None = None, cdc: bool = False
+    ) -> list[tuple[str, dict]]:
+        """Write df as parquet and move the files into the table, Delta
+        layout: partition columns stripped from the files, their values
+        returned per file as (table-relative path, partitionValues).
+        Data files land under hive-style partition dirs; change data
+        files (`cdc`) all land in `_change_data/`. `cmap` (column-mapped
+        tables) lands PHYSICAL column names + field ids in the files and
+        keys partitionValues on physical names — both spec requirements
+        for mapped tables."""
+        import shutil
+        import uuid
+
+        uid = uuid.uuid4().hex[:12]
+        prefix = "cdc" if cdc else "part"
+        staging = os.path.join(self.path, f".staging_{prefix}_{uid}")
+        pcols = list(self.partition_by)
+        if cmap:
+            df = self._to_physical(df, cmap)
+            pcols = [cmap.get(c, (c, None))[0] for c in pcols]
+        # Spark writes BOTH null and empty-string partition values to the
+        # __HIVE_DEFAULT_PARTITION__ directory, but the Delta protocol
+        # distinguishes "" from null in partitionValues. Substitute "" with
+        # a sentinel before writing so the hive dir name round-trips; the
+        # sentinel is mapped back to "" in the recorded partitionValues
+        # (dir names are arbitrary — the log is the source of truth).
+        for f in df.schema.fields:
+            if f.name in pcols and isinstance(f.dataType, T.StringType):
+                df = df.withColumn(
+                    f.name,
+                    F.when(
+                        F.col(f.name) == "", F.lit(_EMPTY_SENTINEL)
+                    ).otherwise(F.col(f.name)),
+                )
+        out = df.write.mode("overwrite")
+        if pcols:
+            out = out.partitionBy(*pcols)
+        out.parquet(staging)
+        staged: list[tuple[str, dict]] = []
+        for root, _dirs, files in os.walk(staging):
+            pq = sorted(f for f in files if f.endswith(".parquet"))
+            if not pq:
+                continue
+            reldir = os.path.relpath(root, staging)
+            pvals = {}
+            for seg in reldir.split(os.sep):
+                if "=" not in seg:
+                    continue
+                k, v = seg.split("=", 1)
+                val = (
+                    None if v == "__HIVE_DEFAULT_PARTITION__"
+                    else _unescape(v)
+                )
+                pvals[k] = "" if val == _EMPTY_SENTINEL else val
+            dest = (
+                "_change_data" if cdc
+                else "" if reldir == os.curdir
+                else reldir
+            )
+            os.makedirs(os.path.join(self.path, dest), exist_ok=True)
+            for f in pq:
+                rel = os.path.join(
+                    dest, f"{prefix}-{uid}-{len(staged):05d}.parquet"
+                )
+                os.rename(os.path.join(root, f), os.path.join(self.path, rel))
+                staged.append((rel, pvals))
+        shutil.rmtree(staging, ignore_errors=True)
+        return staged
+
     def _write_files(
         self, df: DataFrame, cmap: dict | None = None,
         pre_arranged: bool = False,
     ) -> list[dict]:
-        """Write df as parquet file(s), Delta layout: partition columns
-        stripped from the files, recorded per-file in add actions.
-        `cmap` (column-mapped tables) lands PHYSICAL column names +
-        field ids in the files and keys partitionValues on physical
-        names — both spec requirements for mapped tables.
-        `pre_arranged`: the caller already partitioned+sorted the rows
-        (OPTIMIZE ZORDER) — re-sorting on sort_by here would destroy
-        that arrangement."""
-        import shutil
+        """Write df as data files (see _stage_files) and return their add
+        actions. A file whose footer reports 0 rows is deleted, not
+        added: an empty batch commits no add. `pre_arranged`: the caller
+        already partitioned+sorted the rows (OPTIMIZE ZORDER) —
+        re-sorting on sort_by here would destroy that arrangement."""
         import time as _time
-        import uuid
 
-        uid = uuid.uuid4().hex[:12]
-        staging = os.path.join(self.path, f".staging_{uid}")
-        adds: list[dict] = []
         if self.sort_by and not pre_arranged:
             # sort on LOGICAL names, before any mapping rename
             missing = [
@@ -2806,67 +2871,14 @@ class DeltaTableWriter:
                 else df.repartitionByRange(*cols)
             )
             df = ranged.sortWithinPartitions(*cols)
-        pcols = list(self.partition_by)
-        if cmap:
-            df = self._to_physical(df, cmap)
-            pcols = [cmap.get(c, (c, None))[0] for c in pcols]
-        if not pcols:
-            df.write.mode("overwrite").parquet(staging)
-            i = 0
-            for f in sorted(os.listdir(staging)):
-                if not f.endswith(".parquet"):
-                    continue
-                rel = f"part-{uid}-{i:05d}.parquet"
-                os.rename(os.path.join(staging, f), os.path.join(self.path, rel))
-                adds.append(self._add_action(rel, {}, _time))
-                i += 1
-            shutil.rmtree(staging, ignore_errors=True)
-            return adds
-
-        # Spark writes BOTH null and empty-string partition values to the
-        # __HIVE_DEFAULT_PARTITION__ directory, but the Delta protocol
-        # distinguishes "" from null in partitionValues. Substitute "" with
-        # a sentinel before writing so the hive dir name round-trips; the
-        # sentinel is mapped back to "" in the recorded partitionValues
-        # (dir names are arbitrary — the log is the source of truth).
-        str_pcols = [
-            f.name
-            for f in df.schema.fields
-            if f.name in pcols
-            and isinstance(f.dataType, T.StringType)
-        ]
-        for c in str_pcols:
-            df = df.withColumn(
-                c,
-                F.when(F.col(c) == "", F.lit(_EMPTY_SENTINEL)).otherwise(
-                    F.col(c)
-                ),
-            )
-        df.write.mode("overwrite").partitionBy(*pcols).parquet(staging)
-        i = 0
-        for root, _dirs, files in os.walk(staging):
-            pq = [f for f in files if f.endswith(".parquet")]
-            if not pq:
+        adds: list[dict] = []
+        for rel, pvals in self._stage_files(df, cmap):
+            add = self._add_action(rel, pvals, _time)
+            stats = add["add"].get("stats")
+            if stats is not None and json.loads(stats)["numRecords"] == 0:
+                os.unlink(os.path.join(self.path, rel))
                 continue
-            reldir = os.path.relpath(root, staging)
-            segs = [s for s in reldir.split(os.sep) if "=" in s]
-            pvals = {}
-            for s in segs:
-                k, v = s.split("=", 1)
-                val = (
-                    None if v == "__HIVE_DEFAULT_PARTITION__"
-                    else _unescape(v)
-                )
-                if val == _EMPTY_SENTINEL:
-                    val = ""
-                pvals[k] = val
-            os.makedirs(os.path.join(self.path, reldir), exist_ok=True)
-            for f in sorted(pq):
-                rel = os.path.join(reldir, f"part-{uid}-{i:05d}.parquet")
-                os.rename(os.path.join(root, f), os.path.join(self.path, rel))
-                adds.append(self._add_action(rel, pvals, _time))
-                i += 1
-        shutil.rmtree(staging, ignore_errors=True)
+            adds.append(add)
         return adds
 
     def _add_action(self, rel: str, pvals: dict, _time) -> dict:
@@ -2887,29 +2899,14 @@ class DeltaTableWriter:
         self, df: DataFrame, cmap: dict | None = None
     ) -> list[dict]:
         """Write change rows (table columns + `_change_type`) as Change
-        Data Files (PROTOCOL.md): parquet under `_change_data/`,
-        partition columns stripped from the files and recorded in each
-        `cdc` action's partitionValues — the same layout rule as data
-        files, so `read_changes` re-attaches them identically. cdc
-        actions carry dataChange=false: they describe a commit's
-        changes, they are not part of the table's live state. `cmap`
-        (mapped tables): physical names in files and partitionValues,
-        same as data files; `_change_type` passes through untouched."""
-        import shutil
-        import uuid
-
-        uid = uuid.uuid4().hex[:12]
-        staging = os.path.join(self.path, f".staging_cdc_{uid}")
-        cdir = os.path.join(self.path, "_change_data")
-        pcols = list(self.partition_by)
-        if cmap:
-            df = self._to_physical(df, cmap)
-            pcols = [cmap.get(c, (c, None))[0] for c in pcols]
-        os.makedirs(cdir, exist_ok=True)
-        out: list[dict] = []
-
-        def _cdc_action(rel: str, pvals: dict) -> dict:
-            return {
+        Data Files (PROTOCOL.md) under `_change_data/`, partition values
+        recorded in each `cdc` action — the same layout rule as data
+        files (see _stage_files), so `read_changes` re-attaches them
+        identically. cdc actions carry dataChange=false: they describe a
+        commit's changes, they are not part of the table's live state.
+        `_change_type` passes through column mapping untouched."""
+        return [
+            {
                 "cdc": {
                     "path": rel.replace(os.sep, "/"),
                     "partitionValues": pvals,
@@ -2917,64 +2914,8 @@ class DeltaTableWriter:
                     "dataChange": False,
                 }
             }
-
-        if not pcols:
-            df.write.mode("overwrite").parquet(staging)
-            i = 0
-            for f in sorted(os.listdir(staging)):
-                if not f.endswith(".parquet"):
-                    continue
-                rel = os.path.join("_change_data", f"cdc-{uid}-{i:05d}.parquet")
-                os.rename(os.path.join(staging, f), os.path.join(self.path, rel))
-                out.append(_cdc_action(rel, {}))
-                i += 1
-            shutil.rmtree(staging, ignore_errors=True)
-            return out
-
-        str_pcols = [
-            f.name
-            for f in df.schema.fields
-            if f.name in pcols
-            and isinstance(f.dataType, T.StringType)
+            for rel, pvals in self._stage_files(df, cmap, cdc=True)
         ]
-        for c in str_pcols:
-            df = df.withColumn(
-                c,
-                F.when(F.col(c) == "", F.lit(_EMPTY_SENTINEL)).otherwise(
-                    F.col(c)
-                ),
-            )
-        df.write.mode("overwrite").partitionBy(*pcols).parquet(
-            staging
-        )
-        i = 0
-        for root, _dirs, files in os.walk(staging):
-            pq = [f for f in files if f.endswith(".parquet")]
-            if not pq:
-                continue
-            reldir = os.path.relpath(root, staging)
-            segs = [s for s in reldir.split(os.sep) if "=" in s]
-            pvals = {}
-            for s in segs:
-                k, v = s.split("=", 1)
-                val = (
-                    None if v == "__HIVE_DEFAULT_PARTITION__"
-                    else _unescape(v)
-                )
-                if val == _EMPTY_SENTINEL:
-                    val = ""
-                pvals[k] = val
-            for f in sorted(pq):
-                rel = os.path.join(
-                    "_change_data", f"cdc-{uid}-{i:05d}.parquet"
-                )
-                os.rename(
-                    os.path.join(root, f), os.path.join(self.path, rel)
-                )
-                out.append(_cdc_action(rel, pvals))
-                i += 1
-        shutil.rmtree(staging, ignore_errors=True)
-        return out
 
     @staticmethod
     def _file_stats(full: str) -> str | None:
@@ -3060,13 +3001,38 @@ class DeltaTableWriter:
             out["nullCount"] = nulls
         return json.dumps(out)
 
-    @staticmethod
-    def _drop_files(path: str, adds: list[dict]) -> None:
-        for a in adds:
+    def _written(self, actions: list[dict]) -> list[str]:
+        """The files that freshly written add/cdc actions name."""
+        return [
+            os.path.join(self.path, (a.get("add") or a["cdc"])["path"])
+            for a in actions
+        ]
+
+    def _commit_loop(self, attempt, op: str = "WRITE") -> None:
+        """The one optimistic-commit loop (the Delta commit protocol's
+        shape): read the latest version `v`, let `attempt(v)` derive its
+        commit against it — `(actions, written_paths, snap)`, or None
+        when there is nothing to commit — and claim `v+1`. A lost race
+        unlinks every file the attempt wrote (data, cdc, DV) and
+        re-derives against the winner's snapshot."""
+        for _ in range(self.max_commit_retries):
+            v = self._latest_version()
+            out = attempt(v)
+            if out is None:
+                return
+            actions, written, snap = out
             try:
-                os.unlink(os.path.join(path, a["add"]["path"]))
-            except OSError:
-                pass
+                self._commit(v + 1, actions, op=op, snap=snap)
+                return
+            except DeltaCommitConflict:
+                for p in written:
+                    try:
+                        os.unlink(p)
+                    except OSError:
+                        pass
+        raise DeltaCommitConflict(
+            f"could not commit after {self.max_commit_retries} tries"
+        )
 
     # ----------------------------------------------------------- write API
 
@@ -3090,10 +3056,10 @@ class DeltaTableWriter:
         conflicts and new columns refuse; `merge_schema=True` evolves
         the table instead (new fields appended nullable, committed as
         an updated metaData action)."""
-        for _ in range(self.max_commit_retries):
-            v = self._latest_version()
-            meta_update: list[dict] = []
+
+        def attempt(v):
             probe = None
+            meta_update: list[dict] = []
             if v >= 0:
                 # spec-required writer gate: a meta-only probe (no add
                 # materialization) — refuse foreign tables whose writer
@@ -3102,11 +3068,11 @@ class DeltaTableWriter:
                 probe = self._reader().snapshot(_meta_only=True)
                 check_writer_protocol(probe, "append")
                 if txn is not None and _txn_already_applied(probe, txn):
-                    return
+                    return None
                 meta_update = check_write_schema(
                     probe, df.schema, merge_schema
                 )
-            cmap = self._column_map(probe) if v >= 0 else None
+            cmap = self._column_map(probe)
             if cmap is not None and meta_update:
                 # mapped evolution: the NEW fields' physical names live
                 # only in the updated metaData — map from it
@@ -3118,19 +3084,14 @@ class DeltaTableWriter:
                     )
                 )
             adds = self._write_files(df, cmap)
-            actions = meta_update + adds
-            if v < 0:
-                actions = self._meta_actions(df.schema) + adds
+            actions = (
+                self._meta_actions(df.schema) if v < 0 else meta_update
+            ) + adds
             if txn is not None:
                 actions = [_txn_action(txn)] + actions
-            try:
-                self._commit(v + 1, actions, snap=probe)
-                return
-            except DeltaCommitConflict:
-                self._drop_files(self.path, adds)
-        raise DeltaCommitConflict(
-            f"could not commit after {self.max_commit_retries} tries"
-        )
+            return actions, self._written(adds), probe
+
+        self._commit_loop(attempt)
 
     def _rt_rewrite(
         self, snap: DeltaSnapshot | None
@@ -3193,26 +3154,26 @@ class DeltaTableWriter:
         sort_by's linear order only prunes on its leading column. It
         overrides the writer's sort_by for this rewrite, exactly like
         the real OPTIMIZE ZORDER."""
-        for _ in range(self.max_commit_retries):
-            reader = self._reader()
-            v = self._latest_version()
+
+        def attempt(v):
             if v < 0:
-                return
-            snap = reader.snapshot()
+                return None
+            reader = self._reader()
+            snap = reader.snapshot(v)
             check_writer_protocol(snap, "optimize")
             if not snap.files:
-                return
+                return None
             rt = self._rt_rewrite(snap)
             meta_up: list[dict] = []
             if rt is None:
-                current = reader.read()
+                current = reader._assemble(snap)
             else:
                 # OPTIMIZE copies rows unmodified: preserve BOTH the
                 # row id and the row commit version by materializing
                 # them into the configured physical columns
                 mat_id, mat_cv, meta_action = rt
                 current = (
-                    reader.read(with_row_ids=True)
+                    reader._assemble(snap, with_row_ids=True)
                     .withColumnRenamed("__rt_row_id", mat_id)
                     .withColumnRenamed("__rt_rcv", mat_cv)
                 )
@@ -3235,16 +3196,9 @@ class DeltaTableWriter:
             )
             for a in adds:
                 a["add"]["dataChange"] = False
-            try:
-                self._commit(
-                    v + 1, meta_up + removes + adds, op="OPTIMIZE", snap=snap
-                )
-                return
-            except DeltaCommitConflict:
-                self._drop_files(self.path, adds)
-        raise DeltaCommitConflict(
-            f"could not commit after {self.max_commit_retries} tries"
-        )
+            return meta_up + removes + adds, self._written(adds), snap
+
+        self._commit_loop(attempt, op="OPTIMIZE")
 
     def vacuum(
         self, keep_versions: int = 0, retention_seconds: float = 3600.0
@@ -3413,13 +3367,13 @@ class DeltaTableWriter:
         refuses unless `overwrite_schema=True` commits the replacement
         schema as an updated metaData action (legal on overwrite — the
         old files are all removed in the same commit)."""
-        for _ in range(self.max_commit_retries):
-            v = self._latest_version()
+
+        def attempt(v):
             removes = []
             meta_update: list[dict] = []
             snap = None
             if v >= 0:
-                snap = self._reader().snapshot()
+                snap = self._reader().snapshot(v)
                 check_writer_protocol(snap, "overwrite")
                 if (
                     (snap.meta_raw or {}).get("configuration") or {}
@@ -3461,14 +3415,9 @@ class DeltaTableWriter:
                 + removes
                 + adds
             )
-            try:
-                self._commit(v + 1, actions, op="WRITE", snap=snap)
-                return
-            except DeltaCommitConflict:
-                self._drop_files(self.path, adds)
-        raise DeltaCommitConflict(
-            f"could not commit after {self.max_commit_retries} tries"
-        )
+            return actions, self._written(adds), snap
+
+        self._commit_loop(attempt)
 
 
 def _unescape(s: str) -> str:
@@ -3765,17 +3714,39 @@ class DeltaKeyedTable:
         delete_keys: DataFrame | None = None,
         txn: tuple[str, int] | None = None,
     ) -> None:
-        """`txn=(app_id, version)` makes the merge IDEMPOTENT: the
+        """Upsert `upserts` and delete `delete_keys` by key in ONE commit.
+
+        Both modes share one body: a meta-only probe (writer-protocol
+        gate, txn replay, schema enforcement — merge never evolves the
+        schema — and the CDF flag), one snapshot pinned to the probe's
+        version and pruned to the batch's partitions, and one read of
+        those partitions' live rows, which also gives the change feed's
+        preimage. Only the removal step differs:
+        - rewrite mode (default) removes every file of the touched
+          partitions and writes their surviving rows plus the upserts;
+        - DV mode (`use_dvs`) keeps the data files and folds the hit
+          rows' indexes into each file's deletion vector (remove +
+          re-add of the SAME file with a widened DV — the protocol's
+          DV-update pattern); upserts append as new files. Work is
+          O(batch + touched files' metadata), not O(table). The first
+          DV commit upgrades the table protocol to v3/v7 with the
+          deletionVectors feature.
+        On a table partitioned by key columns, both modes touch only
+        the files of the partitions the batch's keys name: the other
+        partitions' adds stay in the log as they were.
+
+        Empty batches: a zero-row output file is never added. A merge
+        that changes nothing commits nothing — unless it carries `txn`,
+        whose watermark must still advance. The first merge of a table
+        creates it from the upserts' schema even when they are empty; a
+        delete-only merge before the first commit is a no-op.
+
+        `txn=(app_id, version)` makes the merge IDEMPOTENT: the
         commit carries the protocol's `txn` action and a replayed
         (app_id, version) at or below the recorded watermark is a
         silent no-op — the exactly-once half of streaming foreachBatch
-        MERGE (pass the micro-batch id as version). Works in both
-        rewrite and DV modes; the watermark survives checkpoints.
-
-        On a table partitioned by key columns, both modes touch only
-        the files of the partitions the batch's keys name: a batch
-        touching one day rewrites that day, and the other partitions'
-        adds stay in the log as they were."""
+        MERGE (pass the micro-batch id as version). The watermark
+        survives checkpoints."""
         affected = None
         for src in (upserts, delete_keys):
             if src is not None:
@@ -3783,456 +3754,210 @@ class DeltaKeyedTable:
                 affected = k if affected is None else affected.union(k).distinct()
         if affected is None:
             return
-        if self.use_dvs:
-            self._merge_dv(upserts, affected, txn)
-            return
-
         w = self.writer
-        cdf = self.enable_cdf
-        for _ in range(w.max_commit_retries):
-            v = w._latest_version()
+        rdr = DeltaTableReader(self.spark, self.path)
+        keys = self.key_cols
+
+        def attempt(v):
+            snap, current, rt, cdf = None, None, None, self.enable_cdf
             if v >= 0:
-                snap = DeltaTableReader(self.spark, self.path).snapshot()
-                check_writer_protocol(snap, "merge")
-                if txn is not None and _txn_already_applied(snap, txn):
-                    return
+                probe = rdr.snapshot(v, _meta_only=True)
+                check_writer_protocol(probe, "merge")
+                if txn is not None and _txn_already_applied(probe, txn):
+                    return None
                 if upserts is not None:
-                    # enforcement only — merge never evolves the schema
-                    check_write_schema(snap, upserts.schema)
+                    check_write_schema(probe, upserts.schema)
                 # spec: once a table declares delta.enableChangeDataFeed,
                 # EVERY writer must emit cdc files on remove-carrying
                 # commits — honor it even when this instance was built
                 # with enable_cdf=False (we implement CDF, so honoring
                 # beats refusing)
-                cdf = self.enable_cdf or (
-                    (snap.meta_raw or {}).get("configuration") or {}
+                cdf = cdf or (
+                    (probe.meta_raw or {}).get("configuration") or {}
                 ).get("delta.enableChangeDataFeed") == "true"
-                rt = w._rt_rewrite(snap)
-                rdr = DeltaTableReader(self.spark, self.path)
-                part_filter = self._key_partition_filter(
-                    affected, snap.partition_columns
+                # the prune is handed to snapshot() itself, which pushes
+                # it into the distributed checkpoint scan — at millions
+                # of files the driver holds only the batch's partitions'
+                # adds. Removes stay inside them and domainMetadata is
+                # carried, so the commit can be derived against it.
+                snap = rdr.snapshot(
+                    v,
+                    partition_filter=self._key_partition_filter(
+                        affected, probe.partition_columns
+                    ),
                 )
-                live = (
-                    snap.files
-                    if part_filter is None
-                    else rdr.snapshot(
-                        snap.version, partition_filter=part_filter
-                    ).files
-                )
-                if not live:
-                    current = current_rt = None
-                elif rt is None:
-                    current = current_rt = rdr.read(
-                        partition_filter=part_filter
+                if not self.use_dvs:
+                    rt = w._rt_rewrite(snap)
+                if snap.files:
+                    # DV-applied: rows an older DV already deleted are
+                    # neither hits nor preimages
+                    current = rdr._assemble(
+                        snap,
+                        with_row_ids=rt is not None,
+                        with_file_pos=self.use_dvs,
                     )
-                else:
-                    # rewrite-mode merge copies SURVIVORS unmodified:
-                    # preserve their row ids + commit versions via the
-                    # materialized columns; upsert rows are logically
-                    # new (delete+insert semantics) and stay null ->
-                    # fresh ids from the new adds' baseRowId ranges
-                    mat_id, mat_cv, rt_meta = rt
-                    current_rt = (
-                        rdr.read(
-                            partition_filter=part_filter, with_row_ids=True
-                        )
-                        .withColumnRenamed("__rt_row_id", mat_id)
-                        .withColumnRenamed("__rt_rcv", mat_cv)
+                    if rt is not None:
+                        # rewrite-mode merge copies SURVIVORS unmodified:
+                        # preserve their row ids + commit versions via
+                        # the materialized columns; upsert rows are
+                        # logically new (delete+insert semantics) and
+                        # stay null -> fresh ids from the new adds'
+                        # baseRowId ranges
+                        current = current.withColumnRenamed(
+                            "__rt_row_id", rt[0]
+                        ).withColumnRenamed("__rt_rcv", rt[1])
+            elif upserts is None:
+                return None  # no table to delete from, no schema to create
+            cmap = w._column_map(snap)
+            removes: list[dict] = []
+            dv_adds: list[dict] = []
+            dv_paths: list[str] = []
+            if self.use_dvs:
+                if current is not None:
+                    removes, dv_adds, dv_paths = self._widen_dvs(
+                        snap,
+                        current.join(F.broadcast(affected), keys, "left_semi"),
                     )
-                    current = current_rt.drop(mat_id, mat_cv)
-                removes = [
-                    {"remove": {"path": p, "dataChange": True}}
-                    for p in sorted(live)
-                ]
-            else:
-                current, current_rt, removes, snap, rt = (
-                    None, None, [], None, None,
-                )
-            survivors = (
-                current_rt.join(
-                    F.broadcast(affected), self.key_cols, "left_anti"
-                )
-                if current_rt is not None
-                else None
-            )
-            if survivors is not None and upserts is not None:
-                ups = upserts
-                if rt is not None:
-                    mat_id, mat_cv, rt_meta = rt
-                    ups = ups.withColumn(
-                        mat_id, F.lit(None).cast("long")
-                    ).withColumn(mat_cv, F.lit(None).cast("long"))
-                new_state = survivors.unionByName(
-                    ups.select(*survivors.columns)
-                )
-            elif upserts is not None:
                 new_state = upserts
             else:
-                new_state = survivors
-            cmap = DeltaTableWriter._column_map(snap)
+                removes = [
+                    {"remove": {"path": p, "dataChange": True}}
+                    for p in sorted(snap.files if snap else ())
+                ]
+                survivors = (
+                    current.join(F.broadcast(affected), keys, "left_anti")
+                    if current is not None
+                    else None
+                )
+                if survivors is None:
+                    new_state = upserts
+                elif upserts is None:
+                    new_state = survivors
+                else:
+                    ups = upserts
+                    if rt is not None:
+                        ups = ups.withColumn(
+                            rt[0], F.lit(None).cast("long")
+                        ).withColumn(rt[1], F.lit(None).cast("long"))
+                    new_state = survivors.unionByName(
+                        ups.select(*survivors.columns)
+                    )
             adds = (
                 w._write_files(new_state, cmap)
-                if new_state is not None and new_state.head(1)
+                if new_state is not None
                 else []
             )
+            proto = (snap.protocol_raw if snap else None) or {}
+            proto_actions: list[dict] = []
+            if dv_adds and "deletionVectors" not in (
+                proto.get("readerFeatures") or []
+            ):
+                proto = self._dv_protocol(proto)
+                proto_actions = [{"protocol": proto}]
             cdc_actions: list[dict] = []
-            proto_up: list[dict] = []
-            if cdf and removes and current is not None:
-                # a rewrite commit's remove/add actions don't mirror its
-                # logical changes (survivors are rewritten too), so with
+            if cdf and removes:
+                # remove/DV actions don't mirror a commit's logical
+                # changes (a rewrite rewrites survivors too), so with
                 # CDF on, EVERY remove-carrying commit records cdc files
                 # — including its insert rows, since cdc replaces adds
                 # for change readers
-                pre = current.join(
-                    F.broadcast(affected), self.key_cols, "left_semi"
+                pre = current.select(*snap.schema.fieldNames()).join(
+                    F.broadcast(affected), keys, "left_semi"
                 )
                 cdc_actions = w._write_cdc_files(
                     self._cdf_rows(pre, upserts), cmap
                 )
-                proto_up = self._cdf_protocol_action(snap.protocol_raw)
-            rt_meta_up = (
-                [rt[2]] if rt is not None and rt[2] is not None else []
-            )
-            actions = (
-                # a delete-only merge before the first commit creates
-                # nothing (new_state is None)
-                (
-                    self._meta_actions(new_state.schema)
-                    if v < 0 and new_state is not None
-                    else []
+                # one protocol action carrying DV + CDF
+                proto_actions = (
+                    self._cdf_protocol_action(proto) or proto_actions
                 )
-                + rt_meta_up
-                + proto_up
+            actions = (
+                ([rt[2]] if rt is not None and rt[2] is not None else [])
+                + proto_actions
                 + cdc_actions
                 + removes
+                + dv_adds
                 + adds
             )
-            if not actions and (txn is None or v < 0):
-                # (a txn-only first commit would violate the protocol —
-                # no table exists to record the watermark in)
-                return
+            if v < 0:
+                actions = self._meta_actions(upserts.schema) + actions
+            elif not actions and txn is None:
+                return None
             if txn is not None:
                 # committed even when the data delta is empty: the
                 # watermark must advance or the NEXT batch's replay
                 # check would re-apply this one
                 actions = [_txn_action(txn)] + actions
-            try:
-                w._commit(v + 1, actions, op="MERGE", snap=snap)
-                return
-            except DeltaCommitConflict:
-                DeltaTableWriter._drop_files(self.path, adds)
-                self._drop_cdc(cdc_actions)
-        raise DeltaCommitConflict(
-            f"could not commit after {w.max_commit_retries} tries"
-        )
+            return actions, w._written(cdc_actions + adds) + dv_paths, snap
 
-    def _drop_cdc(self, cdc_actions: list[dict]) -> None:
-        for a in cdc_actions:
-            try:
-                os.unlink(os.path.join(self.path, a["cdc"]["path"]))
-            except OSError:
-                pass
+        w._commit_loop(attempt, op="MERGE")
 
-    _DV_PROTOCOL = {
-        "protocol": {
-            "minReaderVersion": 3,
-            "minWriterVersion": 7,
-            "readerFeatures": ["deletionVectors"],
-            "writerFeatures": ["deletionVectors"],
-        }
-    }
-
-    def _merge_dv(
-        self,
-        upserts: DataFrame | None,
-        affected: DataFrame,
-        txn: tuple[str, int] | None = None,
-    ) -> None:
-        """MERGE without rewriting survivors: rows whose keys are in
-        `affected` get their file-local row indexes folded into each
-        file's deletion vector (remove + re-add of the SAME data file
-        with a widened DV — the protocol's DV-update pattern), and
-        upserts append as new files. Work is O(batch + touched-file
-        metadata), not O(table): the only full-table cost is the
-        key-probe scan, which prunes to data pages via the semi-join —
-        exactly how real engines run low-shuffle MERGE. First DV use
-        upgrades the table protocol to v3/v7 with the deletionVectors
-        feature (spec-required for any reader to see the DVs).
-        """
+    def _widen_dvs(
+        self, snap: DeltaSnapshot, hits: DataFrame
+    ) -> tuple[list[dict], list[dict], list[str]]:
+        """DV mode's removal step: fold the hit rows' file-local indexes
+        (`__rt_file`/`__rt_ri`) into each file's deletion vector. Returns
+        (removes, same-file re-adds with the widened DV, DV files
+        written). Indexes aggregate per FILE executor-side; the driver
+        streams one file's index list at a time (toLocalIterator) — peak
+        driver memory is O(rows of one data file), never O(total hits)."""
         import numpy as np
 
         from .deltadv import _dv_file_path, dv_row_indexes, write_dv_file
 
-        w = self.writer
-        for _ in range(w.max_commit_retries):
-            v = w._latest_version()
-            if v < 0:
-                if upserts is None or not upserts.head(1):
-                    return
-                adds = w._write_files(upserts)
-                birth = self._meta_actions(upserts.schema)
-                if txn is not None:
-                    birth = birth + [_txn_action(txn)]
-                try:
-                    w._commit(0, birth + adds, op="MERGE")
-                    return
-                except DeltaCommitConflict:
-                    DeltaTableWriter._drop_files(self.path, adds)
-                    continue
-
-            reader = DeltaTableReader(self.spark, self.path)
-            # meta-only probe first: partition columns + mapping mode
-            # WITHOUT materializing the add set — the full file list
-            # only lands on the driver when pruning can't apply
-            meta = reader.snapshot(_meta_only=True)
-            check_writer_protocol(meta, "merge")
-            if txn is not None and _txn_already_applied(meta, txn):
-                return
-            if upserts is not None:
-                # enforcement only — merge never evolves the schema
-                check_write_schema(meta, upserts.schema)
-            cdf = self.enable_cdf or (
-                (meta.meta_raw or {}).get("configuration") or {}
-            ).get("delta.enableChangeDataFeed") == "true"
-            pcols = list(meta.partition_columns)
-
-            # the prune is handed to snapshot() itself, which pushes it
-            # into the distributed checkpoint scan — at millions of files
-            # the driver holds only the batch's partitions' adds
-            part_filter = self._key_partition_filter(affected, pcols)
-            snap = reader.snapshot(partition_filter=part_filter)
-            probe_files = dict(snap.files)
-
-            removes, dv_adds, dv_paths = [], [], []
-            scan = None
-            if probe_files and snap.schema is not None:
-                cmap_probe = DeltaTableWriter._column_map(snap)
-                phys_of = {
-                    f.name: (
-                        cmap_probe.get(f.name, (f.name, None))[0]
-                        if cmap_probe
-                        else f.name
-                    )
-                    for f in snap.schema.fields
-                }
-                data_fields = [
-                    f for f in snap.schema.fields if f.name not in pcols
-                ]
-                # mapped tables: files carry PHYSICAL names — request
-                # them (with field ids in id mode) and alias back
-                data_schema = T.StructType(
-                    [
-                        T.StructField(
-                            phys_of[f.name],
-                            f.dataType,
-                            f.nullable,
-                            metadata=(
-                                {
-                                    "parquet.field.id": cmap_probe[
-                                        f.name
-                                    ][1]
-                                }
-                                if cmap_probe
-                                and snap.column_mapping == "id"
-                                and cmap_probe[f.name][1] is not None
-                                else None
-                            ),
-                        )
-                        for f in data_fields
-                    ]
-                )
-                if snap.column_mapping == "id":
-                    self.spark.conf.set(
-                        "spark.sql.parquet.fieldId.read.enabled", "true"
-                    )
-                ptypes = {
-                    f.name: f.dataType
-                    for f in snap.schema.fields
-                    if f.name in pcols
-                }
-                # one scan per partition-value group (files lack the
-                # partition columns — re-attach as typed literals so the
-                # key probe can include partition-key columns); mapped
-                # tables key partitionValues on physical names
-                groups: dict[tuple, list[str]] = {}
-                for p, pv in probe_files.items():
-                    key = tuple((c, pv.get(phys_of[c])) for c in pcols)
-                    groups.setdefault(key, []).append(p)
-                scan = None
-                for key, paths in sorted(
-                    groups.items(),
-                    key=lambda kv: tuple(
-                        (c, v is not None, v or "") for c, v in kv[0]
-                    ),
-                ):
-                    g = (
-                        self.spark.read.schema(data_schema)
-                        .parquet(
-                            *[os.path.join(self.path, p) for p in paths]
-                        )
-                        .withColumn(
-                            "__f",
-                            F.regexp_replace(
-                                F.col("_metadata.file_path"), "^file:", ""
-                            ),
-                        )
-                        .withColumn("__ri", F.col("_metadata.row_index"))
-                    )
-                    if cmap_probe:
-                        g = g.select(
-                            *[
-                                F.col(phys_of[f.name]).alias(f.name)
-                                for f in data_fields
-                            ],
-                            "__f",
-                            "__ri",
-                        )
-                    for col, raw in key:
-                        lit = (
-                            F.lit(None).cast(ptypes[col])
-                            if raw is None
-                            else F.lit(raw).cast(ptypes[col])
-                        )
-                        g = g.withColumn(col, lit)
-                    scan = g if scan is None else scan.unionByName(g)
-                # hit indexes aggregate per FILE executor-side; the
-                # driver streams one file's index list at a time
-                # (toLocalIterator) and folds it into that file's DV —
-                # peak driver memory is O(rows of one data file), never
-                # O(total hits), no matter how large the delete batch
-                grouped = (
-                    scan.join(affected, self.key_cols, "left_semi")
-                    .groupBy("__f")
-                    .agg(
-                        F.sort_array(F.collect_list("__ri")).alias("__ris")
-                    )
-                )
-                for r in grouped.toLocalIterator():
-                    rel = os.path.relpath(r["__f"], self.path)
-                    old_add = snap.adds_raw.get(rel) or {}
-                    idx = np.asarray(r["__ris"], dtype=np.int64)
-                    old_desc = old_add.get("deletionVector")
-                    if old_desc:
-                        idx = np.union1d(
-                            idx, dv_row_indexes(self.path, old_desc)
-                        )
-                    desc = write_dv_file(self.path, idx)
-                    dv_paths.append(_dv_file_path(self.path, desc)[0])
-                    removes.append(
-                        {"remove": {"path": rel, "dataChange": True}}
-                    )
-                    new_add = dict(old_add) or {
-                        "path": rel,
-                        "partitionValues": {},
-                        "size": os.path.getsize(
-                            os.path.join(self.path, rel)
-                        ),
-                        "modificationTime": 0,
-                        "dataChange": True,
-                    }
-                    new_add["deletionVector"] = desc
-                    new_add["dataChange"] = True
-                    dv_adds.append({"add": new_add})
-
-            new_file_adds = (
-                w._write_files(
-                    upserts, DeltaTableWriter._column_map(snap)
-                )
-                if upserts is not None and upserts.head(1)
-                else []
-            )
-            if not removes and not new_file_adds and txn is None:
-                return
-            proto = snap.protocol_raw or {}
-            needs_upgrade = dv_adds and "deletionVectors" not in (
-                proto.get("readerFeatures") or []
-            )
-            if needs_upgrade:
-                # UNION with the table's existing features — replacing
-                # the protocol outright would silently drop declared
-                # features (rowTracking, domainMetadata, ...) and break
-                # every writer that keys behavior on them. Legacy
-                # (pre-feature) protocols carry their version-implied
-                # features forward explicitly, per the spec's upgrade
-                # rule.
-                base = self._DV_PROTOCOL["protocol"]
-                old_w = set(proto.get("writerFeatures") or [])
-                if proto.get("minWriterVersion", 1) < 7 and not old_w:
-                    old_w = set(
-                        _LEGACY_WRITER_FEATURES.get(
-                            proto.get("minWriterVersion", 1)
-                        )
-                        or []
-                    )
-                old_r = set(proto.get("readerFeatures") or [])
-                if "columnMapping" in old_w:
-                    # the one legacy READER-relevant feature (mrv 2):
-                    # once on table features, readers must be told
-                    # explicitly or they'd misread physical names
-                    old_r.add("columnMapping")
-                proto = {
-                    "minReaderVersion": max(
-                        base["minReaderVersion"],
-                        proto.get("minReaderVersion", 1),
-                    ),
-                    "minWriterVersion": max(
-                        base["minWriterVersion"],
-                        proto.get("minWriterVersion", 1),
-                    ),
-                    "readerFeatures": sorted(
-                        set(base["readerFeatures"]) | old_r
-                    ),
-                    "writerFeatures": sorted(
-                        set(base["writerFeatures"]) | old_w
-                    ),
-                }
-            proto_actions = [{"protocol": proto}] if needs_upgrade else []
-            cdc_actions: list[dict] = []
-            if cdf and removes and scan is not None:
-                # DV-update commits express row-level changes the adds
-                # can't describe — record them as cdc files (inserts
-                # included: cdc replaces adds for change readers).
-                # Preimages come from the DV-APPLIED read, NOT the raw
-                # probe scan: the scan still yields rows older DVs
-                # already deleted, and treating those as live would
-                # mislabel a re-upsert of a deleted key as an update
-                # instead of an insert (with a resurrected preimage).
-                pre_src = reader.read(partition_filter=part_filter)
-                pre = pre_src.join(
-                    F.broadcast(affected), self.key_cols, "left_semi"
-                )
-                cdc_actions = w._write_cdc_files(
-                    self._cdf_rows(pre, upserts),
-                    DeltaTableWriter._column_map(snap),
-                )
-                up = self._cdf_protocol_action(proto)
-                if up:
-                    proto_actions = up  # one action carrying DV + CDF
-            actions = (
-                proto_actions
-                + cdc_actions
-                + removes
-                + dv_adds
-                + new_file_adds
-            )
-            if txn is not None:
-                # empty data delta still advances the watermark (see
-                # the rewrite-mode comment)
-                actions = [_txn_action(txn)] + actions
-            try:
-                w._commit(v + 1, actions, op="MERGE", snap=snap)
-                return
-            except DeltaCommitConflict:
-                DeltaTableWriter._drop_files(self.path, new_file_adds)
-                self._drop_cdc(cdc_actions)
-                for p in dv_paths:
-                    try:
-                        os.unlink(p)
-                    except OSError:
-                        pass
-        raise DeltaCommitConflict(
-            f"could not commit after {w.max_commit_retries} tries"
+        removes, dv_adds, dv_paths = [], [], []
+        grouped = hits.groupBy("__rt_file").agg(
+            F.sort_array(F.collect_list("__rt_ri")).alias("__ris")
         )
+        for r in grouped.toLocalIterator():
+            rel = os.path.relpath(r["__rt_file"], self.path)
+            old_add = snap.adds_raw.get(rel) or {}
+            idx = np.asarray(r["__ris"], dtype=np.int64)
+            old_desc = old_add.get("deletionVector")
+            if old_desc:
+                idx = np.union1d(idx, dv_row_indexes(self.path, old_desc))
+            desc = write_dv_file(self.path, idx)
+            dv_paths.append(_dv_file_path(self.path, desc)[0])
+            removes.append({"remove": {"path": rel, "dataChange": True}})
+            new_add = dict(old_add) or {
+                "path": rel,
+                "partitionValues": {},
+                "size": os.path.getsize(os.path.join(self.path, rel)),
+                "modificationTime": 0,
+                "dataChange": True,
+            }
+            new_add["deletionVector"] = desc
+            new_add["dataChange"] = True
+            dv_adds.append({"add": new_add})
+        return removes, dv_adds, dv_paths
+
+    @staticmethod
+    def _dv_protocol(proto: dict) -> dict:
+        """`proto` upgraded to declare deletionVectors (reader v3,
+        writer v7). UNION with the table's existing features — replacing
+        the protocol outright would silently drop declared features
+        (rowTracking, domainMetadata, ...) and break every writer that
+        keys behavior on them. Legacy (pre-feature) protocols carry
+        their version-implied features forward explicitly, per the
+        spec's upgrade rule."""
+        old_w = set(proto.get("writerFeatures") or [])
+        if proto.get("minWriterVersion", 1) < 7 and not old_w:
+            old_w = set(
+                _LEGACY_WRITER_FEATURES.get(proto.get("minWriterVersion", 1))
+                or []
+            )
+        old_r = set(proto.get("readerFeatures") or [])
+        if "columnMapping" in old_w:
+            # the one legacy READER-relevant feature (mrv 2): once on
+            # table features, readers must be told explicitly or they'd
+            # misread physical names
+            old_r.add("columnMapping")
+        return {
+            "minReaderVersion": max(3, proto.get("minReaderVersion", 1)),
+            "minWriterVersion": max(7, proto.get("minWriterVersion", 1)),
+            "readerFeatures": sorted({"deletionVectors"} | old_r),
+            "writerFeatures": sorted({"deletionVectors"} | old_w),
+        }
 
     def upsert(self, batch: DataFrame, order_cols=None) -> None:
         if order_cols:
