@@ -33,10 +33,11 @@ this engine can read real Delta tables with MERGE/DELETE history.
 
 Scale note: DVs are bitmap-compressed and per-file; engines decode them
 centrally when planning a scan (the kernel ships decoded selections to
-tasks). We decode on the driver and anti-join on (file, row_index) —
-`sizeInBytes` is bounded per file and vacuum/optimize rewrites heavily
-deleted files, so the pair set stays small relative to data. The join is
-a broadcast when small, shuffle anti-join otherwise.
+tasks). Here the driver ships only each file's DV descriptor; executors
+decode the bitmaps (`mapInPandas` in DeltaTableReader._read_with_dvs)
+into (file, row_index) rows that anti-join the scan. The join is a
+broadcast when the descriptors' total cardinality is small, a shuffle
+anti-join otherwise.
 """
 
 from __future__ import annotations

@@ -417,16 +417,66 @@ def default_literal(value, stype):
     return F.lit(value).cast(stype)
 
 
-def _unlink_quietly(path: str) -> bool:
-    """Best-effort unlink; True = gone (used to drop zero-row delete
-    files from a distributed position-delete write)."""
+def _with_write_defaults(df: DataFrame, ice_fields: list[dict]) -> DataFrame:
+    """v3 `write-default`: the spec requires WRITERS to materialize the
+    default into new data — a file written without the column would
+    wrongly surface initial-default (or NULL) to readers."""
+    have = set(df.columns)
+    for f in ice_fields:
+        wd = f.get("write-default")
+        if wd is not None and f["name"] not in have:
+            df = df.withColumn(
+                f["name"],
+                default_literal(
+                    single_value_from_json(f["type"], wd),
+                    iceberg_type_to_spark(f["type"]),
+                ),
+            )
+    return df
+
+
+def _unlink_quietly(paths) -> None:
+    """Best-effort unlink of files no commit references."""
+    for p in paths:
+        try:
+            os.unlink(p)
+        except OSError:
+            pass
+
+
+def _parquet_rows(path: str) -> int:
+    """A parquet file's footer row count. pyarrow predates the parquet
+    VARIANT logical type and refuses such footers wholesale; the stdlib
+    thrift-compact parser recovers num_rows (a wrong record_count would
+    corrupt manifests)."""
     try:
-        os.unlink(path)
-        return True
-    except OSError:
-        # never committed either way, but an orphaned empty delete
-        # file left in data/ must be observable to the caller
-        return False
+        import pyarrow.parquet as papq
+
+        return papq.read_metadata(path).num_rows
+    except Exception:
+        from deimos_spark.schemas.thriftcompact import read_footer
+
+        return read_footer(path)[0]
+
+
+def _avro_map(v) -> dict:
+    """A manifest map field (`lower_bounds`/`upper_bounds`) as a dict:
+    Avro encodes maps with non-string keys as key/value record arrays."""
+    if not v:
+        return {}
+    if isinstance(v, dict):
+        return v
+    return {e["key"]: e["value"] for e in v}
+
+
+def _current_schema(md: dict | None) -> dict | None:
+    """The current schema of table metadata `md` (None for no table)."""
+    known = (md or {}).get("schemas") or []
+    cur_sid = (md or {}).get("current-schema-id", 0)
+    return next(
+        (s for s in known if s.get("schema-id") == cur_sid),
+        known[0] if known else None,
+    )
 
 
 # ----------------------------------------------------------------- reader
@@ -915,15 +965,8 @@ class IcebergTableReader:
         box only when BOTH pieces are."""
         from deimos_spark.functions.geo import parse_wkb_point
 
-        def _as_map(v):
-            if not v:
-                return {}
-            if isinstance(v, dict):
-                return v
-            return {e["key"]: e["value"] for e in v}
-
-        lows = _as_map(df_rec.get("lower_bounds"))
-        highs = _as_map(df_rec.get("upper_bounds"))
+        lows = _avro_map(df_rec.get("lower_bounds"))
+        highs = _avro_map(df_rec.get("upper_bounds"))
         for fid, ((xmin, ymin, xmax, ymax), kind) in gprune.items():
             lb, ub = lows.get(fid), highs.get(fid)
             if not lb or not ub:
@@ -950,15 +993,8 @@ class IcebergTableReader:
             single_value_deserialize,
         )
 
-        def _as_map(v):
-            if not v:
-                return {}
-            if isinstance(v, dict):
-                return v
-            return {e["key"]: e["value"] for e in v}
-
-        lows = _as_map(df_rec.get("lower_bounds"))
-        highs = _as_map(df_rec.get("upper_bounds"))
+        lows = _avro_map(df_rec.get("lower_bounds"))
+        highs = _avro_map(df_rec.get("upper_bounds"))
         for fid, (lo, hi, tkey) in sprune.items():
             mn = single_value_deserialize(tkey, lows.get(fid))
             mx = single_value_deserialize(tkey, highs.get(fid))
@@ -2696,10 +2732,10 @@ class IcebergTableWriter:
 
     Commit protocol: the new metadata file is claimed with the same
     temp + hard-link put-if-absent the Delta writer uses (HadoopTables'
-    filesystem-atomic rename shape); losers raise IcebergCommitConflict
-    and the caller's state is re-derived on retry. Scope is honest:
-    flat primitive schemas; append + overwrite here, keyed MERGE via
-    position deletes in `IcebergKeyedTable` below.
+    filesystem-atomic rename shape); losers raise IcebergCommitConflict.
+    append/overwrite/add_files commit once and leave a loser's files for
+    expire_snapshots; keyed writes (`IcebergKeyedTable` below) retry
+    through `_commit_loop`, which unlinks a lost attempt's files.
     """
 
     _PARTITION_AVRO = _PARTITION_AVRO
@@ -2739,6 +2775,7 @@ class IcebergTableWriter:
             )
         self.spark = spark
         self.path = path
+        self.max_commit_retries = max_commit_retries
         # spec sort orders (identity asc nulls-first): data range-
         # clusters on these columns before writing, so per-file
         # min/max bounds become disjoint and stats_filter/other
@@ -2785,7 +2822,9 @@ class IcebergTableWriter:
         self, df: DataFrame, pre_arranged: bool = False
     ) -> list[tuple[str, int, int, dict]]:
         """df → parquet files under data/;
-        [(abs_path, rows, bytes, partition_values)].
+        [(abs_path, rows, bytes, partition_values)]. A file whose footer
+        reports 0 rows is dropped: an empty df writes nothing, so callers
+        read emptiness from the result.
 
         Partitioned writes compute each partition field's TRANSFORMED
         value into a throwaway `__ice_pv_*` column for Spark's
@@ -2866,6 +2905,10 @@ class IcebergTableWriter:
             for f in sorted(names):
                 if not f.endswith(".parquet"):
                     continue
+                src = os.path.join(dirpath, f)
+                rows = _parquet_rows(src)
+                if rows == 0:
+                    continue  # left in staging, removed below
                 subdir = (
                     os.path.join(
                         self.data_dir,
@@ -2884,21 +2927,7 @@ class IcebergTableWriter:
                 )
                 os.makedirs(subdir, exist_ok=True)
                 dest = os.path.join(subdir, f"{uid}-{i:05d}.parquet")
-                os.rename(os.path.join(dirpath, f), dest)
-                try:
-                    import pyarrow.parquet as papq
-
-                    rows = papq.read_metadata(dest).num_rows
-                except Exception:
-                    # pyarrow predates the parquet VARIANT logical
-                    # type and refuses such footers wholesale; the
-                    # stdlib thrift-compact parser recovers num_rows
-                    # (a wrong record_count would corrupt manifests)
-                    from deimos_spark.schemas.thriftcompact import (
-                        read_footer,
-                    )
-
-                    rows = read_footer(dest)[0]
+                os.rename(src, dest)
                 out.append((dest, rows, os.path.getsize(dest), pvals))
                 i += 1
         shutil.rmtree(staging, ignore_errors=True)
@@ -2929,8 +2958,49 @@ class IcebergTableWriter:
 
     # ----------------------------------------------------------- write API
 
-    def _snapshot_commit(
+    def _snapshot_commit(self, df: DataFrame | None, overwrite: bool, **kw):
+        """One snapshot (see _snapshot) committed on the latest metadata
+        without a retry: a loser raises IcebergCommitConflict and its
+        files stay for expire_snapshots (append, overwrite, add_files)."""
+        mv, md = self._current()
+        new_md, _ = self._snapshot(md, df, overwrite, **kw)
+        self._commit(mv + 1, new_md)
+
+    def _commit_loop(self, attempt) -> None:
+        """The one optimistic-commit loop (the shape of
+        DeltaTableWriter._commit_loop): read the latest metadata
+        `(mv, md)`, let `attempt(mv, md)` derive its commit against it —
+        `(_snapshot keyword arguments, files it wrote)`, or None when
+        there is nothing to commit — build the snapshot on `md` and claim
+        v{mv+1}. Anything committed after the attempt's reads collides on
+        that version file; the lost attempt's files (data, delete and
+        puffin files, the snapshot's manifests and manifest list) are
+        unlinked and the attempt re-derives against the winner's
+        metadata. A snapshot refused by schema enforcement unlinks the
+        attempt's files too."""
+        for _ in range(self.max_commit_retries):
+            mv, md = self._current()
+            out = attempt(mv, md)
+            if out is None:
+                return
+            commit, written = out
+            try:
+                new_md, meta = self._snapshot(md, **commit)
+            except IcebergProtocolError:
+                _unlink_quietly(written)  # refused: no commit names them
+                raise
+            try:
+                self._commit(mv + 1, new_md)
+                return
+            except IcebergCommitConflict:
+                _unlink_quietly(written + meta)
+        raise IcebergCommitConflict(
+            f"could not commit after {self.max_commit_retries} tries"
+        )
+
+    def _snapshot(
         self,
+        md: dict | None,
         df: DataFrame | None,
         overwrite: bool,
         delete_files: list[tuple[str, int, int, dict]] | None = None,
@@ -2942,16 +3012,19 @@ class IcebergTableWriter:
         merge_schema: bool = False,
         summary_extra: dict[str, str] | None = None,
         pre_written: list[tuple[str, int, int, dict]] | None = None,
-        base: tuple[int, dict | None] | None = None,
         pre_arranged: bool = False,
-    ) -> None:
-        """One snapshot commit. `df` → new data files (None for
-        delete-only commits, with `schema_override` supplying the table
-        schema); `pre_written` (with df=None) registers ALREADY-EXISTING
-        parquet files as this snapshot's data files — the add_files
-        migration path (manifest entries, footer bounds, and sequence
-        numbers are built identically to written files); `delete_files` → already-written position-delete
-        parquet files recorded in their own content=1 manifest;
+    ) -> tuple[dict, list[str]]:
+        """One snapshot on top of metadata `md` → (the new metadata, the
+        files written for it: data files, manifests, manifest list); the
+        caller commits it as the next version. `df` → new data files
+        (None for delete-only commits, with `schema_override` supplying
+        the table schema); `pre_written` (with df=None) registers
+        ALREADY-WRITTEN parquet files as this snapshot's data files —
+        merge upserts and the add_files migration path (manifest
+        entries, footer bounds, and sequence numbers are built
+        identically to written files); `delete_files` → already-written
+        position-delete parquet files recorded in their own content=1
+        manifest;
         `eq_delete_files` → EQUALITY-delete parquet files (rows = key
         values, columns = `eq_key_cols`) recorded content=2 with
         `equality_ids` resolved from the schema — they share the new
@@ -2972,13 +3045,6 @@ class IcebergTableWriter:
 
         from deimos_spark.schemas.avro_ocf import ocf_write
 
-        # `base` pins the commit to a caller-derived (version, metadata)
-        # pair: the commit targets v{base+1} unconditionally, so anything
-        # committed after the caller's probe scan collides on the version
-        # file (put-if-absent hard link) and raises IcebergCommitConflict
-        # instead of silently building on state the caller never saw
-        mv, md = base if base is not None else self._current()
-        delete_files = delete_files or []
         # never downgrade an existing v3 table; upgrade v2→3 when asked
         fv = max(
             self.format_version,
@@ -2988,11 +3054,11 @@ class IcebergTableWriter:
             raise IcebergProtocolError(
                 "deletion vectors require format-version 3"
             )
-        _batch = df.schema if df is not None else schema_override
-        if _batch is not None and fv < 3:
+        batch_struct = df.schema if df is not None else schema_override
+        if batch_struct is not None and fv < 3:
             bad = [
                 f.name
-                for f in _batch.fields
+                for f in batch_struct.fields
                 if "variant" in f.dataType.simpleString()
             ]
             if bad:
@@ -3005,15 +3071,7 @@ class IcebergTableWriter:
         snap_id = seq  # sequential ids: deterministic and spec-legal
         now = int(_time.time() * 1000)
 
-        batch_struct = df.schema if df is not None else schema_override
-        existing_schema = None
-        if md is not None:
-            known = md.get("schemas") or []
-            cur_sid = md.get("current-schema-id", 0)
-            existing_schema = next(
-                (s for s in known if s.get("schema-id") == cur_sid),
-                known[0] if known else None,
-            )
+        existing_schema = _current_schema(md)
         if existing_schema is None:
             ice_fields = spark_schema_to_iceberg(
                 batch_struct, getattr(self, "geo_types", None)
@@ -3094,8 +3152,7 @@ class IcebergTableWriter:
                 ]
         id_by_name = {f["name"]: f["id"] for f in ice_fields}
         spark_types = {
-            f.name: f.dataType.simpleString()
-            for f in (df.schema if df is not None else schema_override).fields
+            f.name: f.dataType.simpleString() for f in batch_struct.fields
         }
         from deimos_spark.operators.iceberg_transforms import (
             WRITABLE_SOURCES,
@@ -3116,30 +3173,15 @@ class IcebergTableWriter:
                     f"{WRITABLE_SOURCES.get(pf.kind, ())})"
                 )
 
-        if df is not None:
-            # v3 `write-default`: the spec requires WRITERS to
-            # materialize the default into new data — a file written
-            # without the column would wrongly surface initial-default
-            # (or NULL) to readers instead
-            from pyspark.sql import functions as F
-
-            have = set(df.columns)
-            for f in ice_fields:
-                wd = f.get("write-default")
-                if wd is not None and f["name"] not in have:
-                    df = df.withColumn(
-                        f["name"],
-                        default_literal(
-                            single_value_from_json(f["type"], wd),
-                            iceberg_type_to_spark(f["type"]),
-                        ),
-                    )
-
         files = (
-            self._write_data_files(df, pre_arranged=pre_arranged)
+            self._write_data_files(
+                _with_write_defaults(df, ice_fields),
+                pre_arranged=pre_arranged,
+            )
             if df is not None
             else list(pre_written or [])
         )
+        written = [p for p, _, _, _ in files] if df is not None else []
         uid = uuid.uuid4().hex[:12]
 
         entry_schema = _MANIFEST_ENTRY_SCHEMA
@@ -3228,56 +3270,29 @@ class IcebergTableWriter:
                 soid = hit["order-id"]
             default_so = soid
 
-        def _entry(p, rows, size, pvals):
+        def _data_file(p, rows, size, pvals):
             nonlocal row_cursor
             lower, upper = _file_column_bounds(p, ice_fields)
-            e = {
-                "status": 1,  # ADDED
-                "snapshot_id": snap_id,
-                "sequence_number": seq,
-                "file_sequence_number": seq,
-                "data_file": {
-                    "content": 0,
-                    "file_path": f"file://{p}",
-                    **({"partition": pvals} if self.partition_fields else {}),
-                    "file_format": "PARQUET",
-                    "record_count": rows,
-                    "file_size_in_bytes": size,
-                    "lower_bounds": lower,
-                    "upper_bounds": upper,
-                    "sort_order_id": soid,
-                },
+            d = {
+                "content": 0,
+                "file_path": f"file://{p}",
+                **({"partition": pvals} if self.partition_fields else {}),
+                "file_format": "PARQUET",
+                "record_count": rows,
+                "file_size_in_bytes": size,
+                "lower_bounds": lower,
+                "upper_bounds": upper,
+                "sort_order_id": soid,
             }
             if row_cursor is not None:
-                e["data_file"]["first_row_id"] = row_cursor
+                d["first_row_id"] = row_cursor
                 row_cursor += rows
-            return e
+            return d
 
-        entries = [_entry(*f) for f in files]
-        added_rows = sum(r for _, r, _, _ in files)
-
-        def _manifest_row(mpath, content, n_files, n_rows, partitions=None):
-            return {
-                "manifest_path": f"file://{mpath}",
-                "manifest_length": os.path.getsize(mpath),
-                "partition_spec_id": 0,
-                "content": content,
-                "sequence_number": seq,
-                "min_sequence_number": seq,
-                "added_snapshot_id": snap_id,
-                "added_files_count": n_files,
-                "existing_files_count": 0,
-                "deleted_files_count": 0,
-                "added_rows_count": n_rows,
-                "existing_rows_count": 0,
-                "deleted_rows_count": 0,
-                "partitions": partitions,
-            }
-
-        def _field_summaries(entries_):
+        def _field_summaries(data_files):
             """Spec field-507 summaries: per partition field (spec
             order), null presence + single-value-serialized min/max of
-            the entries' transformed partition tuples. Bounds omitted
+            the files' transformed partition tuples. Bounds omitted
             (None) for unserializable values — skipping disabled, never
             wrong."""
             if not self.partition_fields:
@@ -3292,8 +3307,8 @@ class IcebergTableWriter:
                     result_spark_type(pf, spark_types[pf.source])
                 ]
                 vals = [
-                    (e["data_file"].get("partition") or {}).get(pf.name)
-                    for e in entries_
+                    (d.get("partition") or {}).get(pf.name)
+                    for d in data_files
                 ]
                 nn = [v for v in vals if v is not None]
                 out.append(
@@ -3311,43 +3326,69 @@ class IcebergTableWriter:
             return out
 
         manifests = []
-        if entries:
-            mpath = os.path.join(self.meta_dir, f"m-{uid}.avro")
-            ocf_write(mpath, entry_schema, entries)
+
+        def _add_manifest(prefix, schema, content, data_files, partitions=None):
+            """One manifest of ADDED entries: each kind of file gets its
+            own, as the manifest list's `content` is data(0) XOR
+            deletes(1)."""
+            mpath = os.path.join(self.meta_dir, f"{prefix}-{uid}.avro")
+            ocf_write(
+                mpath,
+                schema,
+                [
+                    {
+                        "status": 1,  # ADDED
+                        "snapshot_id": snap_id,
+                        "sequence_number": seq,
+                        "file_sequence_number": seq,
+                        "data_file": d,
+                    }
+                    for d in data_files
+                ],
+            )
+            written.append(mpath)
             manifests.append(
-                _manifest_row(
-                    mpath, 0, len(files), added_rows,
-                    partitions=_field_summaries(entries),
-                )
+                {
+                    "manifest_path": f"file://{mpath}",
+                    "manifest_length": os.path.getsize(mpath),
+                    "partition_spec_id": 0,
+                    "content": content,
+                    "sequence_number": seq,
+                    "min_sequence_number": seq,
+                    "added_snapshot_id": snap_id,
+                    "added_files_count": len(data_files),
+                    "existing_files_count": 0,
+                    "deleted_files_count": 0,
+                    "added_rows_count": sum(
+                        d["record_count"] for d in data_files
+                    ),
+                    "existing_rows_count": 0,
+                    "deleted_rows_count": 0,
+                    "partitions": partitions,
+                }
+            )
+
+        def _delete_file(p, rows, size, content, **extra):
+            return {
+                "content": content,
+                "file_path": f"file://{p}",
+                "file_format": "PARQUET",
+                "record_count": rows,
+                "file_size_in_bytes": size,
+                **extra,
+            }
+
+        if files:
+            data_files = [_data_file(*f) for f in files]
+            _add_manifest(
+                "m", entry_schema, 0, data_files, _field_summaries(data_files)
             )
         if delete_files:
-            # position-delete files get their OWN manifest: the spec's
-            # manifest-list `content` field is data(0) XOR deletes(1)
-            del_entries = [
-                {
-                    "status": 1,
-                    "snapshot_id": snap_id,
-                    "sequence_number": seq,
-                    "file_sequence_number": seq,
-                    "data_file": {
-                        "content": 1,
-                        "file_path": f"file://{p}",
-                        "file_format": "PARQUET",
-                        "record_count": rows,
-                        "file_size_in_bytes": size,
-                    },
-                }
-                for p, rows, size, _ in delete_files
-            ]
-            dpath = os.path.join(self.meta_dir, f"d-{uid}.avro")
-            ocf_write(dpath, _MANIFEST_ENTRY_SCHEMA, del_entries)
-            manifests.append(
-                _manifest_row(
-                    dpath,
-                    1,
-                    len(delete_files),
-                    sum(r for _, r, _, _ in delete_files),
-                )
+            _add_manifest(
+                "d",
+                _MANIFEST_ENTRY_SCHEMA,
+                1,
+                [_delete_file(p, r, n, 1) for p, r, n, _ in delete_files],
             )
         if eq_delete_files:
             if not eq_key_cols:
@@ -3369,45 +3410,24 @@ class IcebergTableWriter:
                     "field-id": 135,
                 }
             )
-            eq_entries = [
-                {
-                    "status": 1,
-                    "snapshot_id": snap_id,
-                    "sequence_number": seq,
-                    "file_sequence_number": seq,
-                    "data_file": {
-                        "content": 2,
-                        "file_path": f"file://{p}",
-                        "file_format": "PARQUET",
-                        "record_count": rows,
-                        "file_size_in_bytes": size,
-                        "equality_ids": eq_ids,
-                    },
-                }
-                for p, rows, size, _ in eq_delete_files
-            ]
-            epath = os.path.join(self.meta_dir, f"e-{uid}.avro")
-            ocf_write(epath, eq_schema, eq_entries)
-            manifests.append(
-                _manifest_row(
-                    epath,
-                    1,
-                    len(eq_delete_files),
-                    sum(r for _, r, _, _ in eq_delete_files),
-                )
+            _add_manifest(
+                "e",
+                eq_schema,
+                1,
+                [
+                    _delete_file(p, r, n, 2, equality_ids=eq_ids)
+                    for p, r, n, _ in eq_delete_files
+                ],
             )
         if dv_entries:
-            dv_manifest_entries = [
-                {
-                    "status": 1,
-                    "snapshot_id": snap_id,
-                    "sequence_number": seq,
-                    "file_sequence_number": seq,
-                    "data_file": {
+            _add_manifest(
+                "dv",
+                _dv_manifest_entry_schema(),
+                1,
+                [
+                    {
                         "content": 1,
-                        "file_path": d["puffin_path"]
-                        if d["puffin_path"].startswith("file://")
-                        else f"file://{d['puffin_path']}",
+                        "file_path": f"file://{self._local_path(d['puffin_path'])}",
                         "file_format": "PUFFIN",
                         "record_count": d["cardinality"],
                         "file_size_in_bytes": os.path.getsize(
@@ -3418,21 +3438,9 @@ class IcebergTableWriter:
                         "referenced_data_file": d["referenced_data_file"],
                         "content_offset": d["offset"],
                         "content_size_in_bytes": d["size"],
-                    },
-                }
-                for d in dv_entries
-            ]
-            dpath = os.path.join(self.meta_dir, f"dv-{uid}.avro")
-            ocf_write(
-                dpath, _dv_manifest_entry_schema(), dv_manifest_entries
-            )
-            manifests.append(
-                _manifest_row(
-                    dpath,
-                    1,
-                    len(dv_manifest_entries),
-                    sum(d["cardinality"] for d in dv_entries),
-                )
+                    }
+                    for d in dv_entries
+                ],
             )
         if not overwrite and md is not None:
             # append: carry the previous snapshot's manifests forward
@@ -3450,7 +3458,7 @@ class IcebergTableWriter:
                 )
                 if drop_dv_for:
                     prev_manifests = self._rewrite_superseded_dvs(
-                        prev_manifests, drop_dv_for, uid
+                        prev_manifests, drop_dv_for, uid, written
                     )
                 defaults = {
                     "partition_spec_id": 0,
@@ -3474,6 +3482,7 @@ class IcebergTableWriter:
                     manifests.append(pm)
         mlpath = os.path.join(self.meta_dir, f"snap-{snap_id}-{uid}.avro")
         ocf_write(mlpath, _MANIFEST_FILE_SCHEMA, manifests)
+        written.append(mlpath)
 
         snapshot = {
             "snapshot-id": snap_id,
@@ -3537,20 +3546,21 @@ class IcebergTableWriter:
             "metadata-log": [],
         }
         if fv >= 3:
-            new_md["next-row-id"] = (
-                row_cursor
-                if row_cursor is not None
-                else (md or {}).get("next-row-id", 0)
-            )
-        self._commit(mv + 1, new_md)
+            new_md["next-row-id"] = row_cursor
+        return new_md, written
 
     def _rewrite_superseded_dvs(
-        self, prev_manifests: list[dict], drop_dv_for: set[str], uid: str
+        self,
+        prev_manifests: list[dict],
+        drop_dv_for: set[str],
+        uid: str,
+        written: list[str],
     ) -> list[dict]:
         """Carry-forward filter for the one-live-DV-per-file rule:
         delete manifests holding PUFFIN entries whose
         referenced_data_file is being re-DV'd this commit are rewritten
-        without them (dropped entirely when nothing survives). Opens
+        without them (dropped entirely when nothing survives); the
+        rewritten manifests' paths are appended to `written`. Opens
         only content=1 manifests — at scale that is the bounded delete-
         manifest set, and optimize() resets it."""
         from deimos_spark.schemas.avro_ocf import ocf_read, ocf_write
@@ -3579,6 +3589,7 @@ class IcebergTableWriter:
                 continue  # every entry superseded: drop the manifest
             rpath = os.path.join(self.meta_dir, f"dvr-{uid}-{i}.avro")
             ocf_write(rpath, _dv_manifest_entry_schema(), survivors)
+            written.append(rpath)
             npm = dict(pm)
             npm["manifest_path"] = f"file://{rpath}"
             npm["manifest_length"] = os.path.getsize(rpath)
@@ -3620,8 +3631,6 @@ class IcebergTableWriter:
                 "a partitioned migration needs per-file partition "
                 "values this procedure does not infer"
             )
-        import pyarrow.parquet as papq
-
         files: list[tuple[str, int, int, dict]] = []
         for n in sorted(os.listdir(src_dir)):
             full = os.path.join(src_dir, n)
@@ -3637,14 +3646,7 @@ class IcebergTableWriter:
                 continue
             if not n.endswith(".parquet"):
                 continue
-            try:
-                nrows = papq.read_metadata(full).num_rows
-            except Exception:
-                # variant-bearing footers: see _write_data_files
-                from deimos_spark.schemas.thriftcompact import read_footer
-
-                nrows = read_footer(full)[0]
-            files.append((full, nrows, os.path.getsize(full), {}))
+            files.append((full, _parquet_rows(full), os.path.getsize(full), {}))
         if not files:
             raise IcebergProtocolError(
                 f"add_files: no parquet files under {src_dir}"
@@ -3818,14 +3820,17 @@ class IcebergTableWriter:
 
 
 class IcebergKeyedTable:
-    """MERGE semantics over an Iceberg v2 table via POSITION DELETES —
-    the Iceberg twin of `DeltaKeyedTable(use_dvs=True)`: deletes land as
-    (file_path, pos) delete files instead of rewriting survivors, so a
-    merge costs O(batch + delete-file metadata), not O(table). This is
-    the low-shuffle MERGE-ON-READ shape real engines (Spark/Flink
-    Iceberg writers) emit; any spec-conforming reader — ours included —
-    applies the deletes at scan time. Unpartitioned tables only (the
-    writer's keyed scope, matching the Delta DV merge gate).
+    """MERGE semantics over an Iceberg table, merge-on-read — the
+    Iceberg twin of `DeltaKeyedTable(use_dvs=True)`: a merge appends its
+    upserts as new data files and records its deletes in delete files
+    instead of rewriting survivors, so it costs O(batch + delete-file
+    metadata), not O(table). This is the low-shuffle shape real engines
+    (Spark/Flink Iceberg writers) emit; any spec-conforming reader —
+    ours included — applies the deletes at scan time. `delete_mode`
+    picks the on-disk delete format outside readers must support:
+    "position" (v2 position-delete files), "equality" (v2
+    equality-delete files) or "dv" (v3 Puffin deletion vectors).
+    `partition_by` is accepted in every mode.
 
     `optimize()` compacts: rewrites current live rows as a fresh
     overwrite snapshot, after which accumulated delete files stop
@@ -3848,7 +3853,6 @@ class IcebergKeyedTable:
         self.spark = spark
         self.path = path
         self.key_cols = list(key_cols)
-        self.max_commit_retries = max_commit_retries
         # "position": probe-scan for row positions, write (path, pos)
         # delete files — read-side cost is one anti-join, merge pays an
         # O(table) key-probe scan. "equality": write just the batch's
@@ -3873,6 +3877,7 @@ class IcebergKeyedTable:
         self.writer = IcebergTableWriter(
             spark,
             path,
+            max_commit_retries=max_commit_retries,
             partition_by=partition_by,
             format_version=3 if delete_mode == "dv" else 2,
         )
@@ -3911,31 +3916,27 @@ class IcebergKeyedTable:
         predicates on ANY clustered column via the reader's
         stats_filter — where a linear sort_by only prunes its leading
         column."""
-        for _ in range(self.max_commit_retries):
-            mv, md = self.writer._current()
-            if md is None:
-                return
-            reader = IcebergTableReader(self.spark, self.path, pin_version=mv)
-            try:
-                current = reader.read()
-                if zorder_by:
-                    from deimos_spark.operators import layout
 
-                    current = layout.cluster_arrange_or_linear(
-                        current, list(zorder_by), n_files=n_files,
-                        curve=curve,
-                    )
-                self.writer._snapshot_commit(
-                    current, overwrite=True, base=(mv, md),
-                    pre_arranged=bool(zorder_by),
+        def attempt(mv, md):
+            if md is None:
+                return None
+            current = IcebergTableReader(
+                self.spark, self.path, pin_version=mv
+            ).read()
+            if zorder_by:
+                from deimos_spark.operators import layout
+
+                current = layout.cluster_arrange_or_linear(
+                    current, list(zorder_by), n_files=n_files, curve=curve,
                 )
-                return
-            except IcebergCommitConflict:
-                continue
-        raise IcebergCommitConflict(
-            f"optimize: could not commit after "
-            f"{self.max_commit_retries} tries"
-        )
+            commit = {
+                "df": current,
+                "overwrite": True,
+                "pre_arranged": bool(zorder_by),
+            }
+            return commit, []
+
+        self.writer._commit_loop(attempt)
 
     # snapshot-summary keys for idempotent merges (the Flink-Iceberg
     # pattern: Iceberg has no txn action, so the app's watermark rides
@@ -3960,15 +3961,29 @@ class IcebergKeyedTable:
         delete_keys: DataFrame | None = None,
         txn: tuple[str, int] | None = None,
     ) -> None:
-        """`txn=(app_id, version)` makes the merge IDEMPOTENT — the
+        """Upsert `upserts` and delete `delete_keys` by key in ONE
+        snapshot. Every delete mode runs one body through the writer's
+        commit loop: the txn watermark check, one reader pinned to the
+        attempt's metadata version, one write of the upserts and one
+        commit. Only the delete artifact differs by mode (see
+        _delete_artifact). A table with no snapshot has no live files,
+        so there is nothing to delete from.
+
+        Empty batches: a zero-row output file is never committed. A
+        merge that changes nothing commits nothing — unless it carries
+        `txn`, whose watermark must still advance. The first merge of a
+        table creates it from the upserts' schema even when they are
+        empty; a delete-only merge before the first commit is a no-op.
+        Equality mode never scans the table, so its key files commit
+        whether or not they hit a live row.
+
+        `txn=(app_id, version)` makes the merge IDEMPOTENT — the
         Iceberg flavor of Delta's txn action: the watermark rides in
         each committed snapshot's summary (the public Flink-Iceberg
         sink pattern) and a replayed (app_id, version) at or below the
         recorded maximum is a silent no-op. Caveat (same as Flink's):
         expire_snapshots retention must exceed the replay window, or an
         app whose last commit expired can be replayed."""
-        from pyspark.sql import functions as F
-
         summary_extra = None
         if txn is not None:
             summary_extra = {
@@ -3984,230 +3999,163 @@ class IcebergKeyedTable:
                 )
         if affected is None:
             return
+        w = self.writer
 
-        for _ in range(self.max_commit_retries):
-            # ONE metadata read anchors the whole attempt: the txn
-            # watermark check, the probe scan (pinned reader below),
-            # and the commit target (base=) all see the same version.
-            # Anything committed in between collides on v{mv+1} and
-            # retries with fresh state — without the pin, a commit
-            # landing between probe and commit made the stale deletes
-            # land silently (lost update, caught by the r12 fuzz).
-            mv, md = self.writer._current()
-            base = (mv, md)
+        def attempt(mv, md):
+            # the attempt's metadata anchors it all: the txn check, the
+            # probe scan (reader pinned to mv) and the commit target
+            # (v{mv+1}). A commit landing in between collides on that
+            # version file and the loop retries on fresh state — without
+            # the pin, stale deletes landed silently (a lost update,
+            # caught by the r12 fuzz).
             if txn is not None and self._txn_watermark(
                 md, str(txn[0])
             ) >= int(txn[1]):
-                return
-            if md is None or not md.get("snapshots"):
-                if upserts is None or not upserts.head(1):
-                    return
-                try:
-                    self.writer._snapshot_commit(
-                        upserts,
-                        overwrite=False,
-                        summary_extra=summary_extra,
-                        base=base,
-                    )
-                    return
-                except IcebergCommitConflict:
-                    continue
-
-            if self.delete_mode == "equality":
+                return None
+            if md is None and upserts is None:
+                return None  # no table to delete from, no schema to create
+            commit = {
+                "df": None, "overwrite": False, "summary_extra": summary_extra
+            }
+            written: list[str] = []
+            if upserts is not None:
+                fields = (_current_schema(md) or {}).get("fields") or []
+                files = w._write_data_files(
+                    _with_write_defaults(upserts, fields)
+                )
+                commit.update(pre_written=files, schema_override=upserts.schema)
+                written += [p for p, _, _, _ in files]
+            if md is not None:
                 reader = IcebergTableReader(
                     self.spark, self.path, pin_version=mv
                 )
-                schema = reader.schema()
-                # no probe scan: the delete files ARE the key batch —
-                # written with the batch's natural partitioning (the
-                # spec allows many equality-delete files per commit;
-                # coalesce(1) here would funnel a 100M-key delete batch
-                # through one task)
-                eq_files = self._delete_writer._write_data_files(affected)
-                has_upserts = upserts is not None and bool(upserts.head(1))
-                try:
-                    self.writer._snapshot_commit(
-                        upserts if has_upserts else None,
-                        overwrite=False,
-                        schema_override=schema,
-                        eq_delete_files=eq_files,
-                        eq_key_cols=self.key_cols,
-                        summary_extra=summary_extra,
-                        base=base,
+                if upserts is None:
+                    commit["schema_override"] = reader.schema()
+                live = reader._file_sets(None)
+                if live[0]:
+                    artifact, paths = self._delete_artifact(
+                        reader, live, affected
                     )
-                    return
-                except IcebergCommitConflict:
-                    for p, _, _, _ in eq_files:
-                        try:
-                            os.unlink(p)
-                        except OSError:
-                            pass
-                    continue
+                    commit.update(artifact)
+                    written += paths
+                if not written and txn is None:
+                    return None
+            return commit, written
 
-            reader = IcebergTableReader(self.spark, self.path, pin_version=mv)
-            data = reader._file_sets(None)[0]
-            schema = reader.schema()
-            # hits aggregate per FILE executor-side; the driver only
-            # ever streams one file's position list at a time
-            # (toLocalIterator, DV mode) or nothing at all (position
-            # mode writes the delete files distributedly) — never the
-            # full O(matched rows) pair list a 50M-row delete batch
-            # would otherwise materialize driver-side.
-            hits_grouped = None
-            rec_by_fp: dict[str, str] = {}
-            if data:
-                rec_by_fp = {"file:" + local: rec for rec, local, _, _, _ in data}
-                # only key columns are read — drop v3 `unknown` (void)
-                # fields, which the parquet reader rejects and which
-                # can never be merge keys
-                key_schema = T.StructType(
-                    [
-                        f
-                        for f in schema.fields
-                        if not isinstance(f.dataType, T.NullType)
-                    ]
-                )
-                scan = (
-                    self.spark.read.schema(key_schema)
-                    .parquet(*[local for _, local, _, _, _ in data])
-                    .select(
-                        *self.key_cols,
-                        F.col("_metadata.file_path").alias("__fp"),
-                        F.col("_metadata.row_index").alias("__pos"),
-                    )
-                )
-                hits_grouped = (
-                    scan.join(affected, self.key_cols, "left_semi")
-                    .groupBy("__fp")
-                    .agg(
-                        F.sort_array(
-                            F.collect_list(F.col("__pos").cast("long"))
-                        ).alias("__poss")
-                    )
-                )
+        w._commit_loop(attempt)
 
-            has_upserts = upserts is not None and bool(upserts.head(1))
+    def _delete_artifact(
+        self, reader: IcebergTableReader, live: tuple, affected: DataFrame
+    ) -> tuple[dict, list[str]]:
+        """merge's one mode-specific step: record the deletion of
+        `affected`'s keys from the live data files (`live` =
+        reader._file_sets) → (_snapshot keyword arguments, files
+        written); no file when nothing is deleted.
+        - equality: the batch keys themselves, as equality-delete files;
+        - position: the probe scan's hits as (file_path, pos) files;
+        - dv: each hit file's live DV widened by its hits, in one puffin.
+        """
+        from pyspark.sql import functions as F
 
-            if self.delete_mode == "dv":
-                import uuid as _uuid
+        data, _, _, live_dvs = live
+        if self.delete_mode == "equality":
+            # no probe scan: the delete files ARE the key batch — written
+            # with the batch's natural partitioning (the spec allows many
+            # equality-delete files per commit; coalesce(1) here would
+            # funnel a 100M-key delete batch through one task)
+            files = self._delete_writer._write_data_files(affected)
+            return (
+                {"eq_delete_files": files, "eq_key_cols": self.key_cols},
+                [p for p, _, _, _ in files],
+            )
+        # the key-only probe scan: hits aggregate per FILE executor-side;
+        # the driver only ever streams one file's position list at a
+        # time (DV mode) or nothing at all (position mode writes the
+        # delete files distributedly) — never the full O(matched rows)
+        # pair list a 50M-row delete batch would otherwise materialize.
+        # v3 `unknown` (void) fields are dropped from the read schema:
+        # the parquet reader rejects them and they are never keys.
+        rec_by_fp = {"file:" + local: rec for rec, local, _, _, _ in data}
+        key_schema = T.StructType(
+            [
+                f
+                for f in reader.schema().fields
+                if not isinstance(f.dataType, T.NullType)
+            ]
+        )
+        hits = (
+            self.spark.read.schema(key_schema)
+            .parquet(*[local for _, local, _, _, _ in data])
+            .select(
+                *self.key_cols,
+                F.col("_metadata.file_path").alias("__fp"),
+                F.col("_metadata.row_index").alias("__pos"),
+            )
+            .join(affected, self.key_cols, "left_semi")
+            .groupBy("__fp")
+            .agg(
+                F.sort_array(
+                    F.collect_list(F.col("__pos").cast("long"))
+                ).alias("__poss")
+            )
+        )
+        if self.delete_mode == "position":
+            # map the scan's file URI back to the manifest's record path
+            # via a tiny broadcast relation; the sort keeps the spec's
+            # (file_path, pos) order inside each delete file
+            fp_map = self.spark.createDataFrame(
+                sorted(rec_by_fp.items()), "__fp string, file_path string"
+            )
+            files = self._delete_writer._write_data_files(
+                hits.select("__fp", F.explode("__poss").alias("pos"))
+                .join(F.broadcast(fp_map), "__fp")
+                .select("file_path", "pos")
+                .sort("file_path", "pos")
+            )
+            return {"delete_files": files}, [p for p, _, _, _ in files]
 
-                import numpy as np
+        import uuid
 
-                from deimos_spark.operators.puffin import (
-                    _frame_positions,
-                    read_dv_blob,
-                    write_puffin_framed,
-                )
+        import numpy as np
 
-                # fold new hits into each touched file's EXISTING live
-                # DV (the spec's one-DV-per-file rule: the replacement
-                # must carry the union, since it supersedes). Stream
-                # one file's positions at a time; keep only the framed
-                # (compressed roaring) blob per file.
-                live_dvs = {
-                    ref: (local, off, size)
-                    for ref, local, off, size in reader._file_sets(None)[3]
-                }
-                framed: dict[str, tuple[bytes, int]] = {}
-                if hits_grouped is not None:
-                    for r in hits_grouped.toLocalIterator():
-                        rec = rec_by_fp.get(r["__fp"])
-                        if rec is None:
-                            continue
-                        idx = np.asarray(r["__poss"], dtype=np.int64)
-                        if rec in live_dvs:
-                            lp, off, size = live_dvs[rec]
-                            idx = np.union1d(
-                                idx, read_dv_blob(lp, off, size)
-                            )
-                        framed[rec] = _frame_positions(idx)
-                if not framed and not has_upserts:
-                    return
-                dv_entries, puffin, superseded = [], None, set()
-                if framed:
-                    puffin = os.path.join(
-                        self.writer.data_dir,
-                        f"dv-{_uuid.uuid4().hex[:12]}.puffin",
-                    )
-                    blob_meta = write_puffin_framed(puffin, framed)
-                    dv_entries = [
-                        {
-                            "referenced_data_file": rec,
-                            "puffin_path": puffin,
-                            "offset": off,
-                            "size": size,
-                            "cardinality": card,
-                        }
-                        for rec, (off, size, card) in sorted(
-                            blob_meta.items()
-                        )
-                    ]
-                    superseded = set(framed) & set(live_dvs)
-                try:
-                    self.writer._snapshot_commit(
-                        upserts if has_upserts else None,
-                        overwrite=False,
-                        schema_override=schema,
-                        dv_entries=dv_entries,
-                        drop_dv_for=superseded or None,
-                        summary_extra=summary_extra,
-                        base=base,
-                    )
-                    return
-                except IcebergCommitConflict:
-                    if puffin is not None:
-                        try:
-                            os.unlink(puffin)
-                        except OSError:
-                            pass
-                    continue
+        from deimos_spark.operators.puffin import (
+            _frame_positions,
+            read_dv_blob,
+            write_puffin_framed,
+        )
 
-            delete_files = []
-            if hits_grouped is not None:
-                # distributed position-delete write — no driver
-                # materialization: map the scan's file URI back to the
-                # manifest's record path via a tiny broadcast relation,
-                # keep spec ordering by (file_path, pos) inside each
-                # delete file via a sort, write, and drop any empty
-                # output (a no-hit batch writes no delete file)
-                fp_map = self.spark.createDataFrame(
-                    [(fp, rec) for fp, rec in sorted(rec_by_fp.items())],
-                    "__fp string, file_path string",
-                )
-                pairs_df = (
-                    hits_grouped.select(
-                        "__fp", F.explode("__poss").alias("pos")
-                    )
-                    .join(F.broadcast(fp_map), "__fp")
-                    .select("file_path", "pos")
-                    .sort("file_path", "pos")
-                )
-                written = self._delete_writer._write_data_files(
-                    pairs_df
-                )
-                delete_files = [f for f in written if f[1] > 0]
-                for f in written:
-                    if f[1] == 0:
-                        _unlink_quietly(f[0])
-            if not delete_files and not has_upserts:
-                return
-
-            try:
-                self.writer._snapshot_commit(
-                    upserts if has_upserts else None,
-                    overwrite=False,
-                    delete_files=delete_files,
-                    schema_override=schema,
-                    summary_extra=summary_extra,
-                    base=base,
-                )
-                return
-            except IcebergCommitConflict:
-                for p, _, _, _ in delete_files:
-                    try:
-                        os.unlink(p)
-                    except OSError:
-                        pass
-        raise IcebergCommitConflict(
-            f"could not commit after {self.max_commit_retries} tries"
+        # fold the hits into each touched file's EXISTING live DV (the
+        # spec's one-DV-per-file rule: the replacement supersedes, so it
+        # must carry the union); keep only the framed (compressed
+        # roaring) blob per file
+        old_dvs = {ref: (lp, off, size) for ref, lp, off, size in live_dvs}
+        framed: dict[str, tuple[bytes, int]] = {}
+        for r in hits.toLocalIterator():
+            rec = rec_by_fp.get(r["__fp"])
+            if rec is None:
+                continue
+            idx = np.asarray(r["__poss"], dtype=np.int64)
+            if rec in old_dvs:
+                idx = np.union1d(idx, read_dv_blob(*old_dvs[rec]))
+            framed[rec] = _frame_positions(idx)
+        if not framed:
+            return {}, []
+        puffin = os.path.join(
+            self.writer.data_dir, f"dv-{uuid.uuid4().hex[:12]}.puffin"
+        )
+        blob_meta = write_puffin_framed(puffin, framed)
+        dv_entries = [
+            {
+                "referenced_data_file": rec,
+                "puffin_path": puffin,
+                "offset": off,
+                "size": size,
+                "cardinality": card,
+            }
+            for rec, (off, size, card) in sorted(blob_meta.items())
+        ]
+        superseded = set(framed) & set(old_dvs)
+        return (
+            {"dv_entries": dv_entries, "drop_dv_for": superseded or None},
+            [puffin],
         )

@@ -13,10 +13,12 @@ summaries) and asserts:
   version equals the replay of the commit-order prefix up to it;
 - NO LIVE FILE LOSS: every file the final snapshot references exists
   on disk, and vacuum/expire with a zero window (legal here — all
-  writers have stopped) never breaks the final state. Files abandoned
-  by conflict-retry windows are allowed on disk — that is exactly
-  what the retention window is FOR — but they must be invisible to
-  reads and deletable by vacuum without harm.
+  writers have stopped) never breaks the final state. Keyed merges
+  and optimizes, and every Delta write, unlink what a lost commit race
+  wrote; only plain Iceberg writer commits (append/overwrite) leave a
+  loser's files on disk — that is exactly what the retention window is
+  FOR — and those must be invisible to reads and deletable by expiry
+  without harm.
 
 The ops run against tiny key spaces (heavy key overlap) to maximize
 conflict pressure: with 3 threads x 4 ops over 10 keys, most commits
@@ -215,7 +217,7 @@ def _iceberg_commit_order(spark, path):
     return out
 
 
-@pytest.mark.parametrize("delete_mode", ["position", "equality"])
+@pytest.mark.parametrize("delete_mode", ["position", "equality", "dv"])
 def test_iceberg_keyed_multi_writer_fuzz(spark, tmp_path, delete_mode):
     seed = 3
     path = str(tmp_path / "t")

@@ -477,9 +477,11 @@ def _relay_bench(spark, scratch: str, n: int = 100_000) -> dict:
 
 
 def _consume_merge_bench(spark, scratch: str, k: int, zipf: bool = False) -> dict:
-    """Streaming-path stress (VERDICT r6 #5): BatchConsumer →
-    DeltaKeyedTable MERGE throughput at a K-scaled batch size, both DV
-    modes. The kafka-shaped batch (JSON-encoded via the real produce
+    """Streaming-path stress (VERDICT r6 #5): BatchConsumer → keyed
+    MERGE throughput at a K-scaled batch size, on one batch for each
+    sink: DeltaKeyedTable in rewrite and DV mode ("rewrite", "dv") and
+    IcebergKeyedTable in its three delete modes ("iceberg_position",
+    "iceberg_equality", "iceberg_dv"). The kafka-shaped batch (JSON-encoded via the real produce
     pipeline) is materialized to parquet OUTSIDE the timed region, so the
     timing covers decode → compact → MERGE — the consume path itself.
     n rows span n/2 keys (per-key compaction halves the batch) and the
@@ -487,6 +489,7 @@ def _consume_merge_bench(spark, scratch: str, k: int, zipf: bool = False) -> dic
     update + insert together; a 10%-key delete is timed separately (the
     DV fold vs survivor-rewrite distinction)."""
     from deimos_spark.operators.delta_interop import DeltaKeyedTable
+    from deimos_spark.operators.iceberg_interop import IcebergKeyedTable
     from deimos_spark.schemas.avro import parse_avsc
     from deimos_spark.streaming.consumer import BatchConsumer, ConsumerConfig
     from deimos_spark.streaming.producer import Producer, TopicConfig
@@ -541,11 +544,23 @@ def _consume_merge_bench(spark, scratch: str, k: int, zipf: bool = False) -> dic
     del_keys = spark.range(max(nkeys // 10, 1)).select(
         F.concat(F.lit("k"), F.col("id").cast("string")).alias("test_id")
     )
+    sinks = [
+        ("rewrite", lambda p: DeltaKeyedTable(spark, p, ["test_id"])),
+        ("dv", lambda p: DeltaKeyedTable(spark, p, ["test_id"], use_dvs=True)),
+    ] + [
+        (
+            f"iceberg_{mode}",
+            lambda p, mode=mode: IcebergKeyedTable(
+                spark, p, ["test_id"], delete_mode=mode
+            ),
+        )
+        for mode in ("position", "equality", "dv")
+    ]
     out = {}
-    for dv in (False, True):
-        tdir = os.path.join(scratch, f"tbl_{'dv' if dv else 'rw'}_{k}")
+    for name, make_table in sinks:
+        tdir = os.path.join(scratch, f"tbl_{name}_{k}")
         shutil.rmtree(tdir, ignore_errors=True)
-        table = DeltaKeyedTable(spark, tdir, ["test_id"], use_dvs=dv)
+        table = make_table(tdir)
         table.upsert(seed)
         consumer = BatchConsumer(
             ConsumerConfig(schema=schema, key_cols=["test_id"]), table
@@ -556,7 +571,7 @@ def _consume_merge_bench(spark, scratch: str, k: int, zipf: bool = False) -> dic
         t0 = time.perf_counter()
         table.delete(del_keys)
         delete_sec = time.perf_counter() - t0
-        out["dv" if dv else "rewrite"] = {
+        out[name] = {
             "rows": n,
             "merge_sec": round(merge_sec, 2),
             "rows_per_sec": int(n / merge_sec) if merge_sec else 0,
@@ -1261,7 +1276,7 @@ def main() -> None:
                 },
                 "outbox_relay_100k": relay,
                 # streaming-path curves (VERDICT r6 #5): consume->MERGE
-                # in both DV modes and the executor relay, K-scaled rows
+                # per keyed sink and the executor relay, K-scaled rows
                 # -> exponent ~1.0 = the path amortizes linearly
                 "consume_merge": None if not do_consume else {
                     "curve": {str(k): consume_curve[k] for k in sks},
@@ -1276,7 +1291,7 @@ def main() -> None:
                             ),
                             3,
                         )
-                        for mode in ("rewrite", "dv")
+                        for mode in consume_curve[sks[0]]
                     },
                 },
                 "relay_executor": None if not do_relay else {
