@@ -11,8 +11,10 @@ such a table with nothing but `spark.read.parquet` underneath:
   a Spark StructType JSON string, partition columns), `protocol`,
   `commitInfo` (ignored).
 - `{version:020d}.checkpoint.parquet` + `_last_checkpoint` — the full
-  action state materialized; we load it WITH Spark's parquet reader and
-  replay only later JSON commits (an O(interval) replay bound).
+  action state materialized; its few non-file actions are read with
+  pyarrow (so a reader without a SparkSession gets the table's schema
+  and protocol), its add rows WITH Spark's parquet reader, and only
+  later JSON commits replay (an O(interval) replay bound).
   Standard multi-part checkpoints (`{v}.checkpoint.{i}.{n}.parquet`,
   `_last_checkpoint.parts`) are read too. The WRITE side emits
   single-file checkpoints every `checkpoint_interval` commits so
@@ -41,7 +43,7 @@ from __future__ import annotations
 import json
 import os
 import re
-from dataclasses import dataclass, field
+from dataclasses import dataclass, field, replace
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -103,6 +105,184 @@ class DeltaSnapshot:
 
 class DeltaCommitConflict(Exception):
     """Another writer claimed this log version first."""
+
+
+# ------------------------------------------------------------ log rules
+# One definition per rule of the log layout; the batch reader, the
+# writer, read_changes and the `deltastream` source all go through them.
+
+
+def _commit_file(log_dir: str, version: int) -> str:
+    return os.path.join(log_dir, f"{version:020d}.json")
+
+
+def _commit_versions(names) -> list[int]:
+    """Sorted versions of the `{v:020d}.json` commits among `names`
+    (entries of a `_delta_log` listing)."""
+    return sorted(
+        int(n[:-5]) for n in names if n.endswith(".json") and n[:-5].isdigit()
+    )
+
+
+def _checkpoint_version(name: str) -> int | None:
+    """The version of a checkpoint file name, else None. Every
+    checkpoint name (classic, multi-part, v2 manifest) starts with the
+    20-digit version."""
+    if ".checkpoint" in name and name[:20].isdigit():
+        return int(name[:20])
+    return None
+
+
+def latest_version(log_dir: str) -> int:
+    """The newest version the log records, -1 for an empty log.
+    Checkpoint names count: legal log cleanup deletes the JSON commits a
+    checkpoint covers (the checkpoint version's own included), and a
+    writer that only saw JSON would re-claim version 0 and fork the
+    table."""
+    names = os.listdir(log_dir)
+    ckpts = [_checkpoint_version(n) for n in names]
+    return max(
+        [*_commit_versions(names), *(v for v in ckpts if v is not None)],
+        default=-1,
+    )
+
+
+def _commit_info(path: str) -> dict:
+    """The commit's `commitInfo` action ({} when it has none or the
+    file is unreadable). The spec allows it anywhere in the commit."""
+    try:
+        with open(path) as fh:
+            for line in fh:
+                if '"commitInfo"' not in line:
+                    continue
+                a = json.loads(line)
+                if "commitInfo" in a:
+                    return a["commitInfo"] or {}
+    except (OSError, ValueError):
+        pass
+    return {}
+
+
+def _commit_ts(path: str) -> float:
+    """A commit's timestamp in epoch millis, by reliability:
+    `commitInfo.inCommitTimestamp` (the clock-skew-proof writer feature)
+    > `commitInfo.timestamp` (what writers — ours included — record and
+    history UIs display; integral, so history() / version_at /
+    read_changes timestamp bounds stay mutually consistent) > the log
+    file's modification time (survives writers that record no
+    commitInfo at all)."""
+    ci = _commit_info(path)
+    for k in ("inCommitTimestamp", "timestamp"):
+        if ci.get(k) is not None:
+            return float(ci[k])
+    return os.path.getmtime(path) * 1000.0
+
+
+def _physical_name(f: T.StructField, mode: str) -> str:
+    """The name data files, stats and partitionValues give a column:
+    its `delta.columnMapping.physicalName` in the name/id mapping modes
+    (PROTOCOL.md "Column Mapping"), its logical name otherwise."""
+    if mode not in ("name", "id"):
+        return f.name
+    return (f.metadata or {}).get("delta.columnMapping.physicalName", f.name)
+
+
+def _file_field(f: T.StructField, mode: str) -> T.StructField:
+    """A logical field as the data files store it: the physical name,
+    and in id mode the `parquet.field.id` scans resolve it by — names in
+    the files are irrelevant there (renames without rewrites)."""
+    if mode != "id":
+        return T.StructField(_physical_name(f, mode), f.dataType, f.nullable)
+    fid = (f.metadata or {}).get("delta.columnMapping.id")
+    if fid is None:
+        raise DeltaProtocolError(
+            f"column {f.name!r} lacks delta.columnMapping.id in id "
+            "mapping mode"
+        )
+    return T.StructField(
+        _physical_name(f, mode), f.dataType, f.nullable,
+        metadata={"parquet.field.id": int(fid)},
+    )
+
+
+def _data_fields(snap: DeltaSnapshot) -> list[T.StructField]:
+    """The schema fields data files carry: partition columns live in the
+    log's partitionValues, not in the files."""
+    return [
+        f for f in snap.schema.fields if f.name not in snap.partition_columns
+    ]
+
+
+def _restricted(snap: DeltaSnapshot, kept: dict) -> DeltaSnapshot:
+    """`snap` narrowed to the files in `kept` ({path: partitionValues});
+    `snap` itself when nothing was dropped."""
+    if len(kept) == len(snap.files):
+        return snap
+    return replace(
+        snap,
+        files=kept,
+        adds_raw={p: a for p, a in snap.adds_raw.items() if p in kept},
+        txns=dict(snap.txns),
+        domains=dict(snap.domains),
+    )
+
+
+def _check_reader_protocol(p: dict) -> None:
+    """Refuse a protocol action this reader cannot honor."""
+    if p.get("minReaderVersion", 1) > 3:
+        raise DeltaProtocolError(
+            f"minReaderVersion {p['minReaderVersion']} > 3 unsupported"
+        )
+    for feat in p.get("readerFeatures") or []:
+        # deletionVectors / columnMapping handled in read();
+        # v2Checkpoint handled in _load_checkpoint_v2;
+        # variantType (+ the preview name early writers used):
+        # schemaString "variant" parses to Spark's native
+        # VariantType and the parquet variant encoding reads
+        # natively (the Iceberg r12 precedent — same encoding)
+        if feat not in (
+            "timestampNtz", "deletionVectors", "columnMapping",
+            "v2Checkpoint", "vacuumProtocolCheck",
+            "variantType", "variantType-preview",
+        ):
+            raise DeltaProtocolError(f"reader feature {feat!r} unsupported")
+
+
+def _parquet_actions(path: str, kinds: tuple[str, ...]) -> list[dict]:
+    """The `kinds` actions of a log parquet file (checkpoint part, v2
+    manifest) read with pyarrow on the driver: one `{kind: action}` per
+    non-null cell, in row order, map values as dicts — the shape JSON
+    commits' actions have. Needs no SparkSession."""
+    from functools import reduce
+
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    import pyarrow.parquet as papq
+
+    def py(v, t):
+        if v is None:
+            return None
+        if pa.types.is_map(t):
+            return {k: py(x, t.item_type) for k, x in v}
+        if pa.types.is_struct(t):
+            return {f.name: py(v.get(f.name), f.type) for f in t}
+        if pa.types.is_list(t) or pa.types.is_large_list(t):
+            return [py(x, t.value_type) for x in v]
+        return v
+
+    pf = papq.ParquetFile(path)
+    cols = [k for k in kinds if k in pf.schema_arrow.names]
+    if not cols:
+        return []
+    tbl = pf.read(columns=cols)
+    tbl = tbl.filter(reduce(pc.or_, [pc.is_valid(tbl[c]) for c in cols]))
+    types = {f.name: f.type for f in tbl.schema}
+    return [
+        {c: py(v, types[c])}
+        for row in tbl.to_pylist()
+        for c, v in row.items()
+        if v is not None
+    ]
 
 
 # ------------------------------------------------------------ writer gate
@@ -491,9 +671,12 @@ def _txn_already_applied(snap: DeltaSnapshot, txn: tuple[str, int]) -> bool:
 
 class DeltaTableReader:
     """Read a Delta table directory: `read()` → DataFrame (latest or
-    time-travel version), `snapshot()` → live file set."""
+    time-travel version), `snapshot()` → live file set. With
+    `spark=None` the log-only calls work — `snapshot(_meta_only=True)`,
+    the commit listing and a commit's actions — which is how the
+    `deltastream` source plans."""
 
-    def __init__(self, spark: SparkSession, path: str):
+    def __init__(self, spark: SparkSession | None, path: str):
         self.spark = spark
         self.path = path
         self.log_dir = os.path.join(path, "_delta_log")
@@ -538,25 +721,8 @@ class DeltaTableReader:
             snap.partition_columns = list(md.get("partitionColumns") or [])
             snap.meta_raw = md
         elif "protocol" in action:
-            p = action["protocol"]
-            snap.protocol_raw = p
-            if p.get("minReaderVersion", 1) > 3:
-                raise DeltaProtocolError(
-                    f"minReaderVersion {p['minReaderVersion']} > 3 unsupported"
-                )
-            for feat in p.get("readerFeatures") or []:
-                # deletionVectors / columnMapping handled in read();
-                # v2Checkpoint handled in _load_checkpoint_v2;
-                # variantType (+ the preview name early writers used):
-                # schemaString "variant" parses to Spark's native
-                # VariantType and the parquet variant encoding reads
-                # natively (the Iceberg r12 precedent — same encoding)
-                if feat not in (
-                    "timestampNtz", "deletionVectors", "columnMapping",
-                    "v2Checkpoint", "vacuumProtocolCheck",
-                    "variantType", "variantType-preview",
-                ):
-                    raise DeltaProtocolError(f"reader feature {feat!r} unsupported")
+            snap.protocol_raw = action["protocol"]
+            _check_reader_protocol(action["protocol"])
         elif "txn" in action:
             # transaction identifier: replayed in commit order, so the
             # latest action per appId wins (the spec's rule)
@@ -573,7 +739,7 @@ class DeltaTableReader:
         # commitInfo / cdc: no effect on the live file set
 
     def _replay_json_commit(self, version: int, snap: DeltaSnapshot) -> bool:
-        p = os.path.join(self.log_dir, f"{version:020d}.json")
+        p = _commit_file(self.log_dir, version)
         try:
             with open(p) as fh:
                 lines = fh.read().splitlines()
@@ -610,6 +776,8 @@ class DeltaTableReader:
     # (single non-dotted token — can't collide with multi-part's two
     # numeric segments)
     _CKPT_V2 = re.compile(r"^(\d{20})\.checkpoint\.([^.]+)\.(json|parquet)$")
+    # the actions of a checkpoint that are not file actions
+    _NON_FILE = ("protocol", "metaData", "txn", "domainMetadata")
 
     def _checkpoint_sets(self, names) -> dict[int, tuple[str, list[str]]]:
         """version → (kind, file list) for every COMPLETE checkpoint in
@@ -658,23 +826,13 @@ class DeltaTableReader:
         not in the schema — caller post-filters instead)."""
         if not prune or snap.schema is None:
             return None
-        mapping = snap.column_mapping in ("name", "id")
-        out = {}
-        for c, vals in prune.items():
-            fld = next(
-                (f for f in snap.schema.fields if f.name == c), None
-            )
-            if fld is None:
-                return None
-            pk = (
-                (fld.metadata or {}).get(
-                    "delta.columnMapping.physicalName", c
-                )
-                if mapping
-                else c
-            )
-            out[pk] = vals
-        return out
+        fields = {f.name: f for f in snap.schema.fields}
+        if not set(prune) <= set(fields):
+            return None
+        return {
+            _physical_name(fields[c], snap.column_mapping): vals
+            for c, vals in prune.items()
+        }
 
     def _collect_add_rows(self, df, cols, snap, prune, stats_prune=None):
         """Collect add actions from a checkpoint/sidecar scan with the
@@ -702,8 +860,6 @@ class DeltaTableReader:
                 if any(v is None for v in vals):
                     cond = cond | item.isNull()
                 sel = sel.filter(cond)
-        if stats_prune and "__META_ONLY__" in stats_prune:
-            return 0  # schema probe: no add rows wanted
         if (
             stats_prune
             and isinstance(add_type, T.StructType)
@@ -753,43 +909,31 @@ class DeltaTableReader:
         paths: list[str],
         prune: dict | None = None,
         stats_prune: dict | None = None,
+        meta_only: bool = False,
     ) -> DeltaSnapshot | None:
         if not all(os.path.exists(p) for p in paths):
             return None
         snap = DeltaSnapshot(version, {}, None)
         try:
-            df = self.spark.read.parquet(*paths)
-            cols = set(df.columns)
-            # phase 1: the handful of non-file actions (protocol/
-            # metaData/txn) — a column-pruned scan collecting O(1)+
-            # O(#appIds) rows; the metaData row is needed BEFORE the add
-            # scan so mapping-mode prune columns can be translated to
-            # physical names
-            meta_cols = [
-                c
-                for c in ("protocol", "metaData", "txn", "domainMetadata")
-                if c in cols
+            # phase 1: the handful of non-file actions, read with pyarrow
+            # on the driver (no Spark job, no session needed); the
+            # metaData row is needed BEFORE the add scan so mapping-mode
+            # prune columns can be translated to physical names
+            actions = [
+                a for p in paths for a in _parquet_actions(p, self._NON_FILE)
             ]
-            if meta_cols:
-                mrows = (
-                    df.select(*meta_cols)
-                    .filter(
-                        " OR ".join(f"{c} IS NOT NULL" for c in meta_cols)
-                    )
-                    .collect()
-                )
-            else:
-                mrows = []
         except Exception:
             return None  # unreadable/corrupt checkpoint → caller falls back
-        for row in mrows:
-            d = row.asDict(recursive=True)
-            for kind in ("protocol", "metaData", "txn", "domainMetadata"):
-                if kind in d and d.get(kind) is not None:
-                    self._apply_action({kind: d[kind]}, snap)
+        for a in actions:
+            self._apply_action(a, snap)
+        if meta_only:
+            return snap
         try:
             # phase 2: file actions, prune + stats-drop pushed to the scan
-            self._collect_add_rows(df, cols, snap, prune, stats_prune)
+            df = self.spark.read.parquet(*paths)
+            self._collect_add_rows(
+                df, set(df.columns), snap, prune, stats_prune
+            )
         except Exception:
             return None
         # remove actions in a checkpoint are tombstones for vacuum
@@ -802,13 +946,15 @@ class DeltaTableReader:
         manifest_path: str,
         prune: dict | None = None,
         stats_prune: dict | None = None,
+        meta_only: bool = False,
     ) -> DeltaSnapshot | None:
         """V2 checkpoint (PROTOCOL.md "V2 Checkpoints"): a manifest file
         `{v}.checkpoint.{uuid}.{json|parquet}` holding non-file actions
         (+ a `checkpointMetadata` action) and EITHER inline file actions
         OR `sidecar` actions naming parquet files under
         `_delta_log/_sidecars/` that carry the add/remove state. Same
-        net-adds semantics as classic checkpoints."""
+        net-adds semantics as classic checkpoints; a `meta_only` load
+        opens no sidecar."""
         snap = DeltaSnapshot(version, {}, None)
         sidecars: list[str] = []
         try:
@@ -820,22 +966,14 @@ class DeltaTableReader:
                         if line.strip()
                     ]
             else:
-                df = self.spark.read.parquet(manifest_path)
-                cols = set(df.columns)
-                actions = []
-                for row in df.collect():
-                    d = row.asDict(recursive=True)
-                    for kind in (
-                        "protocol", "metaData", "txn", "domainMetadata",
-                        "add", "sidecar", "checkpointMetadata",
-                    ):
-                        if kind in cols and d.get(kind) is not None:
-                            actions.append({kind: d[kind]})
-        except DeltaProtocolError:
-            raise
+                actions = _parquet_actions(
+                    manifest_path,
+                    (*self._NON_FILE, "add", "sidecar", "checkpointMetadata"),
+                )
         except Exception:
             return None  # unreadable manifest → caller falls back
         saw_meta = False
+        kinds = self._NON_FILE if meta_only else (*self._NON_FILE, "add")
         for action in actions:
             if "checkpointMetadata" in action:
                 saw_meta = True
@@ -857,8 +995,7 @@ class DeltaTableReader:
                     os.path.join(self.log_dir, "_sidecars", p)
                 )
                 continue
-            for kind in ("protocol", "metaData", "txn", "domainMetadata",
-                         "add"):
+            for kind in kinds:
                 if kind in action and action[kind] is not None:
                     self._apply_action({kind: action[kind]}, snap)
         if not saw_meta:
@@ -866,6 +1003,8 @@ class DeltaTableReader:
                 f"{manifest_path}: V2 checkpoint manifest lacks the "
                 "required checkpointMetadata action"
             )
+        if meta_only:
+            return snap
         for sp in sidecars:
             try:
                 df = self.spark.read.parquet(sp)
@@ -931,14 +1070,12 @@ class DeltaTableReader:
         when its recorded [min, max] provably misses the range; files
         without stats always survive. Numeric or string columns only
         (refuses others loudly)."""
+        # `_meta_only`: a schema/protocol probe — no checkpoint add is
+        # collected and no Spark job runs (the JSON tail still replays,
+        # bounded by the checkpoint interval)
         sprune = None
-        if stats_filter:
+        if stats_filter and not _meta_only:
             sprune = self._normalize_stats_filter(version, stats_filter)
-        if _meta_only:
-            # schema/protocol probe: checkpoint add collection skipped
-            # entirely (the JSON tail still replays — bounded by the
-            # checkpoint interval)
-            sprune = {"__META_ONLY__": (None, None, True)}
         self.last_snapshot_commit_reads = 0
         self.last_snapshot_listed_log = False
         self.last_checkpoint_rows_collected = 0
@@ -976,7 +1113,7 @@ class DeltaTableReader:
                 paths = [
                     os.path.join(self.log_dir, f"{cv:020d}.checkpoint.parquet")
                 ]
-            snap = self._load_checkpoint(cv, paths, prune, sprune)
+            snap = self._load_checkpoint(cv, paths, prune, sprune, _meta_only)
             if snap is None:
                 # classic names absent: a v2 checkpoint's UUID manifest
                 # name can't be constructed, but our writer records it
@@ -991,7 +1128,7 @@ class DeltaTableReader:
                     mp = os.path.join(self.log_dir, mname)
                     if os.path.exists(mp):
                         snap = self._load_checkpoint_v2(
-                            cv, mp, prune, sprune
+                            cv, mp, prune, sprune, _meta_only
                         )
             if snap is not None:
                 v = snap.version + 1
@@ -1010,15 +1147,12 @@ class DeltaTableReader:
                         # the listing; names only), so the fast path's win
                         # — skipping the full list+checkpoint+replay — and
                         # last_snapshot_listed_log's meaning are intact.
-                        later = [
-                            int(n[:-5])
-                            for n in os.listdir(self.log_dir)
-                            if n.endswith(".json") and n[:-5].isdigit()
-                        ]
                         hole_hi = max(
                             (
                                 c
-                                for c in later
+                                for c in _commit_versions(
+                                    os.listdir(self.log_dir)
+                                )
                                 if c >= v
                                 and (version is None or c <= version)
                             ),
@@ -1042,9 +1176,7 @@ class DeltaTableReader:
 
         self.last_snapshot_listed_log = True
         names = os.listdir(self.log_dir)
-        commits = sorted(
-            int(n[:-5]) for n in names if n.endswith(".json") and n[:-5].isdigit()
-        )
+        commits = _commit_versions(names)
         ckpt_sets = self._checkpoint_sets(names)
         if not commits and not ckpt_sets:
             raise DeltaProtocolError(f"{self.path}: empty _delta_log")
@@ -1055,9 +1187,13 @@ class DeltaTableReader:
                 continue
             kind, paths = ckpt_sets[cv]
             loaded = (
-                self._load_checkpoint_v2(cv, paths[0], prune, sprune)
+                self._load_checkpoint_v2(
+                    cv, paths[0], prune, sprune, _meta_only
+                )
                 if kind == "v2"
-                else self._load_checkpoint(cv, paths, prune, sprune)
+                else self._load_checkpoint(
+                    cv, paths, prune, sprune, _meta_only
+                )
             )
             if loaded is not None:
                 snap = loaded
@@ -1120,7 +1256,6 @@ class DeltaTableReader:
             raise DeltaProtocolError(
                 f"{self.path}: no metaData action in log"
             )
-        mapped = probe.column_mapping in ("name", "id")
         fields = {f.name: f for f in probe.schema.fields}
         out = {}
         for col, rng in stats_filter.items():
@@ -1131,11 +1266,7 @@ class DeltaTableReader:
             lo, hi = rng
             fld = fields[col]
             dt = fld.dataType
-            key = col
-            if mapped:
-                key = (fld.metadata or {}).get(
-                    "delta.columnMapping.physicalName", col
-                )
+            key = _physical_name(fld, probe.column_mapping)
             if "'" in key:
                 raise DeltaProtocolError(
                     f"stats_filter column {col!r}: physical name {key!r} "
@@ -1157,7 +1288,7 @@ class DeltaTableReader:
     ) -> DeltaSnapshot:
         """Driver-side stats filter for the JSON commit tail (adds there
         still carry their stats string)."""
-        if not sprune or "__META_ONLY__" in sprune:
+        if not sprune:
             return snap
 
         def _keep(a: dict) -> bool:
@@ -1185,24 +1316,13 @@ class DeltaTableReader:
                     continue
             return True
 
-        kept = {
-            p: pv
-            for p, pv in snap.files.items()
-            if _keep(snap.adds_raw.get(p) or {})
-        }
-        if len(kept) == len(snap.files):
-            return snap
-        return DeltaSnapshot(
-            snap.version,
-            kept,
-            snap.schema,
-            snap.partition_columns,
-            snap.column_mapping,
-            snap.protocol_raw,
-            snap.meta_raw,
-            {p: a for p, a in snap.adds_raw.items() if p in kept},
-            txns=dict(snap.txns),
-            domains=dict(snap.domains),
+        return _restricted(
+            snap,
+            {
+                p: pv
+                for p, pv in snap.files.items()
+                if _keep(snap.adds_raw.get(p) or {})
+            },
         )
 
     def _post_prune(
@@ -1221,21 +1341,15 @@ class DeltaTableReader:
                     f"partition_filter names non-partition columns "
                     f"{sorted(unknown)}"
                 )
-        mapping = snap.column_mapping in ("name", "id")
-
-        def _phys_key(c: str) -> str:
-            if not mapping or snap.schema is None:
-                return c
-            fld = next(
-                (f for f in snap.schema.fields if f.name == c), None
-            )
-            if fld is None:
-                return c
-            return (fld.metadata or {}).get(
-                "delta.columnMapping.physicalName", c
-            )
-
-        pk = {c: _phys_key(c) for c in prune}
+        fields = {
+            f.name: f for f in (snap.schema.fields if snap.schema else [])
+        }
+        pk = {
+            c: _physical_name(fields[c], snap.column_mapping)
+            if c in fields
+            else c
+            for c in prune
+        }
 
         def _keep(pvals: dict) -> bool:
             for c, vals in prune.items():
@@ -1248,20 +1362,8 @@ class DeltaTableReader:
                     return False
             return True
 
-        kept = {p: pv for p, pv in snap.files.items() if _keep(pv)}
-        if len(kept) == len(snap.files):
-            return snap
-        return DeltaSnapshot(
-            snap.version,
-            kept,
-            snap.schema,
-            snap.partition_columns,
-            snap.column_mapping,
-            snap.protocol_raw,
-            snap.meta_raw,
-            {p: a for p, a in snap.adds_raw.items() if p in kept},
-            txns=dict(snap.txns),
-            domains=dict(snap.domains),
+        return _restricted(
+            snap, {p: pv for p, pv in snap.files.items() if _keep(pv)}
         )
 
     def txn_version(self, app_id: str) -> int | None:
@@ -1279,17 +1381,11 @@ class DeltaTableReader:
         clock-skew-proof writer feature) — honored here when present.
         Requires a LIST of the log dir — timestamp resolution is
         inherently a listing operation, unlike version reads."""
-        commits = []
-        for n in sorted(os.listdir(self.log_dir)):
-            if not (n.endswith(".json") and n[:-5].isdigit()):
-                continue
-            commits.append(
-                (
-                    int(n[:-5]),
-                    self._commit_ts(os.path.join(self.log_dir, n)),
-                )
-            )
-        eligible = [v for v, ts in commits if ts <= as_of_ms]
+        eligible = [
+            v
+            for v in _commit_versions(os.listdir(self.log_dir))
+            if _commit_ts(_commit_file(self.log_dir, v)) <= as_of_ms
+        ]
         if not eligible:
             raise DeltaProtocolError(
                 f"no commit at or before timestamp {as_of_ms}"
@@ -1300,40 +1396,12 @@ class DeltaTableReader:
         """Smallest commit version whose timestamp is >= `ts_ms` (the
         CDF startingTimestamp convention). Listing-based, like all
         timestamp resolution."""
-        for n in sorted(os.listdir(self.log_dir)):
-            if not (n.endswith(".json") and n[:-5].isdigit()):
-                continue
-            if self._commit_ts(os.path.join(self.log_dir, n)) >= ts_ms:
-                return int(n[:-5])
+        for v in _commit_versions(os.listdir(self.log_dir)):
+            if _commit_ts(_commit_file(self.log_dir, v)) >= ts_ms:
+                return v
         raise DeltaProtocolError(
             f"no commit at or after timestamp {ts_ms}"
         )
-
-    @staticmethod
-    def _commit_ts(p: str) -> float:
-        """A commit's timestamp in epoch millis, by reliability:
-        `commitInfo.inCommitTimestamp` (the clock-skew-proof writer
-        feature) > `commitInfo.timestamp` (what writers — ours included
-        — record and history UIs display; integral, so history() /
-        version_at / read_changes timestamp bounds stay mutually
-        consistent) > the log file's modification time (survives
-        writers that record no commitInfo at all)."""
-        ts = os.path.getmtime(p) * 1000.0
-        try:
-            with open(p) as fh:
-                for line in fh:
-                    # the spec allows commitInfo anywhere in the commit
-                    if not line.strip() or '"commitInfo"' not in line:
-                        continue
-                    ci = json.loads(line).get("commitInfo") or {}
-                    if ci.get("inCommitTimestamp") is not None:
-                        ts = float(ci["inCommitTimestamp"])
-                    elif ci.get("timestamp") is not None:
-                        ts = float(ci["timestamp"])
-                    break
-        except (OSError, ValueError):
-            pass  # unreadable line: fall back to mtime
-        return ts
 
     # ---------------------------------------------------------------- read
 
@@ -1369,30 +1437,16 @@ class DeltaTableReader:
         import math
 
         out = []
-        for n in sorted(os.listdir(self.log_dir), reverse=True):
-            if not (n.endswith(".json") and n[:-5].isdigit()):
-                continue
-            p = os.path.join(self.log_dir, n)
-            info = {}
-            try:
-                with open(p) as fh:
-                    for line in fh:
-                        if not line.strip():
-                            continue
-                        a = json.loads(line)
-                        if a.get("commitInfo"):
-                            info = a["commitInfo"]
-                            break
-            except (OSError, ValueError):
-                pass
+        for v in reversed(_commit_versions(os.listdir(self.log_dir))):
+            p = _commit_file(self.log_dir, v)
             out.append(
                 {
-                    "version": int(n[:-5]),
+                    "version": v,
                     # ceil: a floor-truncated float mtime would make
                     # read_changes(ending_ts_ms=<this>) exclude the very
                     # commit it came from
-                    "timestamp": math.ceil(self._commit_ts(p)),
-                    "commitInfo": info,
+                    "timestamp": math.ceil(_commit_ts(p)),
+                    "commitInfo": _commit_info(p),
                 }
             )
             if limit is not None and len(out) >= limit:
@@ -1482,7 +1536,8 @@ class DeltaTableReader:
         same assembly as read() (partition literals, column mapping);
         version count in a range is bounded by consume cadence, not
         table size, and nothing here materializes data driver-side.
-        The batch twin of the `deltastream` streaming source."""
+        The batch twin of the `deltastream` streaming source, which
+        plans each commit through the same `_change_files`."""
         if starting_version is not None and starting_ts_ms is not None:
             raise ValueError("pass starting_version OR starting_ts_ms")
         if ending_version is not None and ending_ts_ms is not None:
@@ -1508,62 +1563,25 @@ class DeltaTableReader:
             raise ValueError(
                 f"bad version range [{starting_version}, {ending_version}]"
             )
-        mapping = probe.column_mapping in ("name", "id")
         parts: list[DataFrame] = []
         for v in range(starting_version, ending_version + 1):
-            p = os.path.join(self.log_dir, f"{v:020d}.json")
-            try:
-                with open(p) as fh:
-                    actions = [
-                        json.loads(ln)
-                        for ln in fh.read().splitlines()
-                        if ln.strip()
-                    ]
-            except OSError:
-                raise DeltaProtocolError(
-                    f"commit {v} not available (log cleaned?) — cannot "
-                    "compute changes"
-                ) from None
-            ts = self._commit_ts(p)
-            cdc = [a["cdc"] for a in actions if a.get("cdc")]
-            adds = [
-                a["add"]
-                for a in actions
-                if a.get("add") and a["add"].get("dataChange", True)
-            ]
-            removes = [
-                a["remove"]
-                for a in actions
-                if a.get("remove")
-                and a["remove"].get("dataChange", True)
-            ]
-            if cdc:
-                # mapped tables: _read_cdc_files requests physical
-                # names and aliases back to logical
-                df = self._read_cdc_files(cdc, probe)
-            else:
-                if removes or any(a.get("deletionVector") for a in adds):
-                    raise DeltaProtocolError(
-                        f"version {v} contains row-level changes "
-                        "(remove/deletion-vector) without cdc files — "
-                        "changes are not reconstructable"
+            is_cdc, files, ts = self._change_files(v)
+            if is_cdc:
+                df = self._read_cdc_files(files, probe)
+            elif files:
+                df = self._assemble(
+                    replace(
+                        probe,
+                        version=v,
+                        files={
+                            a["path"]: dict(a.get("partitionValues") or {})
+                            for a in files
+                        },
+                        adds_raw={a["path"]: a for a in files},
                     )
-                if not adds:
-                    continue
-                mini = DeltaSnapshot(
-                    v,
-                    {a["path"]: dict(a.get("partitionValues") or {})
-                     for a in adds},
-                    probe.schema,
-                    probe.partition_columns,
-                    probe.column_mapping,
-                    probe.protocol_raw,
-                    probe.meta_raw,
-                    {a["path"]: a for a in adds},
-                )
-                df = self._assemble(mini).withColumn(
-                    "_change_type", F.lit("insert")
-                )
+                ).withColumn("_change_type", F.lit("insert"))
+            else:
+                continue
             parts.append(
                 df.withColumn("_commit_version", F.lit(v).cast("long"))
                 .withColumn(
@@ -1582,6 +1600,95 @@ class DeltaTableReader:
             out = out.unionByName(q)
         return out
 
+    def _commit_actions(self, v: int) -> list[dict]:
+        """The actions of JSON commit `v`, its protocol actions checked
+        against this reader. A commit the log no longer holds (cleaned
+        below a checkpoint) raises, naming it: skipping it would drop
+        its changes without a word."""
+        try:
+            with open(_commit_file(self.log_dir, v)) as fh:
+                actions = [
+                    json.loads(ln) for ln in fh.read().splitlines() if ln.strip()
+                ]
+        except OSError:
+            raise DeltaProtocolError(
+                f"{self.path}: commit {v} not available (log cleaned?) — "
+                "cannot compute its changes"
+            ) from None
+        for a in actions:
+            if "protocol" in a:
+                _check_reader_protocol(a["protocol"])
+        return actions
+
+    def _change_files(self, v: int) -> tuple[bool, list[dict], float]:
+        """Commit `v`'s change feed, per the protocol's Change Data Files
+        rules: `(True, its cdc actions, ts)` when it carries any — they
+        record the commit's row-level changes, `_change_type` in-file —
+        else `(False, its dataChange=true add actions, ts)`, whose rows
+        are inserts. `ts` is the commit timestamp in epoch millis.
+        Row-level changes WITHOUT cdc files (removes, or DV-carrying
+        adds, with dataChange=true) refuse: they cannot be
+        reconstructed, and guessing would corrupt downstream consumers.
+        dataChange=false adds/removes (OPTIMIZE) contribute nothing."""
+        actions = self._commit_actions(v)
+        ts = _commit_ts(_commit_file(self.log_dir, v))
+        cdc = [a["cdc"] for a in actions if a.get("cdc")]
+        if cdc:
+            return True, cdc, ts
+        adds = [
+            a["add"]
+            for a in actions
+            if a.get("add") and a["add"].get("dataChange", True)
+        ]
+        if any(
+            a.get("remove") and a["remove"].get("dataChange", True)
+            for a in actions
+        ) or any(a.get("deletionVector") for a in adds):
+            raise DeltaProtocolError(
+                f"{self.path}: version {v} contains row-level changes "
+                "(remove/deletion-vector) without cdc files — changes are "
+                "not reconstructable; enable CDF on the writer "
+                "(DeltaKeyedTable enable_cdf=True)"
+            )
+        return False, adds, ts
+
+    def _file_schema(
+        self, snap: DeltaSnapshot, extra: list[T.StructField] = ()
+    ) -> T.StructType:
+        """The requested schema of a data or change-data file scan: the
+        data fields as the files store them (`_file_field`), then
+        `extra`. Id mode matches columns by parquet field id: Spark's
+        scan does that when the requested schema carries
+        `parquet.field.id` metadata and the fieldId read conf is on. The
+        conf is set in session.RUNTIME_CONFS; it is re-asserted here for
+        foreign sessions and stays set (NOT restored): the scan is lazy
+        and reads confs at execution time, and the conf is inert for any
+        requested schema without parquet.field.id metadata."""
+        if snap.column_mapping == "id":
+            self.spark.conf.set(
+                "spark.sql.parquet.fieldId.read.enabled", "true"
+            )
+        return T.StructType(
+            [_file_field(f, snap.column_mapping) for f in _data_fields(snap)]
+            + list(extra)
+        )
+
+    @staticmethod
+    def _logical(df: DataFrame, snap: DeltaSnapshot, extra) -> DataFrame:
+        """A scan of `_file_schema` with the data columns renamed to
+        their logical names (a no-op select on unmapped tables is
+        skipped); the `extra` columns pass through."""
+        mode = snap.column_mapping
+        if mode not in ("name", "id"):
+            return df
+        return df.select(
+            *[
+                F.col(_physical_name(f, mode)).alias(f.name)
+                for f in _data_fields(snap)
+            ],
+            *extra,
+        )
+
     def _read_cdc_files(
         self, cdc_actions: list[dict], snap: DeltaSnapshot
     ) -> DataFrame:
@@ -1591,47 +1698,8 @@ class DeltaTableReader:
         literals from the action's partitionValues, same as adds.
         Mapped tables: cdc files carry PHYSICAL names (the data-file
         rule) — requested physically, aliased back to logical."""
-        mapped = snap.column_mapping in ("name", "id")
-
-        def _phys(f: T.StructField) -> str:
-            return (
-                (f.metadata or {}).get(
-                    "delta.columnMapping.physicalName", f.name
-                )
-                if mapped
-                else f.name
-            )
-
-        data_fields = [
-            f
-            for f in snap.schema.fields
-            if f.name not in snap.partition_columns
-        ]
-
-        def _fmeta(f: T.StructField) -> dict | None:
-            # id mode resolves by parquet field id, not name — same
-            # rule as _assemble's data scan
-            if snap.column_mapping != "id":
-                return None
-            fid = (f.metadata or {}).get("delta.columnMapping.id")
-            return (
-                {"parquet.field.id": int(fid)}
-                if fid is not None
-                else None
-            )
-
-        if snap.column_mapping == "id":
-            self.spark.conf.set(
-                "spark.sql.parquet.fieldId.read.enabled", "true"
-            )
-        file_schema = T.StructType(
-            [
-                T.StructField(
-                    _phys(f), f.dataType, f.nullable, metadata=_fmeta(f)
-                )
-                for f in data_fields
-            ]
-            + [T.StructField("_change_type", T.StringType())]
+        file_schema = self._file_schema(
+            snap, [T.StructField("_change_type", T.StringType())]
         )
         parts = []
         for key, paths in self._partition_groups(
@@ -1641,14 +1709,7 @@ class DeltaTableReader:
             df = self.spark.read.schema(file_schema).parquet(
                 *[os.path.join(self.path, p) for p in paths]
             )
-            if mapped:
-                df = df.select(
-                    *[
-                        F.col(_phys(f)).alias(f.name)
-                        for f in data_fields
-                    ],
-                    "_change_type",
-                )
+            df = self._logical(df, snap, ["_change_type"])
             parts.append(
                 self._with_partition_values(df, key, snap).select(
                     *[f.name for f in snap.schema.fields], "_change_type"
@@ -1669,15 +1730,8 @@ class DeltaTableReader:
         mapped tables key partitionValues on PHYSICAL names (PROTOCOL.md
         "Column Mapping"), while metaData.partitionColumns stays
         logical."""
-        mapping = snap.column_mapping in ("name", "id")
         pv_key = {
-            f.name: (
-                (f.metadata or {}).get(
-                    "delta.columnMapping.physicalName", f.name
-                )
-                if mapping
-                else f.name
-            )
+            f.name: _physical_name(f, snap.column_mapping)
             for f in snap.schema.fields
         }
         groups: dict[tuple, list[str]] = {}
@@ -1756,67 +1810,12 @@ class DeltaTableReader:
         )
         rt_extra = [c for c in (mat_id, mat_cv) if c]
         with_pos = with_row_ids or with_file_pos
-        mapping = snap.column_mapping in ("name", "id")
-
-        def _phys(f: T.StructField) -> str:
-            return (f.metadata or {}).get(
-                "delta.columnMapping.physicalName", f.name
-            )
-
-        data_fields = [
-            f for f in snap.schema.fields if f.name not in snap.partition_columns
-        ]
-
-        if snap.column_mapping == "id":
-            # "id" mode matches columns by parquet field ids. Spark's
-            # scan does exactly that when the requested schema carries
-            # `parquet.field.id` metadata and the fieldId read conf is
-            # on — names in the files become irrelevant (that is the
-            # point of id mode: renames without rewrites). The conf is
-            # set in session.RUNTIME_CONFS; re-assert here for foreign
-            # sessions. It stays set (NOT restored): the scan is lazy and
-            # reads confs at execution time, and the conf is inert for
-            # any requested schema without parquet.field.id metadata, so
-            # it cannot change unrelated reads.
-            self.spark.conf.set(
-                "spark.sql.parquet.fieldId.read.enabled", "true"
-            )
-
-            def _fid(f: T.StructField) -> int:
-                fid = (f.metadata or {}).get("delta.columnMapping.id")
-                if fid is None:
-                    raise DeltaProtocolError(
-                        f"column {f.name!r} lacks delta.columnMapping.id "
-                        "in id mapping mode"
-                    )
-                return int(fid)
-
-            data_schema = T.StructType(
-                [
-                    T.StructField(
-                        _phys(f), f.dataType, f.nullable,
-                        metadata={"parquet.field.id": _fid(f)},
-                    )
-                    for f in data_fields
-                ]
-            )
-        else:
-            data_schema = T.StructType(
-                [
-                    T.StructField(
-                        _phys(f) if mapping else f.name, f.dataType, f.nullable
-                    )
-                    for f in data_fields
-                ]
-            )
-        if with_row_ids:
-            # materialized columns are physical-only: files written
-            # before enablement (or by appends, which leave them unset)
-            # simply lack them and read as null
-            data_schema = T.StructType(
-                list(data_schema.fields)
-                + [T.StructField(c, T.LongType(), True) for c in rt_extra]
-            )
+        # materialized row-tracking columns are physical-only: files
+        # written before enablement (or by appends, which leave them
+        # unset) simply lack them and read as null
+        data_schema = self._file_schema(
+            snap, [T.StructField(c, T.LongType(), True) for c in rt_extra]
+        )
         if not snap.files:
             out = self.spark.createDataFrame([], snap.schema)
             if with_row_ids:
@@ -1856,18 +1855,10 @@ class DeltaTableReader:
                 [*rt_extra, "__rt_file", "__rt_ri"] if with_pos else []
             )
             for df in scans:
-                if mapping:
-                    df = df.select(
-                        *[
-                            F.col(_phys(f)).alias(f.name)
-                            for f in data_fields
-                        ],
-                        *extras,
-                    )
                 parts.append(
-                    self._with_partition_values(df, key, snap).select(
-                        *[f.name for f in snap.schema.fields], *extras
-                    )
+                    self._with_partition_values(
+                        self._logical(df, snap, extras), key, snap
+                    ).select(*[f.name for f in snap.schema.fields], *extras)
                 )
         out = parts[0]
         for p in parts[1:]:
@@ -2095,18 +2086,7 @@ class DeltaTableWriter:
     # -------------------------------------------------------------- commit
 
     def _latest_version(self) -> int:
-        # checkpoint files count: legal log cleanup deletes JSON commits
-        # covered by a checkpoint (including the checkpoint version's
-        # own), and a writer that only saw JSON would re-claim version 0
-        # and fork the table — every checkpoint name (classic, multi-
-        # part, v2 manifest) starts with the 20-digit version
-        latest = -1
-        for n in os.listdir(self.log_dir):
-            if n.endswith(".json") and n[:-5].isdigit():
-                latest = max(latest, int(n[:-5]))
-            elif ".checkpoint" in n and n[:20].isdigit():
-                latest = max(latest, int(n[:20]))
-        return latest
+        return latest_version(self.log_dir)
 
     def _add_num_records(self, a: dict) -> int:
         """numRecords for an add action: from its stats JSON, else one
@@ -2172,12 +2152,10 @@ class DeltaTableWriter:
                     hwm = max(
                         hwm, int(b) + max(self._add_num_records(a), 1) - 1
                     )
-            for n in os.listdir(self.log_dir):
-                if not (n.endswith(".json") and n[:-5].isdigit()):
-                    continue
+            for v in _commit_versions(os.listdir(self.log_dir)):
                 try:
                     lines = open(
-                        os.path.join(self.log_dir, n)
+                        _commit_file(self.log_dir, v)
                     ).read().splitlines()
                 except OSError:
                     continue
@@ -2264,11 +2242,9 @@ class DeltaTableWriter:
             # first action and carry an inCommitTimestamp STRICTLY
             # greater than the previous commit's — monotonic even
             # against wall-clock skew
-            prev = os.path.join(
-                self.log_dir, f"{version - 1:020d}.json"
-            )
+            prev = _commit_file(self.log_dir, version - 1)
             if os.path.exists(prev):
-                prev_ict = int(DeltaTableReader._commit_ts(prev))
+                prev_ict = int(_commit_ts(prev))
             else:
                 # log cleanup truncated the JSON tail at the checkpoint:
                 # recover the watermark from _last_checkpoint's advisory
@@ -2292,7 +2268,7 @@ class DeltaTableWriter:
             fh.write(payload)
             fh.flush()
             os.fsync(fh.fileno())
-        target = os.path.join(self.log_dir, f"{version:020d}.json")
+        target = _commit_file(self.log_dir, version)
         try:
             os.link(tmp, target)  # atomic put-if-absent
         except FileExistsError as e:
@@ -2326,18 +2302,10 @@ class DeltaTableWriter:
         monotonicity watermark survives log cleanup truncating the JSON
         commits at the checkpoint (readers ignore unknown
         _last_checkpoint keys)."""
-        p = os.path.join(self.log_dir, f"{version:020d}.json")
-        try:
-            with open(p) as fh:
-                for line in fh:
-                    if not line.strip() or '"commitInfo"' not in line:
-                        continue
-                    ci = json.loads(line).get("commitInfo") or {}
-                    v = ci.get("inCommitTimestamp")
-                    return int(v) if v is not None else None
-        except (OSError, ValueError):
-            return None
-        return None
+        ict = _commit_info(
+            _commit_file(self.log_dir, version)
+        ).get("inCommitTimestamp")
+        return int(ict) if ict is not None else None
 
     def _write_checkpoint(self, version: int) -> None:
         if self.checkpoint_format == "v2":
@@ -2735,18 +2703,19 @@ class DeltaTableWriter:
             raise DeltaProtocolError(
                 "column-mapped table without a schema in the log"
             )
-        return DeltaTableWriter._column_map_of(snap.schema)
+        return DeltaTableWriter._column_map_of(
+            snap.schema, snap.column_mapping
+        )
 
     @staticmethod
     def _column_map_of(
-        schema: T.StructType,
+        schema: T.StructType, mode: str
     ) -> dict[str, tuple[str, int | None]]:
         out: dict[str, tuple[str, int | None]] = {}
         for f in schema.fields:
-            md = f.metadata or {}
-            fid = md.get("delta.columnMapping.id")
+            fid = (f.metadata or {}).get("delta.columnMapping.id")
             out[f.name] = (
-                md.get("delta.columnMapping.physicalName", f.name),
+                _physical_name(f, mode),
                 int(fid) if fid is not None else None,
             )
         return out
@@ -3081,7 +3050,8 @@ class DeltaTableWriter:
                         json.loads(
                             meta_update[0]["metaData"]["schemaString"]
                         )
-                    )
+                    ),
+                    probe.column_mapping,
                 )
             adds = self._write_files(df, cmap)
             actions = (
@@ -3250,9 +3220,8 @@ class DeltaTableWriter:
             # change data files of kept versions stay readable via
             # read_changes; older ones age out with retention, the
             # documented CDF-vacuum trade-off
-            cp = os.path.join(self.log_dir, f"{v:020d}.json")
             try:
-                with open(cp) as fh:
+                with open(_commit_file(self.log_dir, v)) as fh:
                     for line in fh:
                         if '"cdc"' not in line:
                             continue
@@ -3313,8 +3282,7 @@ class DeltaTableWriter:
         cutoff = _time.time() - retention_seconds
         deleted: list[str] = []
 
-        def _rm(name: str) -> None:
-            p = os.path.join(self.log_dir, name)
+        def _rm(p: str) -> None:
             try:
                 if os.path.getmtime(p) > cutoff:
                     return
@@ -3323,14 +3291,15 @@ class DeltaTableWriter:
             except OSError:
                 pass
 
-        for n in sorted(os.listdir(self.log_dir)):
-            if n.endswith(".json") and n[:-5].isdigit():
-                if int(n[:-5]) <= cv:
-                    _rm(n)
-            elif ".checkpoint" in n and n[:20].isdigit():
-                # superseded checkpoint sets only — never the newest
-                if int(n[:20]) < cv:
-                    _rm(n)
+        names = sorted(os.listdir(self.log_dir))
+        for v in _commit_versions(names):
+            if v <= cv:
+                _rm(_commit_file(self.log_dir, v))
+        for n in names:
+            # superseded checkpoint sets only — never the newest
+            cpv = _checkpoint_version(n)
+            if cpv is not None and cpv < cv:
+                _rm(os.path.join(self.log_dir, n))
         # sidecars referenced by ANY surviving v2 manifest stay —
         # including manifests newer than the pointer (a pointer-update
         # race must not orphan a valid checkpoint's add state)

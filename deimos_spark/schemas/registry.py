@@ -34,6 +34,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from deimos_spark.schemas.avro import AvroSchema, parse_avsc
+from deimos_spark.schemas.codecs import _all_nullable
 from deimos_spark.schemas.compat import can_read, compat_errors
 
 COMPAT_MODES = {
@@ -369,15 +370,3 @@ class RegistryProtoCodec:
             known_ids=self.registry.versions(self.subject),
         )
         return F.when(binary_col.isNotNull(), dec(binary_col))
-
-
-def _all_nullable(dt: T.DataType) -> T.DataType:
-    if isinstance(dt, T.StructType):
-        return T.StructType(
-            [T.StructField(f.name, _all_nullable(f.dataType), True) for f in dt.fields]
-        )
-    if isinstance(dt, T.ArrayType):
-        return T.ArrayType(_all_nullable(dt.elementType), True)
-    if isinstance(dt, T.MapType):
-        return T.MapType(dt.keyType, _all_nullable(dt.valueType), True)
-    return dt

@@ -13,20 +13,30 @@ Semantics (matching the public Delta streaming-source contract):
 - append-only by default: a commit containing `remove` actions fails
   the stream loudly (a MERGE/overwrite rewrites files, which would
   re-emit rows); `ignoreChanges=true` opts into emitting only the adds
-  of such commits, re-delivery accepted (Delta's own option).
+  of such commits, re-delivery accepted (Delta's own option). An add
+  that carries a deletion vector emits only its surviving rows.
 - `startingVersion`: `earliest` (default — replay from commit 0) or
   `latest` (only new commits).
+- a range whose commits the log has cleaned (log cleanup below a
+  checkpoint) raises a `DeltaProtocolError` naming the missing commit:
+  skipping it would drop its rows without a word. Start such a table
+  with `latest`.
+
+Every log rule — the latest version, the table's schema, partition
+columns, column mapping and protocol, a commit's actions and its
+change-feed files — comes from `DeltaTableReader`, used without a
+SparkSession, so the batch reader, `read_changes` and this source read
+one log the same way.
 
 Scale shape: one Spark input partition per added file, read inside
-executors with pyarrow; partition-column values come from the LOG
-(Delta layout keeps them out of the files) and are re-attached as
-typed literals per file.
+executors as one pyarrow read: columns by physical name (or by parquet
+field id in id mapping mode), deletion-vector rows dropped, partition
+values (kept in the LOG, not the files) appended as typed columns.
 """
 
 from __future__ import annotations
 
 import datetime as _dt
-import json
 import os
 
 from pyspark.sql import types as T
@@ -37,53 +47,18 @@ from pyspark.sql.datasource import (
 )
 
 
-def _log_dir(path: str) -> str:
-    return os.path.join(path, "_delta_log")
+def _reader(path: str):
+    """Session-less DeltaTableReader; fresh per call so polling sees
+    new commits."""
+    from deimos_spark.operators.delta_interop import DeltaTableReader
+
+    return DeltaTableReader(None, path)
 
 
-def _latest_version(path: str) -> int:
-    try:
-        names = os.listdir(_log_dir(path))
-    except OSError:
-        return -1
-    vs = [int(n[:-5]) for n in names if n.endswith(".json") and n[:-5].isdigit()]
-    return max(vs, default=-1)
+def _latest(path: str) -> int:
+    from deimos_spark.operators.delta_interop import latest_version
 
-
-def _table_schema(path: str) -> tuple[T.StructType, list[str]]:
-    """(schema, partition_columns) from the newest metaData action —
-    pure json/pyarrow, runs on the driver at plan time."""
-    ld = _log_dir(path)
-    names = sorted(os.listdir(ld))
-    meta = None
-    for n in names:  # later commits override earlier metaData
-        if n.endswith(".json") and n[:-5].isdigit():
-            with open(os.path.join(ld, n)) as fh:
-                for line in fh:
-                    if not line.strip():
-                        continue
-                    a = json.loads(line)
-                    if "metaData" in a:
-                        meta = a["metaData"]
-    if meta is None:
-        # checkpoint-only log (JSON commits expired)
-        import pyarrow.parquet as papq
-
-        ckpts = sorted(
-            n for n in names if n.endswith(".checkpoint.parquet")
-        )
-        for n in reversed(ckpts):
-            t = papq.read_table(os.path.join(ld, n), columns=["metaData"])
-            for row in t.to_pylist():
-                if row.get("metaData") and row["metaData"].get("schemaString"):
-                    meta = row["metaData"]
-                    break
-            if meta:
-                break
-    if meta is None:
-        raise ValueError(f"{path}: no metaData action in _delta_log")
-    schema = T.StructType.fromJson(json.loads(meta["schemaString"]))
-    return schema, list(meta.get("partitionColumns") or [])
+    return latest_version(_reader(path).log_dir)
 
 
 def _cast_pval(raw: str | None, dt: T.DataType):
@@ -107,43 +82,18 @@ def _cast_pval(raw: str | None, dt: T.DataType):
 class _DeltaFilePartition(InputPartition):
     def __init__(
         self,
-        table: str,
-        rel: str,
-        pvals: dict,
+        action: dict,
         version: int,
         change_type: str | None = None,
-        commit_ts: int | None = None,
-        is_cdc: bool = False,
+        commit_ts: float | None = None,
     ):
-        self.table = table
-        self.rel = rel
-        self.pvals = pvals
+        # the add (or, in change-feed mode, cdc) action naming the file
+        self.action = action
         self.version = version
         # change-feed mode: 'insert' for add-derived files, None for
         # cdc files (their _change_type column is IN the file)
         self.change_type = change_type
         self.commit_ts = commit_ts
-        self.is_cdc = is_cdc
-
-
-def _commit_ts_ms(path: str) -> int:
-    """commitInfo.inCommitTimestamp > commitInfo.timestamp > mtime —
-    the same resolution chain as the batch reader's _commit_ts."""
-    ts = os.path.getmtime(path) * 1000.0
-    try:
-        with open(path) as fh:
-            for line in fh:
-                if not line.strip() or '"commitInfo"' not in line:
-                    continue
-                ci = json.loads(line).get("commitInfo") or {}
-                if ci.get("inCommitTimestamp") is not None:
-                    ts = float(ci["inCommitTimestamp"])
-                elif ci.get("timestamp") is not None:
-                    ts = float(ci["timestamp"])
-                break
-    except (OSError, ValueError):
-        pass
-    return int(ts)
 
 
 class _DeltaStreamReader(DataSourceStreamReader):
@@ -152,6 +102,8 @@ class _DeltaStreamReader(DataSourceStreamReader):
         path: str,
         starting: str,
         ignore_changes: bool,
+        table,
+        schema: T.StructType,
         read_change_feed: bool = False,
     ):
         if starting not in ("earliest", "latest"):
@@ -162,29 +114,30 @@ class _DeltaStreamReader(DataSourceStreamReader):
         self.starting = starting
         self.ignore_changes = ignore_changes
         self.read_change_feed = read_change_feed
-        self.schema, self.pcols = _table_schema(path)
+        # the table's schema/protocol state, without its file set
+        self.table = table
+        self.schema = schema
 
     def initialOffset(self) -> dict:
         if self.starting == "latest":
-            return {"version": _latest_version(self.path)}
+            return {"version": _latest(self.path)}
         return {"version": -1}
 
     def latestOffset(self) -> dict:
-        return {"version": _latest_version(self.path)}
+        return {"version": _latest(self.path)}
 
     def partitions(self, start: dict, end: dict):
+        r = _reader(self.path)
         out = []
         for v in range(int(start["version"]) + 1, int(end["version"]) + 1):
-            p = os.path.join(_log_dir(self.path), f"{v:020d}.json")
-            try:
-                with open(p) as fh:
-                    lines = [ln for ln in fh.read().splitlines() if ln.strip()]
-            except OSError:
-                continue  # expired commit — nothing to emit for it
-            actions = [json.loads(ln) for ln in lines]
             if self.read_change_feed:
-                out.extend(self._cdf_partitions(v, p, actions))
+                is_cdc, files, ts = r._change_files(v)
+                out.extend(
+                    _DeltaFilePartition(a, v, None if is_cdc else "insert", ts)
+                    for a in files
+                )
                 continue
+            actions = r._commit_actions(v)
             if any("remove" in a for a in actions) and not self.ignore_changes:
                 raise ValueError(
                     f"deltastream: commit {v} of {self.path} contains remove "
@@ -192,109 +145,77 @@ class _DeltaStreamReader(DataSourceStreamReader):
                     "Set ignoreChanges=true to emit only added files "
                     "(re-delivery accepted)."
                 )
-            for a in actions:
-                if "add" in a:
-                    out.append(
-                        _DeltaFilePartition(
-                            self.path,
-                            a["add"]["path"],
-                            dict(a["add"].get("partitionValues") or {}),
-                            v,
-                        )
-                    )
+            out.extend(
+                _DeltaFilePartition(a["add"], v) for a in actions if "add" in a
+            )
         return out
 
-    def _cdf_partitions(self, v: int, commit_path: str, actions: list[dict]):
-        """Change-feed planning for one commit, the streaming twin of the
-        batch reader's read_changes: cdc actions win exclusively; add-only
-        commits derive inserts; row-level changes without cdc files fail
-        the stream loudly."""
-        ts = _commit_ts_ms(commit_path)
-        cdc = [a["cdc"] for a in actions if a.get("cdc")]
-        if cdc:
-            return [
-                _DeltaFilePartition(
-                    self.path,
-                    c["path"],
-                    dict(c.get("partitionValues") or {}),
-                    v,
-                    commit_ts=ts,
-                    is_cdc=True,
-                )
-                for c in cdc
-            ]
-        adds = [
-            a["add"]
-            for a in actions
-            if a.get("add") and a["add"].get("dataChange", True)
-        ]
-        removes = [
-            a["remove"]
-            for a in actions
-            if a.get("remove") and a["remove"].get("dataChange", True)
-        ]
-        if removes or any(a.get("deletionVector") for a in adds):
-            raise ValueError(
-                f"deltastream: commit {v} of {self.path} contains "
-                "row-level changes (remove/deletion-vector) without cdc "
-                "files — the change feed is not reconstructable. Enable "
-                "CDF on the writer (DeltaKeyedTable enable_cdf=True)."
-            )
-        return [
-            _DeltaFilePartition(
-                self.path,
-                a["path"],
-                dict(a.get("partitionValues") or {}),
-                v,
-                change_type="insert",
-                commit_ts=ts,
-            )
-            for a in adds
-        ]
-
     def read(self, partition: _DeltaFilePartition):
+        import numpy as np
+        import pyarrow as pa
         import pyarrow.parquet as papq
+        from pyspark.sql.pandas.types import to_arrow_schema
 
-        schema, pcols = self.schema, self.pcols
-        data_fields = [f for f in schema.fields if f.name not in pcols]
-        names = [f.name for f in data_fields]
-        cdf = self.read_change_feed
-        if partition.is_cdc:
-            # cdc files carry their own _change_type column
-            names = names + ["_change_type"]
-        tbl = papq.read_table(
-            os.path.join(partition.table, partition.rel),
-            columns=names,
+        from deimos_spark.operators.delta_interop import (
+            _data_fields,
+            _file_field,
+            _physical_name,
         )
-        pvals = {
-            f.name: _cast_pval(partition.pvals.get(f.name), f.dataType)
-            for f in schema.fields
-            if f.name in pcols
-        }
-        cols = {name: col.to_pylist() for name, col in zip(
-            tbl.column_names, (tbl.column(i) for i in range(tbl.num_columns))
-        )}
-        cts = (
-            _dt.datetime.fromtimestamp(
-                (partition.commit_ts or 0) / 1000.0, _dt.timezone.utc
-            ).replace(tzinfo=None)
-            if cdf
-            else None
+        from deimos_spark.operators.deltadv import dv_row_indexes
+
+        snap, a = self.table, partition.action
+        mode = snap.column_mapping
+        target = to_arrow_schema(self.schema)
+        pf = papq.ParquetFile(os.path.join(self.path, a["path"]))
+        # file column by the key the table resolves it by: its physical
+        # name, or its parquet field id in id mode
+        by_key = {}
+        for fld in pf.schema_arrow:
+            fid = (fld.metadata or {}).get(b"PARQUET:field_id")
+            by_key[int(fid) if mode == "id" and fid else fld.name] = fld.name
+        fields = _data_fields(snap)
+        keys = [
+            ff.metadata["parquet.field.id"] if mode == "id" else ff.name
+            for ff in (_file_field(f, mode) for f in fields)
+        ]
+        # cdc files carry their own _change_type column
+        in_file_ct = self.read_change_feed and partition.change_type is None
+        tbl = pf.read(
+            columns=[by_key[k] for k in keys if k in by_key]
+            + (["_change_type"] if in_file_ct else [])
         )
+        if a.get("deletionVector"):
+            keep = np.ones(tbl.num_rows, dtype=bool)
+            keep[dv_row_indexes(self.path, a["deletionVector"])] = False
+            tbl = tbl.filter(pa.array(keep))
         n = tbl.num_rows
-        for i in range(n):
-            row = tuple(
-                pvals[f.name] if f.name in pcols else cols[f.name][i]
-                for f in schema.fields
+
+        def const(value, name):
+            return pa.array([value] * n, target.field(name).type)
+
+        cols = {
+            # a column added after this file was written reads as null
+            f.name: tbl.column(by_key[k]) if k in by_key
+            else const(None, f.name)
+            for f, k in zip(fields, keys)
+        }
+        pvals = a.get("partitionValues") or {}
+        for f in snap.schema.fields:
+            if f.name in snap.partition_columns:
+                raw = pvals.get(_physical_name(f, mode))
+                cols[f.name] = const(_cast_pval(raw, f.dataType), f.name)
+        if self.read_change_feed:
+            cols["_change_type"] = (
+                tbl.column("_change_type") if in_file_ct
+                else const(partition.change_type, "_change_type")
             )
-            if cdf:
-                ct = (
-                    cols["_change_type"][i]
-                    if partition.is_cdc
-                    else partition.change_type
-                )
-                row = row + (ct, partition.version, cts)
-            yield row
+            cols["_commit_version"] = const(partition.version, "_commit_version")
+            # epoch millis → the column's microsecond UTC timestamps
+            cols["_commit_timestamp"] = const(
+                int(partition.commit_ts) * 1000, "_commit_timestamp"
+            )
+        out = pa.table([cols[c] for c in target.names], names=target.names)
+        yield from out.cast(target).to_batches()
 
     def commit(self, end: dict) -> None:
         pass  # Spark's checkpoint is the source of truth
@@ -320,25 +241,33 @@ class DeltaStreamDataSource(DataSource):
             == "true"
         )
 
+    def _table(self):
+        """The table's schema/protocol state (protocol checked),
+        replayed once: Spark pickles this instance after schema() and
+        hands it to streamReader(). The file set is dropped — neither
+        planning nor the executors' reads need it."""
+        if getattr(self, "_meta", None) is None:
+            path = self.options.get("path")
+            if not path:
+                raise ValueError("deltastream needs a 'path' option")
+            self._meta = _reader(path).snapshot(_meta_only=True)
+            self._meta.files, self._meta.adds_raw = {}, {}
+        return self._meta
+
     def schema(self):
-        path = self.options.get("path")
-        if not path:
-            raise ValueError("deltastream needs a 'path' option")
-        schema = _table_schema(path)[0]
+        schema = T.StructType(self._table().schema.fields.copy())
         if self._cdf():
-            schema = T.StructType(schema.fields.copy())
             schema.add("_change_type", T.StringType())
             schema.add("_commit_version", T.LongType())
             schema.add("_commit_timestamp", T.TimestampType())
         return schema
 
     def streamReader(self, schema) -> DataSourceStreamReader:
-        path = self.options.get("path")
-        if not path:
-            raise ValueError("deltastream needs a 'path' option")
         return _DeltaStreamReader(
-            path,
+            self.options["path"],
             self.options.get("startingVersion", "earliest"),
             str(self.options.get("ignoreChanges", "false")).lower() == "true",
+            self._table(),
+            schema,
             read_change_feed=self._cdf(),
         )

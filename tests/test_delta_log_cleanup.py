@@ -106,3 +106,64 @@ def test_cleanup_noop_without_checkpoint_and_respects_retention(
     w2.append(_df(spark, [(2, "b")]))
     assert w2.cleanup_log(retention_seconds=3600.0) == []
     assert f"{0:020d}.json" in _log_names(path)
+
+
+@pytest.mark.parametrize("fmt", ["classic", "multipart", "v2"])
+def test_sessionless_meta_snapshot_matches_json_replay(spark, tmp_path, fmt):
+    """A meta-only snapshot read from a checkpoint alone, by a reader
+    WITHOUT a SparkSession, carries the same version, schema, partition
+    columns, column mapping, protocol, metaData, txns and domains as the
+    JSON replay of the commits the checkpoint replaced — and as the
+    session reader."""
+    path = str(tmp_path / "t")
+    w = DeltaTableWriter(
+        spark, path, schema="id bigint, v string, p string",
+        partition_by=("p",), checkpoint_interval=0,
+        checkpoint_format="v2" if fmt == "v2" else "classic",
+        checkpoint_part_actions=2 if fmt == "multipart" else None,
+    )
+    rows = [(1, "a", "x"), (2, "b", "y")]
+    w.append(
+        spark.createDataFrame(rows, "id bigint, v string, p string"),
+        txn=("job", 0),
+    )
+    meta = dict(DeltaTableReader(spark, path).snapshot().meta_raw)
+    meta["configuration"] = {"delta.enableChangeDataFeed": "true", "k": "v"}
+    w._commit(1, [
+        {"metaData": meta},
+        {"domainMetadata": {
+            "domain": "app.domain", "configuration": "{}", "removed": False,
+        }},
+    ])
+    w.append(
+        spark.createDataFrame(rows, "id bigint, v string, p string"),
+        txn=("other", 7),
+    )
+    truth = DeltaTableReader(spark, path).snapshot(_meta_only=True)
+    assert truth.version == 2
+    w._write_checkpoint(2)
+    w.cleanup_log(retention_seconds=0.0)
+    names = _log_names(path)
+    assert not any(n.endswith(".json") and n[:-5].isdigit() for n in names)
+    if fmt == "multipart":
+        assert sum(".checkpoint.0" in n for n in names) > 1
+
+    def state(s):
+        def clean(d):
+            return {k: v for k, v in (d or {}).items() if v is not None}
+
+        return (
+            s.version, s.schema, s.partition_columns, s.column_mapping,
+            clean(s.protocol_raw), clean(s.meta_raw), s.txns,
+            {d: clean(a) for d, a in s.domains.items()},
+        )
+
+    sessionless = DeltaTableReader(None, path).snapshot(_meta_only=True)
+    assert state(sessionless) == state(truth)
+    assert sessionless.txns == {"job": 0, "other": 7}
+    assert sessionless.meta_raw["configuration"]["k"] == "v"
+    assert state(
+        DeltaTableReader(spark, path).snapshot(_meta_only=True)
+    ) == state(truth)
+    full = DeltaTableReader(spark, path).snapshot()
+    assert state(full) == state(truth) and len(full.files) == 4

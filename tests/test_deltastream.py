@@ -158,3 +158,76 @@ def test_read_change_feed_streams_cdc(spark, tmp_path):
 
     with pytest.raises((StreamingQueryException, Py4JJavaError)):
         _drain(spark, t2, str(tmp_path / "c2"), readChangeFeed="true")
+
+
+def test_name_mapped_table_streams_logical_columns(spark, tmp_path):
+    """A column-mapped table's files carry PHYSICAL names; the stream
+    reads them by physical name and emits the logical schema, like
+    DeltaTableReader.read()."""
+    from tests.test_mapped_writes import _mapped_table
+
+    t = str(tmp_path / "mapped")
+    _mapped_table(t)
+    batches = _drain(spark, t, str(tmp_path / "ckpt"))
+    got = [(r["id"], r["v"]) for rows in batches for r in rows]
+    assert got == [(1, "a")]
+
+
+def test_dv_readd_emits_only_surviving_rows(spark, tmp_path):
+    """A DV-mode delete re-adds the same file with a deletion vector;
+    with ignoreChanges the stream emits that re-add's SURVIVING rows,
+    so the deleted key never comes back."""
+    t = str(tmp_path / "dv")
+    kt = DeltaKeyedTable(
+        spark, t, ["id"], schema="id long, v string", use_dvs=True
+    )
+    kt.upsert(spark.createDataFrame([(1, "a"), (2, "b")], "id long, v string"))
+    kt.delete(spark.createDataFrame([(1,)], "id long"))
+
+    batches = _drain(spark, t, str(tmp_path / "ckpt"), ignoreChanges="true")
+    got = [(r["id"], r["v"]) for rows in batches for r in rows]
+    # key 1 once, from the upsert commit; a re-add of a file that also
+    # holds key 2 re-delivers key 2 (accepted by the option)
+    assert [r for r in got if r[0] == 1] == [(1, "a")]
+    assert (2, "b") in got
+
+
+@pytest.mark.parametrize("fmt", ["classic", "v2"])
+def test_cleaned_log_refuses_earliest_and_serves_latest(spark, tmp_path, fmt):
+    """After log cleanup only the newest checkpoint is left: replaying
+    from `earliest` must fail naming the first missing commit (it
+    cannot be streamed, and skipping it would drop its rows), while
+    `latest` starts at the checkpoint and emits only the next append."""
+    t = str(tmp_path / "cleaned")
+    w = DeltaTableWriter(
+        spark, t, checkpoint_interval=2, checkpoint_format=fmt
+    )
+    for i in range(5):  # v0..v4, checkpoints at v2 and v4
+        w.append(spark.createDataFrame([(i, "old")], "id long, v string"))
+    w.cleanup_log(0)
+    assert not any(
+        n.endswith(".json") and n[:-5].isdigit()
+        for n in os.listdir(os.path.join(t, "_delta_log"))
+    )
+
+    with pytest.raises(Exception, match="commit 0 not available"):
+        _drain(spark, t, str(tmp_path / "c1"))
+
+    rows = []
+    q = (
+        spark.readStream.format("deltastream")
+        .option("path", t)
+        .option("startingVersion", "latest")
+        .load()
+        .writeStream.foreachBatch(lambda df, _bid: rows.extend(df.collect()))
+        .option("checkpointLocation", str(tmp_path / "c2"))
+        .start()
+    )
+    try:
+        q.processAllAvailable()
+        assert rows == []
+        w.append(spark.createDataFrame([(9, "new")], "id long, v string"))
+        q.processAllAvailable()
+    finally:
+        q.stop()
+    assert [(r["id"], r["v"]) for r in rows] == [(9, "new")]
