@@ -30,26 +30,25 @@ def compact_keep_last(
 
     max_by over a struct = ONE hash aggregate with map-side combine — at
     scale this beats the row_number window (which needs a full sort per
-    partition). NULL-keyed rows (unkeyed topics) are kept as-is, matching
-    the reference's "compaction skipped when unkeyed" behavior.
+    partition). NULL-keyed rows (unkeyed topics) are kept as-is, exact
+    duplicates included, matching the reference's "compaction skipped
+    when unkeyed" behavior: each gets a group of its own through a
+    per-row id that is null on keyed rows. One aggregate over one
+    evaluation of `df`, so the batch's decode runs once.
     """
     has_key = None
     for k in key_cols:
         c = F.col(k).isNotNull()
         has_key = c if has_key is None else (has_key | c)
-    keyed = df.filter(has_key)
+    unkeyed_id = F.when(~has_key, F.monotonically_increasing_id())
 
     payload = F.struct(*[F.col(c) for c in df.columns])
     order = F.struct(*[F.col(c) for c in order_cols])
-    compacted = (
-        keyed.groupBy(*key_cols)
+    return (
+        df.groupBy(*key_cols, unkeyed_id.alias("_unkeyed"))
         .agg(F.max_by(payload, order).alias("_row"))
         .select("_row.*")
     )
-    # unkeyed rows bypass compaction entirely (reference skips compaction
-    # when there is no key) — note ~has_key keeps every duplicate
-    unkeyed = df.filter(~F.coalesce(has_key, F.lit(False)))
-    return compacted.unionByName(unkeyed)
 
 
 def slice_ids(
@@ -62,15 +61,23 @@ def slice_ids(
     return df.withColumn("_slice", F.row_number().over(w))
 
 
-def slice_batch(
-    df: DataFrame, key_cols: Sequence[str], order_cols: Sequence[str]
-) -> list[DataFrame]:
-    """Materialize the slices as a list of DataFrames (each has distinct
-    keys), mirroring BatchSlicer.slice's list-of-batches output. The slice
-    count is max occurrences of any key — tiny in practice; each slice is
-    applied sequentially by the consumer merge loop."""
-    sliced = slice_ids(df, key_cols, order_cols).cache()
+def split_slices(sliced: DataFrame) -> list[DataFrame]:
+    """The slices of a `slice_ids` frame, in ascending slice order, each
+    with distinct keys and without the `_slice` column. The slice count
+    is max occurrences of any key — tiny in practice. Every slice is a
+    lazy filter over `sliced`: a caller that applies several
+    materializes `sliced` first (session.materialized), or each slice
+    re-runs its lineage."""
     n = sliced.agg(F.max("_slice")).head()[0] or 0
     return [
         sliced.filter(F.col("_slice") == i).drop("_slice") for i in range(1, n + 1)
     ]
+
+
+def slice_batch(
+    df: DataFrame, key_cols: Sequence[str], order_cols: Sequence[str]
+) -> list[DataFrame]:
+    """The slices as a list of DataFrames (each has distinct keys),
+    mirroring BatchSlicer.slice's list-of-batches output. Nothing is
+    cached: see split_slices."""
+    return split_slices(slice_ids(df, key_cols, order_cols))

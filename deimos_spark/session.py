@@ -9,9 +9,11 @@ same config block applies — only master/memory change.
 from __future__ import annotations
 
 import os
+from collections.abc import Iterator
+from contextlib import contextmanager
 from dataclasses import dataclass
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 # Runtime confs applied to *any* session we touch (driver-owned sessions
 # included) — these are settable post-launch and are required for
@@ -245,6 +247,38 @@ def spread_small(df, sf_dir: str, by: str | None = None):
     except Exception:
         n = 32
     return df.repartition(max(8, n))
+
+
+_CACHED_PARTITIONING = "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning"
+
+
+@contextmanager
+def materialized(df: DataFrame) -> Iterator[DataFrame]:
+    """Scope `df` as one cached copy: persisted on entry, unpersisted on
+    exit. Every action inside the block — and every DataFrame derived
+    from `df`, before or after entry — scans that copy instead of
+    re-running `df`'s lineage (UDF decodes, shuffles, source scans).
+
+    The persist is lazy: a block that runs no action evaluates nothing.
+
+    Spark plans a cached query with AQE's partition coalescing switched
+    off unless `canChangeCachedPlanOutputPartitioning` is true, and it
+    reads that conf when persist() is called, not when the query runs.
+    Left off, a cached 600-row shuffle stays at spark.sql.shuffle.partitions
+    partitions and a write over it produces that many files. The conf is
+    set only around the persist() call: a session-wide setting would
+    change every other cached plan too."""
+    conf = df.sparkSession.conf
+    prev = conf.get(_CACHED_PARTITIONING)
+    conf.set(_CACHED_PARTITIONING, "true")
+    try:
+        df.persist()
+    finally:
+        conf.set(_CACHED_PARTITIONING, prev)
+    try:
+        yield df
+    finally:
+        df.unpersist()
 
 
 def sort_small(df, *cols):

@@ -15,6 +15,8 @@ Semantics (matching the public Delta streaming-source contract):
   re-emit rows); `ignoreChanges=true` opts into emitting only the adds
   of such commits, re-delivery accepted (Delta's own option). An add
   that carries a deletion vector emits only its surviving rows.
+  `dataChange: false` actions (OPTIMIZE) are skipped: they rearrange
+  rows without changing them.
 - `startingVersion`: `earliest` (default — replay from commit 0) or
   `latest` (only new commits).
 - a range whose commits the log has cleaned (log cleanup below a
@@ -137,7 +139,13 @@ class _DeltaStreamReader(DataSourceStreamReader):
                     for a in files
                 )
                 continue
-            actions = r._commit_actions(v)
+            # dataChange=false adds/removes (OPTIMIZE) rearrange rows the
+            # stream already emitted: skipped, as _change_files does
+            actions = [
+                a
+                for a in r._commit_actions(v)
+                if (a.get("add") or a.get("remove") or {}).get("dataChange", True)
+            ]
             if any("remove" in a for a in actions) and not self.ignore_changes:
                 raise ValueError(
                     f"deltastream: commit {v} of {self.path} contains remove "

@@ -29,6 +29,7 @@ import threading
 import time
 from typing import Callable
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -102,7 +103,11 @@ class OutboxTable:
         broadcast into an anti-join). A crash before the commit leaves
         every row pending; an append that commits first makes the merge
         retry on the new snapshot, so its rows survive (at-least-once)."""
-        keys = self.spark.createDataFrame([(int(i),) for i in ids], "id long")
+        # from Arrow, not a list of tuples: a list becomes a Python RDD,
+        # and every scan of it starts Python workers
+        keys = self.spark.createDataFrame(
+            pa.table({"id": pa.array(ids, pa.int64())})
+        )
         self.table.merge(delete_keys=keys)
 
     def pending_count(self) -> int:
@@ -186,13 +191,12 @@ class OutboxRelay:
                     .orderBy("id")
                     .limit(self.batch_size)
                 )
-                if self._should_compact(topic):
-                    keyed = batch_df.filter(F.col("key").isNotNull())
-                    out_df = compact_keep_last(keyed, ["key"], ["id"]).unionByName(
-                        batch_df.filter(F.col("key").isNull())
-                    )
-                else:
-                    out_df = batch_df
+                out_df = (
+                    # null-key rows pass through compaction uncompacted
+                    compact_keep_last(batch_df, ["key"], ["id"])
+                    if self._should_compact(topic)
+                    else batch_df
+                )
                 if self.mode == "executor":
                     sent = self._produce_executor(topic, out_df)
                 else:

@@ -32,6 +32,8 @@ from typing import Callable
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from deimos_spark.session import materialized
+
 
 @dataclass
 class PollCursor:
@@ -313,16 +315,13 @@ class ChangelogPoller:
             )
             if self.key_cols:
                 changes = delta_feed_to_ops(changes, self.key_cols)
-        # ONE changelog assembly per cycle: persist before counting so
-        # the publish pass reads the cached result instead of re-running
-        # the feed (for Iceberg that would be a second parent-snapshot
-        # read + delete-set join every poll).
-        changes = changes.persist()
-        try:
+        # ONE changelog assembly per cycle: materialized before counting
+        # so the publish pass reads the cached result instead of
+        # re-running the feed (for Iceberg that would be a second
+        # parent-snapshot read + delete-set join every poll).
+        with materialized(changes):
             n = changes.count()
             if n:
                 self.publish(changes)
-        finally:
-            changes.unpersist()
         self._save_cursor(head)  # commit AFTER publish
         return n

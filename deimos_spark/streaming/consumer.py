@@ -9,6 +9,13 @@ batch_consumption.rb — behavior only):
   partition into upserts / tombstones → bulk upsert + bulk delete;
   else: slice batch (order-preserving) → apply slices sequentially.
 
+Each batch is evaluated once: the compacted (or slice-numbered) batch is
+materialized for the duration of one consume (session.materialized), so
+the upsert/delete split and every read the table's merge makes of them
+scan that one copy instead of re-running the decode, the compaction
+shuffle and the source scan. A merge that finds its `txn` already
+applied evaluates nothing.
+
 Works in two modes with the SAME pipeline code:
 - batch mode: `consume_batch(df)` on any kafka-shaped DataFrame
   (key BINARY, value BINARY, partition INT, offset LONG);
@@ -26,9 +33,14 @@ from typing import TYPE_CHECKING, Callable
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from deimos_spark.operators.compaction import compact_keep_last, slice_batch
+from deimos_spark.operators.compaction import (
+    compact_keep_last,
+    slice_ids,
+    split_slices,
+)
 from deimos_spark.schemas.avro import AvroSchema
 from deimos_spark.schemas.codecs import get_codec
+from deimos_spark.session import materialized
 
 if TYPE_CHECKING:
     from deimos_spark.operators.delta_interop import DeltaKeyedTable
@@ -205,7 +217,8 @@ class BatchConsumer:
 
         if cfg.compacted:
             df = compact_keep_last(df, cfg.key_cols, cfg.order_cols)
-            self._apply(df, txn)
+            with materialized(df):
+                self._apply(df, txn)
         else:
             if txn is not None:
                 # each slice is its own merge; they'd all claim the same
@@ -216,8 +229,10 @@ class BatchConsumer:
                 )
             # order-preserving mode: slices applied sequentially, each slice
             # has distinct keys (reference BatchSlicer)
-            for sl in slice_batch(df, cfg.key_cols, cfg.order_cols):
-                self._apply(sl)
+            sliced = slice_ids(df, cfg.key_cols, cfg.order_cols)
+            with materialized(sliced):
+                for sl in split_slices(sliced):
+                    self._apply(sl)
 
     def _apply(
         self, df: DataFrame, txn: tuple[str, int] | None = None

@@ -39,6 +39,33 @@ def test_compact_preserves_unkeyed(spark):
     assert vs == ["A2", "u1", "u2"]  # unkeyed rows all kept
 
 
+def test_compact_is_one_aggregate_and_keeps_unkeyed_duplicates(spark):
+    """One evaluation of the input: a single Aggregate and no Union
+    branch. Exact-duplicate unkeyed rows each get their own group, so
+    both survive; the output keeps the input's columns in order."""
+    rows = [
+        Row(k=None, v="u", partition=0, offset=0),
+        Row(k=None, v="u", partition=0, offset=0),
+        Row(k="A", v="A1", partition=0, offset=1),
+        Row(k="A", v="A2", partition=0, offset=2),
+    ]
+    df = spark.createDataFrame(rows)
+    out = compact_keep_last(df, ["k"], ["partition", "offset"])
+    plan = out._jdf.queryExecution().optimizedPlan().toString()
+    assert plan.count("Aggregate [") == 1, plan
+    assert "Union" not in plan, plan
+    assert out.columns == df.columns
+    got = sorted((r["k"] or "", r["v"]) for r in out.collect())
+    assert got == [("", "u"), ("", "u"), ("A", "A2")]
+
+
+def test_slice_batch_caches_nothing(spark):
+    spark.catalog.clearCache()
+    slices = slice_batch(_batch(spark), ["k"], ["partition", "offset"])
+    assert [s.count() for s in slices] == [3, 2, 1]
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
 def test_slice_ids_match_reference_algorithm(spark):
     out = slice_ids(_batch(spark), ["k"], ["partition", "offset"])
     got = {r["v"]: r["_slice"] for r in out.collect()}

@@ -9,6 +9,8 @@ lakehouse sink the protocol's transaction identifier is the native
 equivalent.
 """
 
+import contextlib
+
 import pytest
 from pyspark.sql import Row
 
@@ -116,3 +118,98 @@ def test_attach_passes_batch_id(spark, tmp_path, producer):
         t is not None and t[0] == "stream-app" and isinstance(t[1], int)
         for t in seen
     )
+
+
+# ------------------------------------------------- one evaluation per batch
+
+@contextlib.contextmanager
+def _adaptive(spark):
+    """AQE on for the block (the default for a session autotune has not
+    switched off), then the session's own value back."""
+    prev = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "true")
+    try:
+        yield
+    finally:
+        spark.conf.set("spark.sql.adaptive.enabled", prev)
+
+
+def _cache_empty(spark) -> bool:
+    return spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
+class _CountingCodec:
+    """The consumer's value codec with every evaluation of its decode
+    adding the rows it saw to `acc`."""
+
+    def __init__(self, inner, acc):
+        self.inner, self.acc = inner, acc
+
+    def decode(self, col):
+        import pandas as pd
+        from pyspark.sql import functions as F
+
+        acc = self.acc
+
+        @F.pandas_udf("binary")
+        def count_rows(s: pd.Series) -> pd.Series:
+            acc.add(len(s))
+            return s
+
+        return self.inner.decode(count_rows(col))
+
+
+def _messages(spark, producer, n, start_offset=0):
+    """n messages over n // 2 keys (compaction keeps half), spread over
+    4 input partitions like a 4-partition topic's, so compaction's
+    aggregate shuffles."""
+    return _kafka_shaped(
+        spark, producer,
+        [Row(test_id=f"k{i % (n // 2)}", some_int=i) for i in range(n)],
+        start_offset=start_offset,
+    ).repartition(4, "offset")
+
+
+def test_consume_decodes_each_message_once(spark, tmp_path, producer):
+    """One consume evaluates its batch once: the upsert/delete split and
+    every read the merge makes (affected keys, survivors, the write)
+    scan one materialized copy. A replayed txn evaluates nothing."""
+    c = _consumer(spark, str(tmp_path / "t"))
+    acc = spark.sparkContext.accumulator(0)
+    c.codec = _CountingCodec(c.codec, acc)
+    with _adaptive(spark):
+        c.consume_batch(_messages(spark, producer, 20), txn=("job", 0))
+        assert acc.value == 20
+        c.consume_batch(_messages(spark, producer, 20, 20), txn=("job", 1))
+        assert acc.value == 40
+        c.consume_batch(_messages(spark, producer, 20, 20), txn=("job", 1))
+        assert acc.value == 40
+    got = {r["test_id"]: r["some_int"] for r in c.table.read().collect()}
+    assert got == {f"k{i}": 10 + i for i in range(10)}
+
+
+@pytest.mark.parametrize("compacted", [True, False], ids=["compacted", "sliced"])
+def test_consume_leaves_no_cached_batch(spark, tmp_path, producer, compacted):
+    spark.catalog.clearCache()
+    c = _consumer(spark, str(tmp_path / "t"), compacted=compacted)
+    c.consume_batch(_messages(spark, producer, 8))
+    assert _cache_empty(spark)
+    got = {r["test_id"]: r["some_int"] for r in c.table.read().collect()}
+    assert got == {f"k{i}": 4 + i for i in range(4)}
+
+
+def test_materialized_batch_does_not_fan_out_the_write(spark, tmp_path, producer):
+    """A cached plan keeps its shuffle's partition count unless
+    canChangeCachedPlanOutputPartitioning is on when it is cached: the
+    consume's write must stay coalesced to one file per commit, and the
+    conf goes back to its previous value."""
+    key = "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning"
+    before = spark.conf.get(key)
+    c = _consumer(spark, str(tmp_path / "t"))
+    with _adaptive(spark):
+        c.consume_batch(_messages(spark, producer, 40))
+        c.consume_batch(_messages(spark, producer, 40, 40))
+    log = tmp_path / "t" / "_delta_log"
+    adds = [(log / f"{v:020d}.json").read_text().count('{"add"') for v in (0, 1)]
+    assert adds == [1, 1]
+    assert spark.conf.get(key) == before

@@ -231,3 +231,22 @@ def test_cleaned_log_refuses_earliest_and_serves_latest(spark, tmp_path, fmt):
     finally:
         q.stop()
     assert [(r["id"], r["v"]) for r in rows] == [(9, "new")]
+
+
+@pytest.mark.parametrize("ignore_changes", ["false", "true"])
+def test_optimize_commit_emits_nothing(spark, tmp_path, ignore_changes):
+    """An OPTIMIZE commit (dataChange=false removes and re-adds)
+    rearranges rows the stream already emitted: it neither fails a
+    default stream nor re-emits the compacted rows under
+    ignoreChanges."""
+    t = str(tmp_path / "opt")
+    w = DeltaTableWriter(spark, t)
+    w.append(spark.createDataFrame([(1, "a"), (2, "b")], "id long, v string"))
+    w.append(spark.createDataFrame([(3, "c")], "id long, v string"))
+    w.optimize()
+
+    batches = _drain(
+        spark, t, str(tmp_path / "ckpt"), ignoreChanges=ignore_changes
+    )
+    got = sorted((r["id"], r["v"]) for rows in batches for r in rows)
+    assert got == [(1, "a"), (2, "b"), (3, "c")]
