@@ -49,15 +49,19 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from deimos_spark.operators.layout import (
+    Footer,
+    arrange,
+    drop_dv_rows,
+    footer,
+    hive_value,
+    stage,
+    unlink_quietly,
+)
+
 
 class DeltaProtocolError(Exception):
     """Table uses a protocol/feature this reader doesn't support."""
-
-
-# stands in for "" in hive partition dir names (Spark folds "" into
-# __HIVE_DEFAULT_PARTITION__, conflating it with null) — never appears in
-# the log; partitionValues record the real "" per the Delta protocol
-_EMPTY_SENTINEL = "__DEIMOS_EMPTY_STRING__"
 
 
 def _pv_str(o) -> str | None:
@@ -1899,67 +1903,25 @@ class DeltaTableReader:
         snap: DeltaSnapshot,
         keep_meta: bool = False,
     ) -> DataFrame:
-        """Scan files that carry deletion vectors, dropping deleted rows.
-
-        The drop set is built DISTRIBUTED: the driver ships only the
-        per-file DV *descriptors* (a few hundred bytes each); executors
-        decode the bitmaps via `mapInPandas` and expand them to
-        (file, row_index) rows, which anti-join against
-        `_metadata.row_index` — the selection-vector shape real kernels
-        push to their scans. DV *cardinality* can be tens of millions of
-        rows while `sizeInBytes` stays in the KBs (that is the point of
-        bitmap compression), so materializing the expansion driver-side
-        would blow up the driver; only the expansion's SIZE decides the
-        join strategy: descriptors carry `cardinality`, so when the total
-        is small we broadcast, otherwise it stays a shuffle anti-join.
-        Only the files that HAVE a DV pay the metadata projection + join.
-        """
-        from .deltadv import dv_row_indexes  # noqa: F401 (executor import)
+        """Scan files that carry deletion vectors, dropping deleted rows:
+        the file layer's one DV anti-join (layout.drop_dv_rows) on
+        (`_metadata.file_path`, `_metadata.row_index`). The driver ships
+        only the per-file DV descriptors; executors decode the bitmaps
+        (deltadv.dv_row_indexes). Only the files that HAVE a DV pay the
+        metadata projection + join."""
+        from deimos_spark.operators.deltadv import dv_row_indexes
 
         table_path = self.path
-        desc_rows = [
-            (
-                os.path.abspath(os.path.join(self.path, rel)),
-                json.dumps(snap.adds_raw[rel]["deletionVector"]),
+        descs = []
+        for rel in rel_paths:
+            dv = snap.adds_raw[rel]["deletionVector"]
+            descs.append(
+                (
+                    os.path.abspath(os.path.join(self.path, rel)),
+                    dv,
+                    (dv or {}).get("cardinality", 0),
+                )
             )
-            for rel in rel_paths
-        ]
-        total_card = sum(
-            int((snap.adds_raw[rel]["deletionVector"] or {}).get(
-                "cardinality", 0
-            ))
-            for rel in rel_paths
-        )
-        desc_df = self.spark.createDataFrame(
-            desc_rows, "__dv_file string, __dv_desc string"
-        )
-        if len(desc_rows) > 1:
-            desc_df = desc_df.repartition(min(len(desc_rows), 64))
-
-        def _expand(batches):
-            import json as _json
-
-            import pandas as _pd
-
-            from deimos_spark.operators.deltadv import (
-                dv_row_indexes as _dvri,
-            )
-
-            for pdf in batches:
-                for f, dj in zip(pdf["__dv_file"], pdf["__dv_desc"]):
-                    idx = _dvri(table_path, _json.loads(dj))
-                    yield _pd.DataFrame(
-                        {"__dv_file": f, "__dv_ri": idx.astype("int64")}
-                    )
-
-        drop = desc_df.mapInPandas(
-            _expand, "__dv_file string, __dv_ri long"
-        )
-        # broadcast only when the descriptor-declared cardinality is
-        # bounded; a heavily-deleted table falls back to a shuffle
-        # anti-join that never concentrates the expansion anywhere
-        if total_card <= 4_000_000:
-            drop = F.broadcast(drop)
         df = (
             self.spark.read.schema(data_schema)
             .parquet(*[os.path.join(self.path, p) for p in rel_paths])
@@ -1969,7 +1931,13 @@ class DeltaTableReader:
             )
             .withColumn("__dv_ri", F.col("_metadata.row_index"))
         )
-        out = df.join(drop, ["__dv_file", "__dv_ri"], "left_anti")
+        out = drop_dv_rows(
+            df,
+            "__dv_file",
+            "__dv_ri",
+            descs,
+            lambda d: dv_row_indexes(table_path, d),
+        )
         if keep_meta:
             # surviving rows keep (file, row index) for row-id
             # derivation — renamed to the _assemble row-id temps
@@ -2089,8 +2057,8 @@ class DeltaTableWriter:
         return latest_version(self.log_dir)
 
     def _add_num_records(self, a: dict) -> int:
-        """numRecords for an add action: from its stats JSON, else one
-        parquet footer read (no data pages)."""
+        """numRecords for an add action: from its stats JSON, else the
+        file's footer (layout.footer, no data pages)."""
         s = a.get("stats")
         if s:
             try:
@@ -2103,11 +2071,7 @@ class DeltaTableWriter:
                         return int(n)
             except (ValueError, TypeError):
                 pass
-        import pyarrow.parquet as papq
-
-        return papq.ParquetFile(
-            os.path.join(self.path, a["path"])
-        ).metadata.num_rows
+        return footer(os.path.join(self.path, a["path"])).rows
 
     def _row_tracking_patch(
         self, snap: DeltaSnapshot | None, actions: list[dict], version: int
@@ -2745,82 +2709,38 @@ class DeltaTableWriter:
 
     def _stage_files(
         self, df: DataFrame, cmap: dict | None = None, cdc: bool = False
-    ) -> list[tuple[str, dict]]:
-        """Write df as parquet and move the files into the table, Delta
-        layout: partition columns stripped from the files, their values
-        returned per file as (table-relative path, partitionValues).
-        Data files land under hive-style partition dirs; change data
-        files (`cdc`) all land in `_change_data/`. `cmap` (column-mapped
-        tables) lands PHYSICAL column names + field ids in the files and
-        keys partitionValues on physical names — both spec requirements
-        for mapped tables."""
-        import shutil
-        import uuid
-
-        uid = uuid.uuid4().hex[:12]
-        prefix = "cdc" if cdc else "part"
-        staging = os.path.join(self.path, f".staging_{prefix}_{uid}")
+    ) -> list[tuple[str, dict, Footer | None]]:
+        """Write df as parquet and move the files into the table through
+        the file layer's staging walk (layout.stage), Delta layout:
+        partition columns stripped from the files, their values returned
+        per file as (table-relative path, partitionValues, footer). Data
+        files land under hive-style partition dirs and zero-row data
+        files are dropped; change data files (`cdc`) all land in
+        `_change_data/`, empty or not. `cmap` (column-mapped tables)
+        lands PHYSICAL column names + field ids in the files and keys
+        partitionValues on physical names — both spec requirements for
+        mapped tables. "" and null partition values stay distinct, as
+        the protocol's partitionValues require."""
         pcols = list(self.partition_by)
         if cmap:
             df = self._to_physical(df, cmap)
             pcols = [cmap.get(c, (c, None))[0] for c in pcols]
-        # Spark writes BOTH null and empty-string partition values to the
-        # __HIVE_DEFAULT_PARTITION__ directory, but the Delta protocol
-        # distinguishes "" from null in partitionValues. Substitute "" with
-        # a sentinel before writing so the hive dir name round-trips; the
-        # sentinel is mapped back to "" in the recorded partitionValues
-        # (dir names are arbitrary — the log is the source of truth).
-        for f in df.schema.fields:
-            if f.name in pcols and isinstance(f.dataType, T.StringType):
-                df = df.withColumn(
-                    f.name,
-                    F.when(
-                        F.col(f.name) == "", F.lit(_EMPTY_SENTINEL)
-                    ).otherwise(F.col(f.name)),
-                )
-        out = df.write.mode("overwrite")
-        if pcols:
-            out = out.partitionBy(*pcols)
-        out.parquet(staging)
-        staged: list[tuple[str, dict]] = []
-        for root, _dirs, files in os.walk(staging):
-            pq = sorted(f for f in files if f.endswith(".parquet"))
-            if not pq:
-                continue
-            reldir = os.path.relpath(root, staging)
-            pvals = {}
-            for seg in reldir.split(os.sep):
-                if "=" not in seg:
-                    continue
-                k, v = seg.split("=", 1)
-                val = (
-                    None if v == "__HIVE_DEFAULT_PARTITION__"
-                    else _unescape(v)
-                )
-                pvals[k] = "" if val == _EMPTY_SENTINEL else val
-            dest = (
-                "_change_data" if cdc
-                else "" if reldir == os.curdir
-                else reldir
-            )
-            os.makedirs(os.path.join(self.path, dest), exist_ok=True)
-            for f in pq:
-                rel = os.path.join(
-                    dest, f"{prefix}-{uid}-{len(staged):05d}.parquet"
-                )
-                os.rename(os.path.join(root, f), os.path.join(self.path, rel))
-                staged.append((rel, pvals))
-        shutil.rmtree(staging, ignore_errors=True)
-        return staged
+        return stage(
+            df,
+            self.path,
+            pcols,
+            (lambda d, _: "_change_data") if cdc else (lambda d, _: d),
+            prefix="cdc-" if cdc else "part-",
+            keep_empty=cdc,
+        )
 
     def _write_files(
         self, df: DataFrame, cmap: dict | None = None,
         pre_arranged: bool = False,
     ) -> list[dict]:
         """Write df as data files (see _stage_files) and return their add
-        actions. A file whose footer reports 0 rows is deleted, not
-        added: an empty batch commits no add. `pre_arranged`: the caller
-        already partitioned+sorted the rows (OPTIMIZE ZORDER) —
+        actions; an empty batch commits no add. `pre_arranged`: the
+        caller already partitioned+sorted the rows (OPTIMIZE ZORDER) —
         re-sorting on sort_by here would destroy that arrangement."""
         import time as _time
 
@@ -2833,24 +2753,15 @@ class DeltaTableWriter:
                 raise DeltaProtocolError(
                     f"sort_by columns {missing} not in batch schema"
                 )
-            cols = [F.col(c).asc_nulls_first() for c in self.sort_by]
-            ranged = (
-                df.repartitionByRange(self.sort_partitions, *cols)
-                if self.sort_partitions
-                else df.repartitionByRange(*cols)
-            )
-            df = ranged.sortWithinPartitions(*cols)
-        adds: list[dict] = []
-        for rel, pvals in self._stage_files(df, cmap):
-            add = self._add_action(rel, pvals, _time)
-            stats = add["add"].get("stats")
-            if stats is not None and json.loads(stats)["numRecords"] == 0:
-                os.unlink(os.path.join(self.path, rel))
-                continue
-            adds.append(add)
-        return adds
+            df = arrange(df, self.sort_by, self.sort_partitions)
+        return [
+            self._add_action(rel, pvals, _time, foot)
+            for rel, pvals, foot in self._stage_files(df, cmap)
+        ]
 
-    def _add_action(self, rel: str, pvals: dict, _time) -> dict:
+    def _add_action(
+        self, rel: str, pvals: dict, _time, foot: Footer | None = None
+    ) -> dict:
         full = os.path.join(self.path, rel)
         add = {
             "path": rel.replace(os.sep, "/"),
@@ -2859,7 +2770,7 @@ class DeltaTableWriter:
             "modificationTime": int(_time.time() * 1000),
             "dataChange": True,
         }
-        stats = self._file_stats(full)
+        stats = self._file_stats(full, foot)
         if stats is not None:
             add["stats"] = stats
         return {"add": add}
@@ -2883,91 +2794,32 @@ class DeltaTableWriter:
                     "dataChange": False,
                 }
             }
-            for rel, pvals in self._stage_files(df, cmap, cdc=True)
+            for rel, pvals, _ in self._stage_files(df, cmap, cdc=True)
         ]
 
     @staticmethod
-    def _file_stats(full: str) -> str | None:
+    def _file_stats(full: str, foot: Footer | None = None) -> str | None:
         """Per-file stats JSON (PROTOCOL.md "Per-file Statistics"):
-        numRecords + minValues/maxValues/nullCount for primitive
-        columns, aggregated from the parquet FOOTER (no data read —
-        one metadata fetch per written file). This is what lets any
-        conforming reader data-skip our tables. Conservative by
-        omission: columns whose footer stats are absent or rejected in
-        ANY row group, whose types we don't render (nested, binary,
-        timestamps, float/double — footers exclude NaN from min/max, so
-        float bounds can provably-wrong-skip under NaN-largest
-        ordering), or whose string bounds exceed 32 chars (naive
-        truncation would produce a WRONG upper bound) simply don't
-        appear — absent stats never mislead. nullCount only appears for
-        columns where EVERY row group reported a null_count."""
-        try:
-            import pyarrow.parquet as pq
-
-            md = pq.read_metadata(full)
-        except Exception:
-            return None
-        mins: dict = {}
-        maxs: dict = {}
-        nulls: dict = {}
-        nulls_partial: set = set()  # some row group lacked a null_count
-        seen_all: set = set()
-        for rg in range(md.num_row_groups):
-            g = md.row_group(rg)
-            for ci in range(g.num_columns):
-                col = g.column(ci)
-                name = col.path_in_schema
-                if "." in name:
-                    continue  # nested: out of scope
-                st = col.statistics
-                # nullCount accumulates BEFORE any min/max gating — an
-                # all-null row group has no bounds but definitely has
-                # nulls; a partial sum would let readers wrongly skip
-                # IS NULL predicates, so any gap poisons the column.
-                if st is not None and st.null_count is not None:
-                    nulls[name] = nulls.get(name, 0) + st.null_count
-                else:
-                    nulls_partial.add(name)
-                if st is None or not st.has_min_max:
-                    seen_all.discard(name)
-                    mins.pop(name, None)
-                    maxs.pop(name, None)
-                    continue
-                lo, hi = st.min, st.max
-                # floats are NOT boundable from footers: parquet writers
-                # (parquet-format recommendation) exclude NaN from
-                # min/max, so a footer max can read 0.5 on a file whose
-                # data contains NaN — under the Delta/Spark NaN-largest
-                # ordering a conforming reader would provably-wrong-skip
-                # `f > 10`. The footer cannot reveal NaN presence, so
-                # float/double columns get no bounds at all (same rule
-                # as the Iceberg _BOUNDABLE_ICE twin).
-                ok = isinstance(lo, (int, str, bool)) and not (
-                    isinstance(lo, str) and (len(lo) > 32 or len(str(hi)) > 32)
-                )
-                if not ok:
-                    # rejected bounds poison the whole column: partial
-                    # min/max covering only earlier row groups would let
-                    # conforming readers skip files that DO match
-                    seen_all.discard(name)
-                    mins.pop(name, None)
-                    maxs.pop(name, None)
-                    continue
-                if rg == 0:
-                    seen_all.add(name)
-                if name in seen_all:
-                    mins[name] = lo if name not in mins else min(mins[name], lo)
-                    maxs[name] = hi if name not in maxs else max(maxs[name], hi)
-        # drop columns missing stats in any row group (partial bounds lie)
-        mins = {k: v for k, v in mins.items() if k in seen_all}
-        maxs = {k: v for k, v in maxs.items() if k in seen_all}
-        nulls = {k: v for k, v in nulls.items() if k not in nulls_partial}
-        out = {"numRecords": md.num_rows}
-        if mins:
-            out["minValues"] = mins
-            out["maxValues"] = maxs
-        if nulls:
-            out["nullCount"] = nulls
+        numRecords + minValues/maxValues/nullCount rendered from the
+        parquet FOOTER (layout.footer, read here unless `foot` already
+        holds it — no data read). This is what lets any conforming
+        reader data-skip our tables. Conservative by omission, under the
+        file layer's rules: columns whose bounds are absent or rejected
+        in ANY row group, nested or of a type we don't render (binary,
+        timestamps, float/double), or strings over 32 chars get no
+        bounds; nullCount only appears for columns where EVERY row group
+        reported a null_count. None when the footer is unreadable."""
+        if foot is None:
+            try:
+                foot = footer(full)
+            except Exception:
+                return None
+        out: dict = {"numRecords": foot.rows}
+        if foot.bounds:
+            out["minValues"] = {k: lo for k, (lo, _) in foot.bounds.items()}
+            out["maxValues"] = {k: hi for k, (_, hi) in foot.bounds.items()}
+        if foot.nulls:
+            out["nullCount"] = foot.nulls
         return json.dumps(out)
 
     def _written(self, actions: list[dict]) -> list[str]:
@@ -2994,11 +2846,7 @@ class DeltaTableWriter:
                 self._commit(v + 1, actions, op=op, snap=snap)
                 return
             except DeltaCommitConflict:
-                for p in written:
-                    try:
-                        os.unlink(p)
-                    except OSError:
-                        pass
+                unlink_quietly(written)
         raise DeltaCommitConflict(
             f"could not commit after {self.max_commit_retries} tries"
         )
@@ -3389,24 +3237,6 @@ class DeltaTableWriter:
         self._commit_loop(attempt)
 
 
-def _unescape(s: str) -> str:
-    """Hive percent-escaping inverse for partition dir segments."""
-    if "%" not in s:
-        return s
-    out, i, n = [], 0, len(s)
-    while i < n:
-        if s[i] == "%" and i + 3 <= n:
-            try:
-                out.append(chr(int(s[i + 1 : i + 3], 16)))
-                i += 3
-                continue
-            except ValueError:
-                pass
-        out.append(s[i])
-        i += 1
-    return "".join(out)
-
-
 def convert_parquet_dir(
     spark: SparkSession,
     path: str,
@@ -3430,12 +3260,13 @@ def convert_parquet_dir(
     table — DeltaTableReader reads it and DeltaTableWriter appends
     version 1+ on top.
 
-    Hive-escaped partition values (%20 etc.) round-trip via
-    `_unescape`. One inherent loss: an EMPTY-STRING value converts to
-    null, because Spark's hive layout writes "" and null to the same
-    `__HIVE_DEFAULT_PARTITION__` directory — the source directory
-    itself already conflated them (our own writer avoids this with a
-    sentinel, _write_files; a plain parquet writer did not)."""
+    Directory segments decode by the file layer's one rule
+    (layout.hive_value: hive %-escapes undone). One inherent loss: an
+    EMPTY-STRING value converts to null, because Spark's hive layout
+    writes "" and null to the same `__HIVE_DEFAULT_PARTITION__`
+    directory — the source directory itself already conflated them
+    (our own writer avoids this with a sentinel, layout.stage; a plain
+    parquet writer did not)."""
     import time as _time
 
     log_dir = os.path.join(path, "_delta_log")
@@ -3471,11 +3302,7 @@ def convert_parquet_dir(
             pvals: dict = {}
             for s in segs:
                 k, v = s.split("=", 1)
-                pvals[k] = (
-                    None
-                    if v == "__HIVE_DEFAULT_PARTITION__"
-                    else _unescape(v)
-                )
+                pvals[k] = hive_value(v)
             if set(pvals) != pset:
                 raise DeltaProtocolError(
                     f"{rel}: directory keys {sorted(pvals)} != "

@@ -34,8 +34,9 @@ this engine can read real Delta tables with MERGE/DELETE history.
 Scale note: DVs are bitmap-compressed and per-file; engines decode them
 centrally when planning a scan (the kernel ships decoded selections to
 tasks). Here the driver ships only each file's DV descriptor; executors
-decode the bitmaps (`mapInPandas` in DeltaTableReader._read_with_dvs)
-into (file, row_index) rows that anti-join the scan. The join is a
+decode the bitmaps (`layout.dv_rows`, a `mapInPandas`) into
+(file, row_index) rows that anti-join the scan (`layout.drop_dv_rows`),
+the same expansion Iceberg's deletion vectors use. The join is a
 broadcast when the descriptors' total cardinality is small, a shuffle
 anti-join otherwise.
 """

@@ -42,6 +42,15 @@ import re
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
+from deimos_spark.operators.layout import (
+    HIVE_NULL,
+    arrange,
+    drop_dv_rows,
+    dv_rows,
+    footer,
+    stage,
+    unlink_quietly,
+)
 from deimos_spark.schemas.avro_ocf import ocf_read
 
 
@@ -435,28 +444,11 @@ def _with_write_defaults(df: DataFrame, ice_fields: list[dict]) -> DataFrame:
     return df
 
 
-def _unlink_quietly(paths) -> None:
-    """Best-effort unlink of files no commit references."""
-    for p in paths:
-        try:
-            os.unlink(p)
-        except OSError:
-            pass
+def _read_dv(desc):
+    """A DV descriptor's deleted positions (runs on executors)."""
+    from deimos_spark.operators.puffin import read_dv_blob
 
-
-def _parquet_rows(path: str) -> int:
-    """A parquet file's footer row count. pyarrow predates the parquet
-    VARIANT logical type and refuses such footers wholesale; the stdlib
-    thrift-compact parser recovers num_rows (a wrong record_count would
-    corrupt manifests)."""
-    try:
-        import pyarrow.parquet as papq
-
-        return papq.read_metadata(path).num_rows
-    except Exception:
-        from deimos_spark.schemas.thriftcompact import read_footer
-
-        return read_footer(path)[0]
+    return read_dv_blob(*desc)
 
 
 def _avro_map(v) -> dict:
@@ -503,6 +495,8 @@ class IcebergTableReader:
                 f"{path} has no metadata/ dir — not an Iceberg table"
             )
         self.pin_version = pin_version
+        # DV cardinality (its manifest record_count) per (puffin, offset)
+        self._dv_cards: dict[tuple[str, int], int] = {}
         self.metadata = self._load_metadata()
         fv = self.metadata.get("format-version", 1)
         if fv not in (1, 2, 3):
@@ -1155,23 +1149,7 @@ class IcebergTableReader:
                         # v3 deletion vector: one roaring bitmap per
                         # referenced data file, addressed by exact
                         # (offset, size) inside the Puffin container
-                        ref = df.get("referenced_data_file")
-                        off = df.get("content_offset")
-                        size = df.get("content_size_in_bytes")
-                        if ref is None or off is None or size is None:
-                            raise IcebergProtocolError(
-                                "PUFFIN delete entry missing "
-                                "referenced_data_file/content_offset/"
-                                "content_size_in_bytes"
-                            )
-                        dvs.append(
-                            (
-                                ref,
-                                self._local(df["file_path"]),
-                                int(off),
-                                int(size),
-                            )
-                        )
+                        dvs.append(self._dv_entry(df))
                     elif fmt != "PARQUET":
                         raise IcebergProtocolError(
                             "non-parquet position-delete files unsupported"
@@ -1501,7 +1479,7 @@ class IcebergTableReader:
         if pos_deletes:
             scan = self._apply_position_deletes(scan, data, pos_deletes)
         if dvs:
-            scan = self._apply_deletion_vectors(scan, data, dvs)
+            scan = self._apply_deletion_vectors(scan, dvs)
         if eq_deletes:
             scan = self._apply_equality_deletes(scan, data, eq_deletes)
         return scan.select(*cols, *meta_cols)
@@ -1738,22 +1716,7 @@ class IcebergTableReader:
                     # deletes (already-dead rows are silenced by the
                     # parent-live semi-join, so the superseded DV's
                     # positions need no explicit subtraction)
-                    ref = df.get("referenced_data_file")
-                    off = df.get("content_offset")
-                    size = df.get("content_size_in_bytes")
-                    if ref is None or off is None or size is None:
-                        raise IcebergProtocolError(
-                            "PUFFIN delete entry missing referenced_data"
-                            "_file/content_offset/content_size_in_bytes"
-                        )
-                    dvs.append(
-                        (
-                            ref,
-                            self._local(df["file_path"]),
-                            int(off),
-                            int(size),
-                        )
-                    )
+                    dvs.append(self._dv_entry(df))
                     continue
                 if fmt != "PARQUET":
                     raise IcebergProtocolError(
@@ -1894,24 +1857,15 @@ class IcebergTableReader:
                     # v3 DV adds: the DV's positions, semi-joined to the
                     # PARENT-live view — already-dead rows (incl. the
                     # superseded DV's positions) drop out structurally
-                    mapping = self.spark.createDataFrame(
-                        [
-                            ("file:" + local, rec)
-                            for rec, local, *_ in parent_data
-                        ],
-                        "__ice_fp string, __del_fp string",
-                    )
-                    dd = (
-                        self._dv_positions(dv_adds)
-                        .join(F.broadcast(mapping), "__del_fp")
-                        .select("__ice_fp", "__ice_pos")
+                    dd = dv_rows(
+                        self.spark,
+                        self._dv_descs(dv_adds),
+                        _read_dv,
+                        "__ice_fp",
+                        "__ice_pos",
                     )
                     dels.append(
-                        base.join(
-                            F.broadcast(dd),
-                            ["__ice_fp", "__ice_pos"],
-                            "left_semi",
-                        )
+                        base.join(dd, ["__ice_fp", "__ice_pos"], "left_semi")
                     )
                 for p, ids in eq:
                     try:
@@ -2043,62 +1997,51 @@ class IcebergTableReader:
         return scan.join(dels, ["__ice_fp", "__ice_pos"], "left_anti")
 
     def _apply_deletion_vectors(
-        self,
-        df: DataFrame,
-        data: list[tuple[str, str, int, dict, int]],
-        dvs: list[tuple[str, str, int, int]],
+        self, df: DataFrame, dvs: list[tuple[str, str, int, int]]
     ) -> DataFrame:
         """v3 deletion vectors: one Puffin-framed roaring bitmap per
-        referenced data file → the same (file, position) anti-join as
-        parquet position deletes. Scale shape: the DESCRIPTORS (one row
-        per deleted file) form the driver-side relation; the bitmaps
-        decode on executors inside mapInPandas, so a billion deleted
-        positions never land on the driver — each descriptor row
-        explodes to its positions in the task that owns it."""
-        from pyspark.sql import functions as F
-
-        dels = self._dv_positions(dvs)
-        # recorded manifest path -> the URI _metadata.file_path reports
-        mapping = self.spark.createDataFrame(
-            [("file:" + local, rec) for rec, local, _, _, _ in data],
-            "__ice_fp string, __del_fp string",
+        referenced data file → the file layer's one DV anti-join
+        (layout.drop_dv_rows) on (__ice_fp, __ice_pos). Only the
+        descriptors leave the driver; the bitmaps decode on executors,
+        so a billion deleted positions never land on the driver."""
+        return drop_dv_rows(
+            df, "__ice_fp", "__ice_pos", self._dv_descs(dvs), _read_dv
         )
-        dels = dels.join(F.broadcast(mapping), "__del_fp").select(
-            "__ice_fp", "__ice_pos"
-        )
-        return df.join(dels, ["__ice_fp", "__ice_pos"], "left_anti")
 
-    def _dv_positions(
+    def _dv_entry(self, df: dict) -> tuple[str, str, int, int]:
+        """A PUFFIN delete entry's data_file → (referenced data file,
+        local puffin path, offset, size); its cardinality (the entry's
+        record_count) is kept for _dv_descs."""
+        ref = df.get("referenced_data_file")
+        off = df.get("content_offset")
+        size = df.get("content_size_in_bytes")
+        if ref is None or off is None or size is None:
+            raise IcebergProtocolError(
+                "PUFFIN delete entry missing referenced_data_file/"
+                "content_offset/content_size_in_bytes"
+            )
+        puf = self._local(df["file_path"])
+        self._dv_cards[(puf, int(off))] = int(df.get("record_count") or 0)
+        return ref, puf, int(off), int(size)
+
+    def _dv_descs(
         self, dvs: list[tuple[str, str, int, int]]
-    ) -> DataFrame:
-        """DV descriptors → a (__del_fp = recorded data-file path,
-        __ice_pos) relation, bitmap decode on EXECUTORS (mapInPandas
-        over the descriptor rows) so positions never collect on the
-        driver. Shared by read()'s anti-join and the changelog's
-        semi-join."""
-        import pandas as pd
-
-        from deimos_spark.operators.puffin import read_dv_blob
-
-        desc = self.spark.createDataFrame(
-            [(ref, local, off, size) for ref, local, off, size in dvs],
-            "__del_fp string, __puffin string, __off long, __size long",
-        )
-
-        def _decode(batches):
-            for pdf in batches:
-                for ref, puf, off, size in zip(
-                    pdf["__del_fp"], pdf["__puffin"],
-                    pdf["__off"], pdf["__size"],
-                ):
-                    idx = read_dv_blob(puf, int(off), int(size))
-                    yield pd.DataFrame(
-                        {"__del_fp": ref, "__ice_pos": idx}
-                    )
-
-        return desc.repartition(max(len(dvs) // 4, 1)).mapInPandas(
-            _decode, "__del_fp string, __ice_pos long"
-        )
+    ) -> list[tuple[str, tuple, int]]:
+        """DV entries (see _dv_entry) → layout.dv_rows descriptors keyed
+        by the URI the scan's `_metadata.file_path` reports for the
+        referenced file (Hadoop renders local files as
+        "file:/abs/path"), so the DV rows join a scan with no
+        path-mapping relation. An entry this reader's _dv_entry did not
+        build has no recorded cardinality and raises KeyError rather
+        than defaulting to one that would always broadcast."""
+        return [
+            (
+                "file:" + self._local(ref),
+                (puf, off, size),
+                self._dv_cards[(puf, off)],
+            )
+            for ref, puf, off, size in dvs
+        ]
 
     # ---------------------------------------------------- column defaults
 
@@ -2462,56 +2405,35 @@ _BOUNDABLE_ICE = {"int": "int", "long": "long", "string": "string"}
 
 
 def _file_column_bounds(path: str, ice_fields: list[dict]):
-    """(lower_bounds, upper_bounds) as [{key: field_id, value: bytes}]
-    from the parquet FOOTER — same conservative rules as the Delta stats
-    emitter: nested columns, NaN floats, >32-char strings, and columns
-    missing stats in any row group are omitted."""
+    """(lower_bounds, upper_bounds) as [{key: field_id, value: bytes}],
+    None where empty. Non-geo bounds come from the parquet FOOTER under
+    the file layer's rules (layout.footer, the same rules Delta's stats
+    JSON renders): top-level columns whose every row group carries
+    accepted bounds, no float or double bounds, strings of 32
+    characters or fewer; of those, int, long and string fields are
+    serialized. A footer pyarrow cannot read yields no footer bounds.
+    Geo bounds are envelopes computed from the column's values (below).
+    """
     from deimos_spark.operators.iceberg_transforms import (
         single_value_serialize,
     )
 
     try:
-        import pyarrow.parquet as papq
-
-        md = papq.read_metadata(path)
+        bounds = footer(path).bounds
     except Exception:
-        return None, None
-    by_name = {
-        f["name"]: (f["id"], _BOUNDABLE_ICE.get(f["type"]))
-        for f in ice_fields
-    }
-    mins: dict = {}
-    maxs: dict = {}
-    complete: set = set()
-    for rg in range(md.num_row_groups):
-        g = md.row_group(rg)
-        for ci in range(g.num_columns):
-            col = g.column(ci)
-            name = col.path_in_schema
-            if "." in name or name not in by_name or by_name[name][1] is None:
-                continue
-            st = col.statistics
-            if st is None or not st.has_min_max:
-                complete.discard(name)
-                continue
-            lo, hi = st.min, st.max
-            if isinstance(lo, str) and (len(lo) > 32 or len(str(hi)) > 32):
-                complete.discard(name)
-                continue
-            if rg == 0:
-                complete.add(name)
-            if name in complete:
-                mins[name] = lo if name not in mins else min(mins[name], lo)
-                maxs[name] = hi if name not in maxs else max(maxs[name], hi)
+        bounds = {}
     lower, upper = [], []
-    for name in sorted(complete):
-        fid, tkey = by_name[name]
-        lb = single_value_serialize(tkey, mins.get(name))
-        ub = single_value_serialize(tkey, maxs.get(name))
+    for f in sorted(ice_fields, key=lambda f: f["name"]):
+        tkey = _BOUNDABLE_ICE.get(f["type"])
+        if tkey is None or f["name"] not in bounds:
+            continue
+        lo, hi = bounds[f["name"]]
+        lb = single_value_serialize(tkey, lo)
+        ub = single_value_serialize(tkey, hi)
         if lb is None or ub is None:
             continue
-        lower.append({"key": fid, "value": lb})
-        upper.append({"key": fid, "value": ub})
+        lower.append({"key": f["id"], "value": lb})
+        upper.append({"key": f["id"], "value": ub})
 
     # geo bounds (v3): lower/upper are x/y-min/max WKB POINTs computed
     # from the DATA (parquet byte-order stats on WKB blobs are
@@ -2821,117 +2743,75 @@ class IcebergTableWriter:
     def _write_data_files(
         self, df: DataFrame, pre_arranged: bool = False
     ) -> list[tuple[str, int, int, dict]]:
-        """df → parquet files under data/;
-        [(abs_path, rows, bytes, partition_values)]. A file whose footer
-        reports 0 rows is dropped: an empty df writes nothing, so callers
-        read emptiness from the result.
+        """df → parquet files under data/ through the file layer's
+        staging walk (layout.stage); [(abs_path, rows, bytes,
+        partition_values)]. A file whose footer reports 0 rows is
+        dropped: an empty df writes nothing, so callers read emptiness
+        from the result.
 
         Partitioned writes compute each partition field's TRANSFORMED
         value into a throwaway `__ice_pv_*` column for Spark's
         `partitionBy` (which drops its partitioning columns from the
-        files — Iceberg requires the SOURCE columns kept), then parse
-        the hive dir names back into typed partition values (typed by
-        the transform's RESULT type). One distributed write either way —
-        no per-partition driver loop.
+        files — Iceberg requires the SOURCE columns kept); the walk
+        decodes the hive dir names ("" and null kept apart) and they are
+        typed here by the transform's RESULT type. One distributed write
+        either way — no per-partition driver loop.
         """
-        import shutil
-        import uuid
-        from urllib.parse import unquote
-
         from deimos_spark.operators.iceberg_transforms import (
             result_spark_type,
             transform_column,
         )
 
-        uid = uuid.uuid4().hex[:12]
-        staging = os.path.join(self.path, f".staging_{uid}")
         src_types = {
             f.name: f.dataType.simpleString() for f in df.schema.fields
         }
         if self.sort_by and not pre_arranged:
-            from pyspark.sql import functions as F
-
             missing = [c for c in self.sort_by if c not in src_types]
             if missing:
                 raise IcebergProtocolError(
                     f"sort_by columns {missing} not in batch schema"
                 )
-            cols = [F.col(c).asc_nulls_first() for c in self.sort_by]
-            # range shuffle + in-partition sort = disjoint per-file
-            # ranges; the shuffle IS the point (clustering), opted
-            # into by declaring sort_by
-            ranged = (
-                df.repartitionByRange(self.sort_partitions, *cols)
-                if self.sort_partitions
-                else df.repartitionByRange(*cols)
-            )
-            df = ranged.sortWithinPartitions(*cols)
-        if self.partition_fields:
-            tmp_cols = [f"__ice_pv_{pf.name}" for pf in self.partition_fields]
-            staged = df
-            for pf, tc in zip(self.partition_fields, tmp_cols):
-                staged = staged.withColumn(
-                    tc, transform_column(pf, src_types[pf.source])
-                )
-            staged.write.partitionBy(*tmp_cols).mode("overwrite").parquet(
-                staging
-            )
-        else:
-            df.write.mode("overwrite").parquet(staging)
-
+            # the range shuffle IS the point (clustering), opted into by
+            # declaring sort_by
+            df = arrange(df, self.sort_by, self.sort_partitions)
+        tmp_cols = [f"__ice_pv_{pf.name}" for pf in self.partition_fields]
+        for pf, tc in zip(self.partition_fields, tmp_cols):
+            df = df.withColumn(tc, transform_column(pf, src_types[pf.source]))
         res_types = {
-            pf.name: result_spark_type(pf, src_types[pf.source])
-            for pf in self.partition_fields
+            tc: result_spark_type(pf, src_types[pf.source])
+            for pf, tc in zip(self.partition_fields, tmp_cols)
         }
 
-        def typed(name: str, raw: str):
-            if raw == "__HIVE_DEFAULT_PARTITION__":
-                return None
-            raw = unquote(raw)
-            if res_types.get(name, "string") in ("int", "bigint"):
-                return int(raw)
-            return raw
+        def typed(tc: str, v):
+            if v is not None and res_types[tc] in ("int", "bigint"):
+                return int(v)
+            return v
 
-        out = []
-        i = 0
-        for dirpath, _, names in sorted(os.walk(staging)):
-            rel_dir = os.path.relpath(dirpath, staging)
-            pvals: dict = {}
-            if rel_dir != ".":
-                for comp in rel_dir.split(os.sep):
-                    k, _, v = comp.partition("=")
-                    name = k[len("__ice_pv_"):]
-                    pvals[name] = typed(name, v)
-            for f in sorted(names):
-                if not f.endswith(".parquet"):
-                    continue
-                src = os.path.join(dirpath, f)
-                rows = _parquet_rows(src)
-                if rows == 0:
-                    continue  # left in staging, removed below
-                subdir = (
-                    os.path.join(
-                        self.data_dir,
-                        *[
-                            "{}={}".format(
-                                pf.name,
-                                "__HIVE_DEFAULT_PARTITION__"
-                                if pvals[pf.name] is None
-                                else pvals[pf.name],
-                            )
-                            for pf in self.partition_fields
-                        ],
+        data_rel = os.path.relpath(self.data_dir, self.path)
+
+        def land(_, values: dict) -> str:
+            return os.path.join(
+                data_rel,
+                *[
+                    "{}={}".format(
+                        pf.name, HIVE_NULL if values[tc] is None else values[tc]
                     )
-                    if self.partition_fields
-                    else self.data_dir
-                )
-                os.makedirs(subdir, exist_ok=True)
-                dest = os.path.join(subdir, f"{uid}-{i:05d}.parquet")
-                os.rename(src, dest)
-                out.append((dest, rows, os.path.getsize(dest), pvals))
-                i += 1
-        shutil.rmtree(staging, ignore_errors=True)
-        return out
+                    for pf, tc in zip(self.partition_fields, tmp_cols)
+                ],
+            )
+
+        return [
+            (
+                os.path.join(self.path, rel),
+                foot.rows,
+                os.path.getsize(os.path.join(self.path, rel)),
+                {
+                    pf.name: typed(tc, values[tc])
+                    for pf, tc in zip(self.partition_fields, tmp_cols)
+                },
+            )
+            for rel, values, foot in stage(df, self.path, tmp_cols, land)
+        ]
 
     def _commit(self, version: int, md: dict) -> None:
         import uuid
@@ -2987,13 +2867,13 @@ class IcebergTableWriter:
             try:
                 new_md, meta = self._snapshot(md, **commit)
             except IcebergProtocolError:
-                _unlink_quietly(written)  # refused: no commit names them
+                unlink_quietly(written)  # refused: no commit names them
                 raise
             try:
                 self._commit(mv + 1, new_md)
                 return
             except IcebergCommitConflict:
-                _unlink_quietly(written + meta)
+                unlink_quietly(written + meta)
         raise IcebergCommitConflict(
             f"could not commit after {self.max_commit_retries} tries"
         )
@@ -3646,7 +3526,7 @@ class IcebergTableWriter:
                 continue
             if not n.endswith(".parquet"):
                 continue
-            files.append((full, _parquet_rows(full), os.path.getsize(full), {}))
+            files.append((full, footer(full).rows, os.path.getsize(full), {}))
         if not files:
             raise IcebergProtocolError(
                 f"add_files: no parquet files under {src_dir}"
@@ -4073,24 +3953,22 @@ class IcebergKeyedTable:
         # time (DV mode) or nothing at all (position mode writes the
         # delete files distributedly) — never the full O(matched rows)
         # pair list a 50M-row delete batch would otherwise materialize.
-        # v3 `unknown` (void) fields are dropped from the read schema:
-        # the parquet reader rejects them and they are never keys.
+        # A key an earlier merge already deleted must be no hit, so a
+        # re-delete writes nothing: position mode probes the pinned
+        # reader's delete-applied view; dv mode probes the raw files and
+        # drops the old DV's positions on the driver, in the fold below,
+        # which reads each hit file's old DV anyway (no executor-side
+        # DV expansion).
         rec_by_fp = {"file:" + local: rec for rec, local, _, _, _ in data}
-        key_schema = T.StructType(
-            [
-                f
-                for f in reader.schema().fields
-                if not isinstance(f.dataType, T.NullType)
-            ]
-        )
+        if self.delete_mode == "position":
+            probe = reader.read(_keep_meta=True)
+            fp, pos = F.col("__ice_fp"), F.col("__ice_pos")
+        else:
+            probe = reader._scan_parquet([local for _, local, _, _, _ in data])
+            fp = F.col("_metadata.file_path")
+            pos = F.col("_metadata.row_index")
         hits = (
-            self.spark.read.schema(key_schema)
-            .parquet(*[local for _, local, _, _, _ in data])
-            .select(
-                *self.key_cols,
-                F.col("_metadata.file_path").alias("__fp"),
-                F.col("_metadata.row_index").alias("__pos"),
-            )
+            probe.select(*self.key_cols, fp.alias("__fp"), pos.alias("__pos"))
             .join(affected, self.key_cols, "left_semi")
             .groupBy("__fp")
             .agg(
@@ -4136,7 +4014,10 @@ class IcebergKeyedTable:
                 continue
             idx = np.asarray(r["__poss"], dtype=np.int64)
             if rec in old_dvs:
-                idx = np.union1d(idx, read_dv_blob(*old_dvs[rec]))
+                old = read_dv_blob(*old_dvs[rec])
+                if np.isin(idx, old).all():
+                    continue  # every hit is already deleted
+                idx = np.union1d(idx, old)
             framed[rec] = _frame_positions(idx)
         if not framed:
             return {}, []

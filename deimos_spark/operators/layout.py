@@ -1,7 +1,20 @@
-"""Physical data layout: clustered writes for data skipping, small-file
-compaction — the table-maintenance half of a 100 TB lakehouse.
+"""Physical data layout: the one parquet file layer the Delta and Iceberg
+table formats write and read through, plus clustered writes for data
+skipping and small-file compaction.
 
-Why this matters at scale:
+The file layer (both `delta_interop` and `iceberg_interop` call it; each
+keeps only what its format differs in — Delta's JSON stats and log paths,
+Iceberg's field-id bounds, manifests and partition typing):
+- `arrange`: the range arrangement a sorted or clustered write uses;
+- `stage`: the staging walk that writes a DataFrame, decodes each hive
+  partition segment (`hive_value`), moves each file into the table and
+  drops zero-row files;
+- `footer`: a file's row count, per-column bounds and null counts from
+  the parquet footer alone;
+- `dv_rows`/`drop_dv_rows`: deletion vectors expanded to (file, row
+  index) rows on executors and anti-joined from a scan.
+
+Why layout matters at scale:
 - Parquet stores per-row-group min/max statistics. A table RANGE-clustered
   on its hot filter columns turns those stats into an index: a reader's
   predicate eliminates whole files/row-groups (data skipping) instead of
@@ -18,9 +31,269 @@ from __future__ import annotations
 import math
 import os
 from collections.abc import Sequence
+from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+
+# Spark's hive directory value for null (and, left alone, for "")
+HIVE_NULL = "__HIVE_DEFAULT_PARTITION__"
+# stands in for "" in staged partition dir names, so "" and null land in
+# different directories; never recorded — a format records the real ""
+_EMPTY_SENTINEL = "__DEIMOS_EMPTY_STRING__"
+# deletion vectors whose summed cardinality stays at or below this many
+# rows expand into a broadcast relation; above it, a shuffle anti-join
+DV_BROADCAST_ROWS = 4_000_000
+
+
+def arrange(
+    df: DataFrame, cols: Sequence[str], n_files: int | None = None
+) -> DataFrame:
+    """Range-partition on `cols` (into `n_files` partitions when given)
+    and sort within each partition: every output file covers a disjoint
+    value range, with tight per-row-group bounds inside it. Ascending
+    order puts nulls first."""
+    ranged = (
+        df.repartitionByRange(n_files, *cols)
+        if n_files
+        else df.repartitionByRange(*cols)
+    )
+    return ranged.sortWithinPartitions(*cols)
+
+
+def unlink_quietly(paths) -> None:
+    """Best-effort unlink of files no commit references."""
+    for p in paths:
+        try:
+            os.unlink(p)
+        except OSError:
+            pass
+
+
+def _unescape(s: str) -> str:
+    """Hive percent-escaping inverse for partition dir segments."""
+    if "%" not in s:
+        return s
+    out, i, n = [], 0, len(s)
+    while i < n:
+        if s[i] == "%" and i + 3 <= n:
+            try:
+                out.append(chr(int(s[i + 1 : i + 3], 16)))
+                i += 3
+                continue
+            except ValueError:
+                pass
+        out.append(s[i])
+        i += 1
+    return "".join(out)
+
+
+def hive_value(raw: str) -> str | None:
+    """One hive partition dir value decoded: the null directory is None,
+    percent-escapes are undone, and the staging sentinel is ""."""
+    if raw == HIVE_NULL:
+        return None
+    v = _unescape(raw)
+    return "" if v == _EMPTY_SENTINEL else v
+
+
+@dataclass(frozen=True)
+class Footer:
+    """What a parquet footer says about its file without reading a data
+    page: the row count, (min, max) per boundable column and null counts.
+    `bounds` keeps only top-level columns whose every row group carries
+    accepted bounds: integer, boolean or string values, strings of 32
+    characters or fewer. Float and double columns never get bounds —
+    writers exclude NaN from min/max, so a footer cannot bound a column
+    holding NaN — and a rejected or missing bound in any row group drops
+    the column, since partial bounds would let a reader skip a file that
+    matches. `nulls` keeps only columns whose every row group reports a
+    null count."""
+
+    rows: int
+    bounds: dict = field(default_factory=dict)
+    nulls: dict = field(default_factory=dict)
+
+
+def _boundable(lo, hi) -> bool:
+    return isinstance(lo, (int, str, bool)) and not (
+        isinstance(lo, str) and (len(lo) > 32 or len(str(hi)) > 32)
+    )
+
+
+def footer(path: str) -> Footer:
+    """The footer of the parquet file at `path` (see Footer). pyarrow
+    predates the parquet VARIANT logical type and refuses such footers
+    wholesale; the stdlib thrift-compact parser still recovers the row
+    count, and the file gets no bounds. Raises when neither can parse
+    the file."""
+    try:
+        import pyarrow.parquet as pq
+
+        md = pq.read_metadata(path)
+    except Exception:
+        from deimos_spark.schemas.thriftcompact import read_footer
+
+        return Footer(read_footer(path)[0])
+    bounds: dict = {}
+    nulls: dict = {}
+    unbounded: set = set()
+    null_gaps: set = set()
+    for rg in range(md.num_row_groups):
+        g = md.row_group(rg)
+        for ci in range(g.num_columns):
+            col = g.column(ci)
+            name = col.path_in_schema
+            if "." in name:
+                continue  # nested: out of scope
+            st = col.statistics
+            # null counts accumulate before any bound gating: an all-null
+            # row group has no bounds but does have nulls
+            if st is not None and st.null_count is not None:
+                nulls[name] = nulls.get(name, 0) + st.null_count
+            else:
+                null_gaps.add(name)
+            if name in unbounded:
+                continue
+            if st is None or not st.has_min_max or not _boundable(
+                st.min, st.max
+            ):
+                unbounded.add(name)
+                bounds.pop(name, None)
+                continue
+            lo, hi = st.min, st.max
+            if name in bounds:
+                lo, hi = min(bounds[name][0], lo), max(bounds[name][1], hi)
+            bounds[name] = (lo, hi)
+    return Footer(
+        md.num_rows,
+        bounds,
+        {k: v for k, v in nulls.items() if k not in null_gaps},
+    )
+
+
+def stage(
+    df: DataFrame,
+    root: str,
+    partition_cols: Sequence[str],
+    land,
+    prefix: str = "",
+    keep_empty: bool = False,
+) -> list[tuple[str, dict, Footer | None]]:
+    """The one staging walk of the table formats' writers. Writes `df`
+    hive-partitioned on `partition_cols` into a staging directory under
+    `root`, walks it, decodes each file's directory segments into
+    {column: value} (see hive_value) and moves the file to
+    `root/land(staged_dir, values)/{prefix}{uid}-{n}.parquet`, where
+    `staged_dir` is the file's hive directory relative to the staging
+    root ("" when unpartitioned). Returns [(path relative to root,
+    values, footer)] in directory order. A file whose footer reports
+    0 rows is deleted, not moved, unless `keep_empty`, which keeps every
+    file and reads no footer (the footer is then None).
+
+    Spark writes both null and "" to the `__HIVE_DEFAULT_PARTITION__`
+    directory; string partition columns stage "" as a sentinel, so the
+    two decode apart."""
+    import shutil
+    import uuid
+
+    for f in df.schema.fields:
+        if f.name in partition_cols and isinstance(f.dataType, T.StringType):
+            df = df.withColumn(
+                f.name,
+                F.when(F.col(f.name) == "", F.lit(_EMPTY_SENTINEL)).otherwise(
+                    F.col(f.name)
+                ),
+            )
+    uid = uuid.uuid4().hex[:12]
+    staging = os.path.join(root, f".staging_{uid}")
+    out = df.write.mode("overwrite")
+    if partition_cols:
+        out = out.partitionBy(*partition_cols)
+    out.parquet(staging)
+    staged: list[tuple[str, dict, Footer | None]] = []
+    for dirpath, _, names in sorted(os.walk(staging)):
+        reldir = os.path.relpath(dirpath, staging)
+        reldir = "" if reldir == os.curdir else reldir
+        values = {}
+        for seg in reldir.split(os.sep) if reldir else ():
+            k, _, v = seg.partition("=")
+            values[k] = hive_value(v)
+        for name in sorted(names):
+            if not name.endswith(".parquet"):
+                continue
+            src = os.path.join(dirpath, name)
+            foot = None if keep_empty else footer(src)
+            if foot is not None and foot.rows == 0:
+                continue  # left in staging, removed below
+            dest = land(reldir, values)
+            os.makedirs(os.path.join(root, dest), exist_ok=True)
+            rel = os.path.join(
+                dest, f"{prefix}{uid}-{len(staged):05d}.parquet"
+            )
+            os.rename(src, os.path.join(root, rel))
+            staged.append((rel, values, foot))
+    shutil.rmtree(staging, ignore_errors=True)
+    return staged
+
+
+def dv_rows(
+    spark: SparkSession,
+    descs: Sequence[tuple[str, object, int]],
+    decode,
+    fp: str,
+    pos: str,
+) -> DataFrame:
+    """Deletion vectors → the (`fp`, `pos`) rows they delete. `descs` is
+    [(file key, JSON-able descriptor, cardinality)], one per file with a
+    DV; `decode(descriptor)` returns the deleted row indexes and runs on
+    executors, so only the descriptors (a few hundred bytes each) leave
+    the driver, never the positions. The relation is broadcast-hinted
+    when the summed cardinality is at most DV_BROADCAST_ROWS; a heavily
+    deleted table stays a shuffle join that concentrates the expansion
+    nowhere."""
+    import json
+
+    desc = spark.createDataFrame(
+        [(f, json.dumps(d)) for f, d, _ in descs],
+        f"{fp} string, __dv_desc string",
+    )
+    if len(descs) > 1:
+        desc = desc.repartition(min(len(descs), 64))
+
+    def _expand(batches):
+        import json as _json
+
+        import numpy as _np
+        import pandas as _pd
+
+        for pdf in batches:
+            for f, d in zip(pdf[fp], pdf["__dv_desc"]):
+                idx = _np.asarray(decode(_json.loads(d)), dtype="int64")
+                yield _pd.DataFrame({fp: f, pos: idx})
+
+    rows = desc.mapInPandas(_expand, f"{fp} string, {pos} long")
+    if sum(int(c or 0) for _, _, c in descs) <= DV_BROADCAST_ROWS:
+        rows = F.broadcast(rows)
+    return rows
+
+
+def drop_dv_rows(
+    scan: DataFrame,
+    fp: str,
+    pos: str,
+    descs: Sequence[tuple[str, object, int]],
+    decode,
+) -> DataFrame:
+    """`scan` without the rows its deletion vectors delete: one anti-join
+    on (`fp`, `pos`), the columns where `scan` carries each row's
+    `_metadata.file_path` key and `_metadata.row_index` (see dv_rows)."""
+    return scan.join(
+        dv_rows(scan.sparkSession, descs, decode, fp, pos),
+        [fp, pos],
+        "left_anti",
+    )
 
 
 def write_clustered(
@@ -53,12 +326,7 @@ def write_clustered(
     if curve != "linear":
         out = cluster_arrange(df, cluster_cols, n_files=n, curve=curve)
     else:
-        out = (
-            df.repartitionByRange(n, *cluster_cols)
-            if n is not None
-            else df.repartitionByRange(*cluster_cols)
-        )
-        out = out.sortWithinPartitions(*cluster_cols)
+        out = arrange(df, cluster_cols, n)
     writer = out.write.mode(mode)
     if partition_by:
         writer = writer.partitionBy(*partition_by)
@@ -239,12 +507,7 @@ def cluster_arrange(
     OPTIMIZE ZORDER) can reuse the exact arrangement their add-action
     stats are then computed over."""
     keyed, key = cluster_key(df, cols, bits, curve)
-    ranged = (
-        keyed.repartitionByRange(n_files, key)
-        if n_files
-        else keyed.repartitionByRange(key)
-    )
-    return ranged.sortWithinPartitions(key).drop(key)
+    return arrange(keyed, [key], n_files).drop(key)
 
 
 def cluster_arrange_or_linear(
@@ -264,12 +527,7 @@ def cluster_arrange_or_linear(
     try:
         return cluster_arrange(df, cols, n_files, bits, curve)
     except ValueError:
-        ranged = (
-            df.repartitionByRange(n_files, *cols)
-            if n_files
-            else df.repartitionByRange(*cols)
-        )
-        return ranged.sortWithinPartitions(*cols)
+        return arrange(df, cols, n_files)
 
 
 def write_zordered(
@@ -318,9 +576,7 @@ def compact_files(
             df, cluster_cols, n_files=n, curve=curve
         )
     elif cluster_cols:
-        out = df.repartitionByRange(n, *cluster_cols).sortWithinPartitions(
-            *cluster_cols
-        )
+        out = arrange(df, cluster_cols, n)
     else:
         out = df.repartition(n)
     out.write.mode("overwrite").parquet(tmp)

@@ -1266,6 +1266,24 @@ def test_file_stats_reject_poisons_whole_column(tmp_path):
     # g: a row group without null_count → column omitted from nullCount
     assert "g" not in nulls
 
+    # Iceberg's footer bounds follow the same rules on the same file:
+    # i keeps its true bounds; s, f, g (and all-null n) get none
+    from deimos_spark.operators.iceberg_interop import _file_column_bounds
+    from deimos_spark.operators.iceberg_transforms import (
+        single_value_serialize,
+    )
+
+    ice_fields = [
+        {"id": 1, "name": "i", "type": "long"},
+        {"id": 2, "name": "s", "type": "string"},
+        {"id": 3, "name": "f", "type": "double"},
+        {"id": 4, "name": "n", "type": "long"},
+        {"id": 5, "name": "g", "type": "long"},
+    ]
+    lower, upper = _file_column_bounds(p, ice_fields)
+    assert lower == [{"key": 1, "value": single_value_serialize("long", 1)}]
+    assert upper == [{"key": 1, "value": single_value_serialize("long", 99)}]
+
 
 def test_read_changes_insert_commits(spark, tmp_path):
     """Batch change feed (the delta-spark table_changes convention, both

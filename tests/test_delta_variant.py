@@ -72,6 +72,28 @@ def test_variant_roundtrip_and_birth_protocol(spark, tmp_path):
     ]
 
 
+def test_variant_adds_carry_num_records_and_empty_append_adds_nothing(
+    spark, tmp_path
+):
+    """pyarrow refuses variant footers; the row count still comes from
+    the footer, so a variant add carries numRecords and a zero-row file
+    is dropped like any other — an empty append commits no add."""
+    path = str(tmp_path / "t")
+    w = DeltaTableWriter(spark, path)
+    w.append(_variant_df(spark).limit(1).coalesce(1))
+    w.append(_variant_df(spark).limit(0))
+
+    def adds(version):
+        log = os.path.join(path, "_delta_log", f"{version:020d}.json")
+        with open(log) as fh:
+            actions = [json.loads(line) for line in fh if line.strip()]
+        return [a["add"] for a in actions if "add" in a]
+
+    assert [json.loads(a["stats"])["numRecords"] for a in adds(0)] == [1]
+    assert adds(1) == []
+    assert DeltaTableReader(spark, path).read().count() == 1
+
+
 def test_second_append_and_optimize_keep_variant(spark, tmp_path):
     path = str(tmp_path / "t")
     w = DeltaTableWriter(spark, path)

@@ -669,6 +669,32 @@ def test_partition_filter_prunes_by_manifest(spark, tmp_path):
     assert r.read(partition_filter={"p": "zzz"}).count() == 0
 
 
+def test_writer_empty_string_partition_value_roundtrips(spark, tmp_path):
+    """Identity partition tuples keep "" and null apart, as Delta's
+    partitionValues do, though Spark's hive dir layout folds both into
+    __HIVE_DEFAULT_PARTITION__; manifest pruning tells them apart."""
+    from deimos_spark.operators.iceberg_interop import IcebergTableWriter
+
+    t = str(tmp_path / "icee")
+    w = IcebergTableWriter(spark, t, partition_by=("c",))
+    w.append(
+        spark.createDataFrame(
+            [("", 1), (None, 2), ("a", 3)], "c string, id long"
+        )
+    )
+    r = IcebergTableReader(spark, t)
+    assert {x.partition["c"] for x in r.files_df().collect()} == {
+        "", None, "a",
+    }
+    assert [x.id for x in r.read(partition_filter={"c": ""}).collect()] == [1]
+    assert [
+        x.id for x in r.read(partition_filter={"c": None}).collect()
+    ] == [2]
+    assert {(x.c, x.id) for x in r.read().collect()} == {
+        ("", 1), (None, 2), ("a", 3),
+    }
+
+
 # --------------------------- round-6: non-identity partition transforms
 
 

@@ -158,6 +158,17 @@ def test_one_empty_batch_rule(spark, tmp_path, delete_mode):
         t.delete(nothing)
     assert len(_metadata(path)["snapshots"]) == n
     assert _rows(t.read()) == [(1, "a"), (2, "b")]
+    if delete_mode != "equality":
+        # the probe reads delete-applied rows: re-deleting a deleted
+        # key hits nothing and adds no metadata file
+        one = spark.createDataFrame([(1,)], "id long")
+        t.delete(one)
+        meta = os.listdir(os.path.join(path, "metadata"))
+        n_meta = sum(f.endswith(".metadata.json") for f in meta)
+        t.delete(one)
+        meta = os.listdir(os.path.join(path, "metadata"))
+        assert sum(f.endswith(".metadata.json") for f in meta) == n_meta
+        assert _rows(t.read()) == [(2, "b")]
     # no committed data or delete file has 0 rows
     counts = [e["data_file"]["record_count"] for _, e in _entries(path)]
     assert counts and 0 not in counts
